@@ -169,8 +169,9 @@ def _bucketed_fill(u: DataFrame, on: str, fill_cols, backward: bool,
             {cc: F.last(cc, ignorenulls=True).over(w) for cc in fill_cols})
 
     num_buckets = len(bounds) + 1
-    # SQL-snippet form -> flat codegen'd cast-sum, not the interpreted
-    # array-filter fold (stats_bounds.bucket_index: ~3.6x per row)
+    # SQL-snippet form -> codegen'd binary-search IF tree, not the
+    # interpreted array-filter fold (stats_bounds.bucket_index: ~6.7x
+    # per row)
     b = bucket_index(monotonic_view_sql(on, on_dt), bounds)
     u = u.withColumn(_BKT, F.when(d.isNotNull(), b))  # null time -> null bucket
 

@@ -107,9 +107,9 @@ def minhash_signature(shingles: Column, num_perm: int = 64) -> Column:
     FAMILY NOTE: this column-level form uses the ``xxhash64(j, h)``
     permutation family over shingle-STRING base hashes; the
     DataFrame-level ``minhash_signatures`` differs on BOTH axes (its
-    base hashes come from token-hash windows, and its default
-    permutation family is the multiply-add Arrow one) — signatures
-    from the two are NOT comparable under ANY ``impl=``.  To compare
+    base hashes come from token-hash windows, and its permutation
+    family is the multiply-add Arrow one) — signatures from the two are
+    NOT comparable.  To compare
     against persisted signatures produced by this function, recompute
     with this function over the same shingle column; for the pipeline
     paths, persist ``minhash_signatures`` output and stay within its
@@ -154,33 +154,27 @@ def _minhash_arrow_udf(num_perm: int, seed: int = 42):
 
 
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
-                       num_perm: int = 64, shingle_k: int = 3,
-                       impl: str = "arrow") -> DataFrame:
+                       num_perm: int = 64, shingle_k: int = 3) -> DataFrame:
     """(id, signature array) with NO shuffle and no per-element
     recomputation: tokens, shingles, and the base string-hash array are
     each materialized in their own projection stage (multi-use non-cheap
     aliases, which CollapseProject declines to inline), then the
-    ``num_perm`` permutations are computed from the 8-byte base values —
-    by default in ONE Arrow-vectorized pass (``impl="arrow"``, ~4x the
-    throughput of the ``impl="sql"`` per-permutation rehash loop, still
-    shuffle-free: the plan is scan -> project -> ArrowEvalPython).
+    ``num_perm`` permutations are computed from the 8-byte base values
+    in ONE Arrow-vectorized pass (~4x the throughput of a per-permutation
+    SQL rehash loop, still shuffle-free: the plan is scan -> project ->
+    ArrowEvalPython).
 
-    FAMILY NOTE: ``impl="arrow"`` and ``impl="sql"`` use different
-    permutation families (seeded multiply-add vs ``xxhash64(j, h)``) —
-    signatures are NOT comparable across impls or with signatures
-    persisted before the arrow default.  The shingle IDENTITY hash is
+    FAMILY NOTE: the permutations are the seeded multiply-add family of
+    ``_minhash_arrow_udf``, and the shingle IDENTITY hash is
     ``xxhash64`` over the k token hashes (``_staged_shingle_hashes``,
-    no shingle strings built), so signatures also differ from versions
-    that hashed shingle strings — another persistence-compatibility
-    boundary, not a semantic one.  Compare signatures only within one
-    impl+version; LSH semantics (banding guarantees, downstream
-    exact-Jaccard verification) are identical throughout."""
+    no shingle strings built) — signatures persisted by versions that
+    used the ``xxhash64(j, h)`` family or hashed shingle strings are
+    NOT comparable.  That is a persistence-compatibility boundary, not a
+    semantic one: LSH banding guarantees and downstream exact-Jaccard
+    verification are identical."""
     staged = _staged_shingle_hashes(df, text_col, id_col, shingle_k)
-    if impl == "arrow":
-        udf = _minhash_arrow_udf(num_perm)
-        return staged.select("__id", udf(F.col("__h")).alias("__sig"))
-    sig = F.array(*[_perm_min(F.col("__h"), j) for j in range(num_perm)])
-    return staged.select("__id", sig.alias("__sig"))
+    udf = _minhash_arrow_udf(num_perm)
+    return staged.select("__id", udf(F.col("__h")).alias("__sig"))
 
 
 def _shingles_over(toks: Column, k: int) -> Column:
@@ -655,32 +649,16 @@ def _simhash_arrow_udf(n_bits: int):
 
 
 def simhash_signatures(df: DataFrame, text_col: str, id_col: str,
-                       token_hash=None, n_bits: int = 64,
-                       impl: str = "arrow") -> DataFrame:
+                       token_hash=None, n_bits: int = 64) -> DataFrame:
     """DataFrame-level simhash, the pipeline fast path: token hashes are
     staged once as an attribute (JVM-side, any ``token_hash``), then the
-    bit-counter fold runs — by default — as ONE Arrow-vectorized pass
-    (``impl="arrow"``); ``impl="sql"`` keeps the all-JVM scalar
-    ones-count form (``size(filter(...))`` per bit).  Both are
-    shuffle-free and produce identical signatures."""
+    bit-counter fold runs as ONE shuffle-free Arrow-vectorized pass,
+    bit-identical to ``simhash64``."""
     th = token_hash or F.xxhash64
     staged = (df.select(F.col(id_col), tokens(text_col).alias("__toks"))
                 .select(id_col, F.transform("__toks", lambda tk: th(tk)).alias("__h")))
-    if impl == "arrow":
-        udf = _simhash_arrow_udf(n_bits)
-        return staged.select(F.col(id_col), udf(F.col("__h")).alias("simhash"))
-    n = F.size(F.col("__h"))
-
-    def ones(m):
-        return F.size(F.filter("__h", lambda h: h.bitwiseAND(F.lit(m)) != 0))
-
-    masks = _POW2[:n_bits] if n_bits < 64 else _POW2
-    bits = [F.when(2 * ones(m) >= n, F.lit(m).cast("long"))
-             .otherwise(F.lit(0).cast("long")) for m in masks]
-    sh = bits[0]
-    for b in bits[1:]:
-        sh = sh + b  # disjoint masks: sum == bitwise OR
-    return staged.select(F.col(id_col), sh.alias("simhash"))
+    udf = _simhash_arrow_udf(n_bits)
+    return staged.select(F.col(id_col), udf(F.col("__h")).alias("simhash"))
 
 
 def _persisted_ancestor(df: DataFrame):

@@ -279,7 +279,8 @@ def global_running_sum(df: DataFrame, order_cols: Sequence[str],
         return df.withColumn(cum_col, F.sum(value_col).over(w))
     # null first-order values yield bucket 0 (bucket_index's default),
     # matching the nulls-first position of a plain ascending window;
-    # SQL-snippet form -> codegen'd cast-sum (stats_bounds.bucket_index)
+    # SQL-snippet form -> codegen'd binary-search IF tree
+    # (stats_bounds.bucket_index)
     df2 = df.withColumn("__gcs_bkt", bucket_index(d_sql, bounds))
     wb = (Window.partitionBy("__gcs_bkt").orderBy(*order)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))

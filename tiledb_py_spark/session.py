@@ -13,7 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# the cores this process may run on; SPARK_GRAFT_CPUS overrides it for
+# a deployment
+_DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS",
+                           str(len(os.sched_getaffinity(0))))
 
 
 def get_spark(app_name: str = "tiledb_py_spark", cpus: str | None = None) -> SparkSession:

@@ -15,8 +15,11 @@ Two paths:
   stats align with dim ranges — the analog of TileDB's space-tile layout,
   and what makes range predicates prune at 100 TB.
 
-MBR stats are harvested from parquet footers (column chunk statistics) —
-driver-side metadata reads only, no data scan.
+Every writer — both paths above, the ``format("tiledb")`` batch and
+stream sinks, and ``consolidate`` — commits through
+:func:`publish_fragment`: MBR stats harvested from parquet footers
+(driver-side metadata reads only, no data scan), the domain check, and
+one atomic manifest commit.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from ..manifest import (FragmentRecord, Manifest, commit, fragment_path,
+from ..manifest import (FragmentRecord, commit, fragment_path,
                         new_fragment_name, now_ms)
 from ..schema import ArraySchema
 
@@ -151,24 +154,77 @@ def _schema_codec(schema: ArraySchema) -> str:
     return "zstd"
 
 
+def check_write_columns(schema: ArraySchema, have) -> None:
+    """Refuse a write whose columns are not exactly the schema's dims +
+    attrs (any order).  A silently dropped dim/attr commits a fragment
+    that reads back NULL for that column (lost coordinates for dims);
+    silently dropping an extra column's data is the same loss class —
+    the reference requires every attribute in a write and refuses
+    unknown ones."""
+    cols = schema.dim_names + schema.attr_names
+    have = list(have)
+    absent = [c for c in cols if c not in have]
+    if absent:
+        raise ValueError(
+            f"write is missing schema columns {absent}; every dim and "
+            f"attr must be present (have: {have})")
+    unknown = [c for c in have if c not in cols]
+    if unknown:
+        raise ValueError(
+            f"write has columns {unknown} not in the array schema "
+            f"(dims+attrs: {cols}); drop them with .select(...) or "
+            f"evolve the schema first")
+
+
+def publish_fragment(uri: str, schema: ArraySchema, name: str, ts: int,
+                     on_commit=None) -> FragmentRecord:
+    """Publish the parquet directory of fragment ``name`` as ONE manifest
+    record — the single commit point of every writer.  Footer stats give
+    the cell count and MBR (no data scan); an out-of-domain write is
+    refused and its directory removed; the record is stamped with the
+    schema version the writer laid its files out against and appended
+    in one atomic ``manifest.commit``.
+
+    The stamp is the version ``schema`` was READ at (``read_manifest``
+    tags it): an evolution committing between plan and this commit must
+    not mark the fragment post-evolution — its files have the OLD
+    layout, and a too-new stamp would disable evolved-fill / drop-re-add
+    masking for them.  Hand-built schemas (array creation) carry no tag;
+    the manifest's current version is correct there.
+
+    ``on_commit(manifest, rec)`` is an extra mutation applied in the SAME
+    commit — ``consolidate`` supersedes the folded fragments atomically
+    with the new record (two commits would let a crash or a concurrent
+    reader see the folded fragments AND their product)."""
+    frag_dir = fragment_path(uri, name)
+    cell_num, mbr = stats_from_parquet_dir(frag_dir, schema.dim_names)
+    _validate_domain(schema, mbr, frag_dir)
+    rec = FragmentRecord(name=name, timestamp_range=(ts, ts),
+                         cell_num=cell_num, nonempty_domain=mbr)
+    plan_version = getattr(schema, "_read_version", None)
+
+    def _append(m):
+        rec.schema_version = (plan_version if plan_version is not None
+                              else m.schema_version)
+        m.fragments.append(rec)
+        if on_commit is not None:
+            on_commit(m, rec)
+
+    commit(uri, _append)
+    return rec
+
+
 def write_fragment_pandas(uri: str, schema: ArraySchema, pdf,
                           timestamp: Optional[int] = None,
                           row_group_size: Optional[int] = None) -> FragmentRecord:
     """Driver-side pyarrow write of one fragment from a pandas DataFrame
     whose columns are dims + attrs (stored layout)."""
+    check_write_columns(schema, pdf.columns)
     ts = timestamp if timestamp is not None else now_ms()
     name = new_fragment_name(ts)
     frag_dir = fragment_path(uri, name)
     os.makedirs(frag_dir, exist_ok=True)
     cols = schema.dim_names + schema.attr_names
-    absent = [c for c in cols if c not in pdf.columns]
-    if absent:
-        # a silently dropped dim/attr would commit a fragment that
-        # reads back NULL for that column (lost coordinates for dims)
-        # — the reference requires every attribute in a write
-        raise ValueError(
-            f"write is missing schema columns {absent}; every dim and "
-            f"attr must be present (have: {list(pdf.columns)})")
     if list(pdf.columns) != cols:
         # column reselect copies EVERY block (43s measured on a
         # 100M-cell dense grid) — skip it when already in stored order
@@ -192,49 +248,25 @@ def write_fragment_pandas(uri: str, schema: ArraySchema, pdf,
         # Spark's vectorized reader rejects TIMESTAMP(NANOS); store micros
         coerce_timestamps="us", allow_truncated_timestamps=True,
     )
-    cell_num, mbr = stats_from_parquet_dir(frag_dir, schema.dim_names)
-    _validate_domain(schema, mbr, frag_dir)
-    rec = FragmentRecord(name=name, timestamp_range=(ts, ts), cell_num=cell_num,
-                         nonempty_domain=mbr)
-
-    def _append(m):
-        # stamp the version of the SCHEMA THE WRITER USED (tagged by
-        # read_manifest at the caller's plan-time read): an evolution
-        # committing between plan and this commit must not mark the
-        # fragment post-evolution — its files have the OLD layout, and
-        # a too-new stamp would disable evolved-fill / drop-re-add
-        # masking for them.  Hand-built schemas (array creation) carry
-        # no tag; the manifest's current version is correct there.
-        pv = getattr(schema, "_read_version", None)
-        rec.schema_version = pv if pv is not None else m.schema_version
-        m.fragments.append(rec)
-
-    commit(uri, _append)
-    return rec
+    return publish_fragment(uri, schema, name, ts)
 
 
 def write_fragment_spark(uri: str, schema: ArraySchema, df,
                          timestamp: Optional[int] = None,
                          sort_within: bool = True,
-                         on_commit=None,
-                         name_tag: str = "") -> FragmentRecord:
+                         on_commit=None) -> FragmentRecord:
     """Cluster-scale fragment write from a Spark DataFrame.
 
     ``repartitionByRange`` on the dim columns + ``sortWithinPartitions``
     gives globally range-clustered parquet files whose footer stats make
     both Spark row-group pruning and our manifest MBR pruning exact —
     the 'global order write' of the reference (``dense_array.py:655-663``)
-    expressed as a Spark shuffle."""
+    expressed as a Spark shuffle.  ``on_commit``: see
+    :func:`publish_fragment`."""
+    check_write_columns(schema, df.columns)
     ts = timestamp if timestamp is not None else now_ms()
-    name = new_fragment_name(ts, tag=name_tag)
-    frag_dir = fragment_path(uri, name)
-    cols = schema.dim_names + schema.attr_names
-    absent = [c for c in cols if c not in df.columns]
-    if absent:
-        raise ValueError(
-            f"write is missing schema columns {absent}; every dim and "
-            f"attr must be present (have: {df.columns})")
-    df = df.select(*cols)
+    name = new_fragment_name(ts)
+    df = df.select(*(schema.dim_names + schema.attr_names))
     if sort_within and schema.sparse and schema.dim_names:
         n = max(df.sparkSession.sparkContext.defaultParallelism, 1)
         if schema.cell_order == "hilbert":
@@ -261,23 +293,6 @@ def write_fragment_spark(uri: str, schema: ArraySchema, df,
         else:
             df = df.repartitionByRange(n, *schema.dim_names) \
                    .sortWithinPartitions(*schema.dim_names)
-    df.write.mode("overwrite").parquet(frag_dir)
-    cell_num, mbr = stats_from_parquet_dir(frag_dir, schema.dim_names)
-    _validate_domain(schema, mbr, frag_dir)
-    rec = FragmentRecord(name=name, timestamp_range=(ts, ts), cell_num=cell_num,
-                         nonempty_domain=mbr)
-
-    def _append(m):
-        # plan-time stamp — see write_fragment_pandas
-        pv = getattr(schema, "_read_version", None)
-        rec.schema_version = pv if pv is not None else m.schema_version
-        m.fragments.append(rec)
-        if on_commit is not None:
-            # extra manifest mutation in the SAME commit — callers like
-            # consolidate() supersede the folded fragments atomically
-            # with the new record (two commits would let a crash or a
-            # concurrent reader see folded fragments AND their product)
-            on_commit(m, rec)
-
-    commit(uri, _append)
-    return rec
+    (df.write.mode("overwrite").option("compression", _schema_codec(schema))
+       .parquet(fragment_path(uri, name)))
+    return publish_fragment(uri, schema, name, ts, on_commit)

@@ -33,10 +33,16 @@ Read path:
   a giant component regains parallelism and bounded memory instead of
   serializing into one task.
 
-Write path: each task streams its Arrow batches into one parquet file of
-a staged fragment; ``commit()`` harvests footer stats and publishes one
-FragmentRecord in the manifest — an atomic multi-task commit with the
-same semantics as the engine's ``write_fragment_spark``.
+Write path (``format("tiledb")`` batch and stream sinks): at plan time
+the driver reads the manifest once, refuses missing or unknown columns
+(``fragment_writer.check_write_columns``) and resolves the stored Arrow
+layout and parquet codec; each task writes its Arrow batches, conformed
+to that layout, as one parquet piece; the driver ``commit`` keeps only
+the pieces the tasks reported and publishes them as ONE fragment
+through ``fragment_writer.publish_fragment`` — the commit point every
+engine writer shares.  The stream sink stages pieces per micro-batch
+and tags the fragment name with the batch id, so a replayed batch
+publishes nothing.
 
 NOTE: the engine's primary scan path (``Array.dataframe()``) reads the
 pruned parquet files with Spark's native vectorized reader — faster than
@@ -92,7 +98,7 @@ class _Split(InputPartition):
     # schema-evolution support: the declared arrow schema (pa.Schema,
     # picklable) + per-attr fill values — fragments written before an
     # attribute existed lack its column; the task adds it back as
-    # fill/null (the native path's _fill_evolved, array.py:225-241)
+    # fill/null (the native path's Array._fill_evolved)
     arrow_schema: object = None
     fills: tuple = ()
     # attr names this fragment must NOT read from its files: a dropped-
@@ -160,25 +166,14 @@ def _arrow_layout(stored_schema):
     return to_arrow_schema(stored_schema.spark_schema())
 
 
-def _stored_arrow_schema(uri):
-    """`_arrow_layout` of the manifest's current schema — the fallback
-    for directly constructed writers; the DataSource plan path passes
-    the schema it already read so plan-time column validation and the
-    stored layout can never observe different manifest versions."""
-    from .. import manifest as mf
-
-    return _arrow_layout(mf.read_manifest(uri).schema)
-
-
 def _to_stored_layout(batch, target):
     """Reorder/cast one incoming Arrow batch to the stored layout.
 
     Spark hands writer tasks batches in DATAFRAME column order; writing
     them raw persists that order, and a reader mapping batches to the
     declared schema by POSITION would then silently transpose columns
-    (two int64 columns swap without even a type error).  Extra
-    DataFrame columns are dropped (the write_fragment_spark select
-    contract); missing ones were refused at plan time."""
+    (two int64 columns swap without even a type error).  Missing and
+    extra columns were refused at plan time."""
     if batch.schema == target:
         return batch
     return batch.select(target.names).cast(target)
@@ -186,8 +181,12 @@ def _to_stored_layout(batch, target):
 
 @dataclass
 class _FragCommit(WriterCommitMessage):
+    """One task's parquet piece ("" = the task saw no rows)."""
     file_name: str = ""
     rows: int = 0
+
+
+_StreamPieceCommit = _FragCommit   # the stream sink's name for it
 
 
 class TileDBDataSource(DataSource):
@@ -225,54 +224,28 @@ class TileDBDataSource(DataSource):
     def streamReader(self, schema: StructType) -> "TileDBStreamReader":
         return TileDBStreamReader(self._uri(), schema)
 
-    def _check_write_columns(self, uri: str, schema: StructType):
-        """Plan-time refusal of writes missing schema columns — the
-        write_fragment_pandas contract (fragment_writer.py): a silently
-        dropped dim/attr commits a fragment that reads back NULL for
-        that column (lost coordinates for dims)."""
+    def _plan_write(self, schema: StructType, overwrite: bool):
+        """(uri, stored schema) for a writer: ONE plan-time manifest
+        read both validates the columns and fixes the layout, so the two
+        can never observe different manifest versions."""
         from .. import manifest as mf
+        from .fragment_writer import check_write_columns
 
-        s = mf.read_manifest(uri).schema
-        cols = s.dim_names + s.attr_names
-        have = list(schema.fieldNames())
-        absent = [c for c in cols if c not in have]
-        if absent:
-            raise ValueError(
-                f"write is missing schema columns {absent}; every dim "
-                f"and attr must be present (have: {have})")
-        unknown = [c for c in have if c not in cols]
-        if unknown:
-            # silently dropping a column's data on write is the same
-            # loss class as silently misplacing a URI — refuse loudly
-            # (the reference refuses unknown attributes on write too)
-            raise ValueError(
-                f"write has columns {unknown} not in the array schema "
-                f"(dims+attrs: {cols}); drop them with .select(...) or "
-                f"evolve the schema first")
-        return s
-
-    def writer(self, schema: StructType, overwrite: bool) -> "TileDBWriter":
         if overwrite:
             raise NotImplementedError(
                 "overwrite mode not supported; fragments are append-only "
                 "(use consolidate/vacuum to rewrite)")
         uri = self._uri()
-        stored = self._check_write_columns(uri, schema)
-        return TileDBWriter(
-            uri, target_schema=_arrow_layout(stored),
-            plan_schema_version=getattr(stored, "_read_version", None))
+        stored = mf.read_manifest(uri).schema
+        check_write_columns(stored, schema.fieldNames())
+        return uri, stored
+
+    def writer(self, schema: StructType, overwrite: bool) -> "TileDBWriter":
+        return TileDBWriter(*self._plan_write(schema, overwrite))
 
     def streamWriter(self, schema: StructType,
                      overwrite: bool) -> "TileDBStreamWriter":
-        if overwrite:
-            raise NotImplementedError(
-                "overwrite mode not supported; fragments are append-only "
-                "(use consolidate/vacuum to rewrite)")
-        uri = self._uri()
-        stored = self._check_write_columns(uri, schema)
-        return TileDBStreamWriter(
-            uri, target_schema=_arrow_layout(stored),
-            plan_schema_version=getattr(stored, "_read_version", None))
+        return TileDBStreamWriter(*self._plan_write(schema, overwrite))
 
 
 _PUSHABLE = (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan,
@@ -1009,55 +982,77 @@ def _box_overlap(a, b) -> bool:
     return not (a[1] < b[0] or b[1] < a[0])
 
 
-class TileDBWriter(DataSourceArrowWriter):
-    """Append one fragment per save(): tasks stream Arrow batches to
-    staged parquet files; commit publishes a single FragmentRecord."""
+class _FragmentSink:
+    """Plan-time state shared by the batch and stream writers, resolved
+    once on the DRIVER and pickled to tasks (executors never re-read the
+    manifest): the ArraySchema the write was validated against — tagged
+    by ``read_manifest`` with its version, which ``publish_fragment``
+    stamps on the record — its stored Arrow layout and its declared
+    parquet codec.  ``schema`` defaults to the manifest's current one
+    (directly constructed writers); the array must exist."""
 
-    def __init__(self, uri: str, target_schema=None,
-                 plan_schema_version=None):
+    def __init__(self, uri: str, schema=None):
         from .. import manifest as mf
+        from .fragment_writer import _schema_codec
 
-        self.uri = uri
-        self.ts = mf.now_ms()
-        self.frag_name = mf.new_fragment_name(self.ts)
-        self.frag_dir = mf.fragment_path(uri, self.frag_name)
-        # resolved on the DRIVER (plan time — writer() passes the same
-        # manifest read that validated the columns) and pickled to
-        # tasks; executors never re-read it
-        if target_schema is not None:
-            self.target_schema = target_schema
-            self.plan_schema_version = plan_schema_version
-        else:
-            m = mf.read_manifest(uri)
-            self.target_schema = _arrow_layout(m.schema)
-            self.plan_schema_version = m.schema_version
+        self.uri = mf.require_local_uri(uri)
+        self.schema = (schema if schema is not None
+                       else mf.read_manifest(self.uri).schema)
+        self.target_schema = _arrow_layout(self.schema)
+        self.codec = _schema_codec(self.schema)
 
-    def write(self, iterator) -> _FragCommit:
+    def _write_piece(self, batches, directory: str,
+                     prefix: str) -> _FragCommit:
+        """Task side: stream Arrow batches, conformed to the stored
+        layout, into ONE uuid-named parquet piece under ``directory``."""
         import uuid
 
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        os.makedirs(self.frag_dir, exist_ok=True)
-        fn = f"part-{uuid.uuid4().hex[:12]}.parquet"
-        path = os.path.join(self.frag_dir, fn)
+        os.makedirs(directory, exist_ok=True)
+        fn = f"{prefix}-{uuid.uuid4().hex[:12]}.parquet"
         writer = None
         rows = 0
-        for batch in iterator:
+        for batch in batches:
             batch = _to_stored_layout(batch, self.target_schema)
             if writer is None:
-                writer = pq.ParquetWriter(path, batch.schema, compression="zstd")
+                writer = pq.ParquetWriter(os.path.join(directory, fn),
+                                          batch.schema,
+                                          compression=self.codec)
             writer.write_batch(batch)
             rows += batch.num_rows
         if writer is not None:
             writer.close()
         return _FragCommit(file_name=fn if writer else "", rows=rows)
 
+
+def _unlink_quiet(path: str) -> None:
+    try:
+        os.unlink(path)
+    except FileNotFoundError:
+        pass
+
+
+class TileDBWriter(_FragmentSink, DataSourceArrowWriter):
+    """Append one fragment per save(): tasks stream Arrow batches to
+    parquet pieces in the fragment dir; commit publishes a single
+    FragmentRecord."""
+
+    def __init__(self, uri: str, schema=None):
+        from .. import manifest as mf
+
+        super().__init__(uri, schema)
+        self.ts = mf.now_ms()
+        self.frag_name = mf.new_fragment_name(self.ts)
+        self.frag_dir = mf.fragment_path(self.uri, self.frag_name)
+
+    def write(self, iterator) -> _FragCommit:
+        return self._write_piece(iterator, self.frag_dir, "part")
+
     def commit(self, messages):
         import shutil
 
-        from .. import manifest as mf
-        from .fragment_writer import _validate_domain, stats_from_parquet_dir
+        from .fragment_writer import publish_fragment
 
         # publish ONLY the files the committed task attempts reported:
         # a failed/speculative attempt leaves its own uuid-named file
@@ -1067,35 +1062,15 @@ class TileDBWriter(DataSourceArrowWriter):
         # the batch writer)
         committed = {m.file_name for m in messages
                      if m is not None and m.file_name}
-        if os.path.isdir(self.frag_dir):
-            for fn in os.listdir(self.frag_dir):
-                if fn not in committed:
-                    try:
-                        os.remove(os.path.join(self.frag_dir, fn))
-                    except OSError:
-                        pass
         if not committed:
             # empty save(): publish NOTHING — a cell_num=0 record has no
             # MBR, overlaps everything, and crashes the group merge
             shutil.rmtree(self.frag_dir, ignore_errors=True)
             return
-        schema = mf.read_manifest(self.uri).schema
-        cell_num, mbr = stats_from_parquet_dir(self.frag_dir, schema.dim_names)
-        _validate_domain(schema, mbr, self.frag_dir)   # same refusal as
-        rec = mf.FragmentRecord(name=self.frag_name,   # write_fragment_*
-                                timestamp_range=(self.ts, self.ts),
-                                cell_num=cell_num, nonempty_domain=mbr)
-
-        def _append(m):
-            # PLAN-time stamp (fragment_writer._append rationale): the
-            # batches were normalized to the layout resolved at plan;
-            # an evolution landing before this commit must not mark
-            # them post-evolution
-            pv = self.plan_schema_version
-            rec.schema_version = pv if pv is not None else m.schema_version
-            m.fragments.append(rec)
-
-        mf.commit(self.uri, _append)
+        for fn in os.listdir(self.frag_dir):
+            if fn not in committed:
+                _unlink_quiet(os.path.join(self.frag_dir, fn))
+        publish_fragment(self.uri, self.schema, self.frag_name, self.ts)
 
     def abort(self, messages):
         import shutil
@@ -1103,17 +1078,10 @@ class TileDBWriter(DataSourceArrowWriter):
         shutil.rmtree(self.frag_dir, ignore_errors=True)
 
 
-@dataclass
-class _StreamPieceCommit(WriterCommitMessage):
-    file_name: str = ""
-    rows: int = 0
-
-
-class TileDBStreamWriter(DataSourceStreamArrowWriter):
+class TileDBStreamWriter(_FragmentSink, DataSourceStreamArrowWriter):
     """Array-as-streaming-SINK: ``df.writeStream.format("tiledb")``
     commits ONE fragment per micro-batch — the write-side complement
-    of :class:`TileDBStreamReader`'s fragment change feed, replacing
-    the ``foreachBatch`` + ``from_pandas`` pattern with a native sink
+    of :class:`TileDBStreamReader`'s fragment change feed
     (reference-world: continuous array ingest,
     ``/root/reference/tiledb/fragment.py`` commit granularity).
 
@@ -1125,126 +1093,61 @@ class TileDBStreamWriter(DataSourceStreamArrowWriter):
     IDEMPOTENT: a batch replayed after a sink-commit-then-crash
     (checkpoint not yet advanced) finds its batchId already in the
     manifest, discards the re-staged pieces, and publishes nothing —
-    each micro-batch lands exactly once.  Contract: one streaming
-    query per sink array at a time (two concurrent queries would
-    collide on batchIds — the reference's process-level single-writer
-    model), and the target array must already exist (create it with
-    ``from_pandas/from_spark mode="schema_only"`` or a first batch
-    ingest)."""
+    each micro-batch lands exactly once.  Every micro-batch conforms to
+    the layout resolved at construction, so every fragment is stamped
+    with that schema version even if the schema evolves mid-stream.
+    Contract: one streaming query per sink array at a time (two
+    concurrent queries would collide on batchIds — the reference's
+    process-level single-writer model), and the target array must
+    already exist (create it with ``from_pandas/from_spark
+    mode="schema_only"`` or a first batch ingest)."""
 
-    def __init__(self, uri: str, target_schema=None,
-                 plan_schema_version=None):
-        from .. import manifest as mf
-
-        self.uri = mf.require_local_uri(uri)
+    def __init__(self, uri: str, schema=None):
+        super().__init__(uri, schema)
         self.stage_dir = os.path.join(self.uri, "__stream_stage")
-        # driver-resolved stored layout (see TileDBWriter.__init__);
-        # None when the sink array doesn't exist yet at construction —
-        # streamWriter()'s plan-time manifest read makes that unreachable
-        # in practice, but tests construct the writer directly.  Every
-        # micro-batch conforms to THIS layout, so every committed
-        # fragment is stamped with the construction-time version even
-        # if the schema evolves mid-stream.
-        if target_schema is not None:
-            self.target_schema = target_schema
-            self.plan_schema_version = plan_schema_version
-        else:
-            try:
-                m = mf.read_manifest(self.uri)
-                self.target_schema = _arrow_layout(m.schema)
-                self.plan_schema_version = m.schema_version
-            except FileNotFoundError:
-                self.target_schema = None
-                self.plan_schema_version = None
 
-    def write(self, iterator) -> _StreamPieceCommit:
-        import uuid
-
-        import pyarrow.parquet as pq
-
-        os.makedirs(self.stage_dir, exist_ok=True)
-        fn = f"piece-{uuid.uuid4().hex[:12]}.parquet"
-        path = os.path.join(self.stage_dir, fn)
-        writer = None
-        rows = 0
-        for batch in iterator:
-            if self.target_schema is not None:
-                batch = _to_stored_layout(batch, self.target_schema)
-            if writer is None:
-                writer = pq.ParquetWriter(path, batch.schema,
-                                          compression="zstd")
-            writer.write_batch(batch)
-            rows += batch.num_rows
-        if writer is not None:
-            writer.close()
-        return _StreamPieceCommit(file_name=fn if writer else "", rows=rows)
-
-    def _batch_marker(self, batch_id: int) -> str:
-        return f"_sb{batch_id}_"
+    def write(self, iterator) -> _FragCommit:
+        return self._write_piece(iterator, self.stage_dir, "piece")
 
     def commit(self, messages, batchId: int) -> None:
         import shutil
 
         from .. import manifest as mf
-        from .fragment_writer import _validate_domain, stats_from_parquet_dir
+        from .fragment_writer import publish_fragment
 
         pieces = [m.file_name for m in messages
                   if m is not None and m.file_name]
-        marker = self._batch_marker(batchId)
-        man = mf.read_manifest(self.uri)
-        if any(marker in f.name for f in man.fragments):
+        tag = f"sb{batchId}_"
+        if any(f"_{tag}" in f.name
+               for f in mf.read_manifest(self.uri).fragments):
             # replayed batch (sink committed, checkpoint didn't
             # advance before a crash): the fragment is already
             # published — drop the re-staged pieces, publish nothing
             for fn in pieces:
-                try:
-                    os.unlink(os.path.join(self.stage_dir, fn))
-                except FileNotFoundError:
-                    pass
+                _unlink_quiet(os.path.join(self.stage_dir, fn))
             return
         if not pieces:
             return  # empty micro-batch: no fragment
         ts = mf.now_ms()
-        # the canonical name builder carries the idempotency tag — one
-        # format definition, so the marker grep can never drift from it
-        frag_name = mf.new_fragment_name(ts, tag=marker.lstrip("_"))
+        frag_name = mf.new_fragment_name(ts, tag=tag)
         frag_dir = mf.fragment_path(self.uri, frag_name)
         os.makedirs(frag_dir, exist_ok=True)
         for fn in pieces:
             shutil.move(os.path.join(self.stage_dir, fn),
                         os.path.join(frag_dir, fn))
-        cell_num, mbr = stats_from_parquet_dir(frag_dir,
-                                               man.schema.dim_names)
-        _validate_domain(man.schema, mbr, frag_dir)
-        rec = mf.FragmentRecord(name=frag_name, timestamp_range=(ts, ts),
-                                cell_num=cell_num, nonempty_domain=mbr)
-
-        def _append(m):
-            # construction-time stamp: batches were conformed to the
-            # construction layout (see __init__ / fragment_writer)
-            pv = self.plan_schema_version
-            rec.schema_version = pv if pv is not None else m.schema_version
-            m.fragments.append(rec)
-
-        mf.commit(self.uri, _append)
+        publish_fragment(self.uri, self.schema, frag_name, ts)
         # sweep orphans: pieces staged by FAILED/speculative task
         # attempts never reach `messages` — once this batch's collected
         # pieces are published, anything left in the staging dir is
         # garbage (single-streaming-writer contract; commit runs after
         # all the batch's tasks finished)
         for leftover in os.listdir(self.stage_dir):
-            try:
-                os.unlink(os.path.join(self.stage_dir, leftover))
-            except FileNotFoundError:
-                pass
+            _unlink_quiet(os.path.join(self.stage_dir, leftover))
 
     def abort(self, messages, batchId: int) -> None:
         for m in messages:
             if m is not None and m.file_name:
-                try:
-                    os.unlink(os.path.join(self.stage_dir, m.file_name))
-                except FileNotFoundError:
-                    pass
+                _unlink_quiet(os.path.join(self.stage_dir, m.file_name))
 
 
 def register(spark) -> None:
@@ -1281,8 +1184,8 @@ class _FragStreamSplit(InputPartition):
 
 class TileDBStreamReader(DataSourceStreamReader):
     """CHANGE-FEED stream source over an array — the read-side
-    complement of the ``foreachBatch`` fragment SINK
-    (``streaming/events.py``): ``spark.readStream.format("tiledb")``
+    complement of the fragment SINK (:class:`TileDBStreamWriter`):
+    ``spark.readStream.format("tiledb")``
     emits each committed fragment's rows exactly once, in commit
     order, as new micro-batches.
 

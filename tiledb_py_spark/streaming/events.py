@@ -4,9 +4,9 @@ The reference is a batch storage engine (SURVEY.md §2.7) — its nearest
 analogs are timestamped fragment writes (append-only commits,
 ``/root/reference/tiledb/array.py:966-985``).  This module is the
 Spark-native extension: ``readStream`` over event files -> watermarked
-window aggregations -> ``foreachBatch`` committing each micro-batch as a
-timestamped array fragment, giving streaming writes the same time-travel
-/ consolidation story as batch writes.
+window aggregations -> the ``format("tiledb")`` sink committing each
+micro-batch as a timestamped array fragment, giving streaming writes the
+same time-travel / consolidation story as batch writes.
 
 Each transformation is defined as a pure DataFrame function usable in BOTH
 batch and streaming mode (the Structured Streaming contract), which is how
@@ -811,34 +811,24 @@ def stream_events_to_array(stream_df: DataFrame, uri: str,
                            checkpoint_dir: str,
                            trigger_seconds: Optional[int] = None):
     """Sink: each micro-batch commits one timestamped fragment — streaming
-    writes get time travel + consolidation for free.  Exactly-once: the
-    fragment name embeds the micro-batch id, so a batch replayed after
-    a crash (sink committed, checkpoint didn't advance) is detected and
-    skipped instead of committing duplicate rows.  Prefer
-    ``df.writeStream.format("tiledb")`` (the native sink) — this helper
-    predates it and keeps the same semantics."""
-    from ..manifest import read_manifest
-    from ..sources.fragment_writer import write_fragment_spark
+    writes get time travel + consolidation for free.  Runs the native
+    ``writeStream.format("tiledb")`` sink: exactly-once (the fragment
+    name embeds the micro-batch id, so a batch replayed after a crash is
+    detected and skipped), columns must match the array schema, and the
+    array must exist locally.  ``trigger_seconds`` sets a processing-time
+    trigger; without it the query drains the available input and stops."""
+    from ..sources.spark_datasource import FORMAT_NAME, register
 
-    schema = read_manifest(uri).schema
-
-    def commit_batch(batch_df: DataFrame, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        marker = f"sb{batch_id}_"
-        if any(marker in f.name for f in read_manifest(uri).fragments):
-            return  # replayed micro-batch: fragment already committed
-        write_fragment_spark(uri, schema, batch_df, name_tag=marker)
-
+    register(stream_df.sparkSession)
     writer = (stream_df.writeStream
-              .foreachBatch(commit_batch)
+              .format(FORMAT_NAME)
               .option("checkpointLocation", checkpoint_dir)
               .outputMode("append"))
     if trigger_seconds:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     else:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.start(uri)
 
 
 def neardup_event_stream(events: DataFrame, text_col: str,
