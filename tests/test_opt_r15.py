@@ -1,10 +1,12 @@
 """Round-15 optimization pins.
 
-The materialization default moved from eager localCheckpoint to
-evict-then-persist (columnar cache, recomputable lineage).  The
-load-bearing property is CROSS-RUN HONESTY: rebuilding the same
-operator in one session must NOT serve the previous build's cached
-blocks — every build recomputes from its sources.
+Materialization (operators/_mat.py) is a salted per-build persist
+(columnar cache, recomputable lineage) with a bounded library-owned
+registry.  The load-bearing property is CROSS-RUN HONESTY: rebuilding
+the same operator in one session must NOT serve the previous build's
+cached blocks — every build recomputes from its sources.  The registry
+never touches a table the caller cached and keeps at most eight
+entries live.
 """
 
 import os
@@ -64,37 +66,90 @@ def test_materialize_rebuild_recomputes(spark, tmp_path):
     d2.unpersist(True)
 
 
-def test_materialize_family_results_identical_across_modes(spark):
-    """persist / ckpt / off must produce the same operator results.
-    Discrete outputs (ids, counts, strings) must be exactly equal;
-    floating-point aggregates are compared at 1e-12 relative — the
-    materialization point changes double-summation ORDER (it did
-    between ckpt and off in r14 too, measured max 4.4e-16 here), which
-    the oracle gate's tolerance also absorbs."""
-    from tiledb_py_spark.operators.dedup import remove_repeated_lines
-    from tiledb_py_spark.operators.text import unigram_surprisal
+def test_materialize_family_results_identical_across_modes(spark,
+                                                           monkeypatch):
+    """Materialized and un-materialized builds must produce the same
+    operator results.  Discrete outputs (ids, counts, strings) must be
+    exactly equal; floating-point aggregates are compared at 1e-12
+    relative — the materialization point changes double-summation
+    ORDER (measured max 4.4e-16 here), which the oracle gate's
+    tolerance also absorbs."""
+    from tiledb_py_spark.operators import dedup, text
 
     df = _family_df(spark)
-    outs = {}
-    for mode in ("persist", "ckpt", "off"):
-        os.environ["SPARK_GRAFT_MATERIALIZE"] = mode
-        try:
-            a = sorted(
-                unigram_surprisal(df, "text", "doc_id").collect())
-            b = sorted(
-                remove_repeated_lines(df, "text", "doc_id").collect())
-            outs[mode] = (a, b)
-        finally:
-            os.environ.pop("SPARK_GRAFT_MATERIALIZE", None)
-        spark.catalog.clearCache()
-    ref_a, ref_b = outs["persist"]
-    for mode in ("ckpt", "off"):
-        a, b = outs[mode]
-        assert b == ref_b  # line-dedup output is discrete: exact
-        assert len(a) == len(ref_a)
-        for x, y in zip(a, ref_a):
-            assert (x.doc_id, x.n_tokens) == (y.doc_id, y.n_tokens)
-            assert x.surprisal == pytest.approx(y.surprisal, rel=1e-12)
+
+    def run():
+        return (sorted(text.unigram_surprisal(df, "text", "doc_id")
+                       .collect()),
+                sorted(dedup.remove_repeated_lines(df, "text", "doc_id")
+                       .collect()))
+
+    ref_a, ref_b = run()
+    with monkeypatch.context() as m:
+        m.setattr(text, "materialize", lambda d: d)
+        m.setattr(dedup, "materialize", lambda d: d)
+        a, b = run()
+    assert b == ref_b  # line-dedup output is discrete: exact
+    assert len(a) == len(ref_a)
+    for x, y in zip(a, ref_a):
+        assert (x.doc_id, x.n_tokens) == (y.doc_id, y.n_tokens)
+        assert x.surprisal == pytest.approx(y.surprisal, rel=1e-12)
+
+
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_materialize_keeps_caller_cache(spark):
+    """A table the CALLER persisted must stay cached when an operator
+    materializes a structurally identical plan."""
+    from tiledb_py_spark.operators._mat import materialize
+
+    def plan():
+        return (spark.range(0, 50, 1, 2)
+                     .select((F.col("id") % 5).alias("k"))
+                     .groupBy("k").agg(F.count("*").alias("c")))
+
+    before = _persistent_rdd_ids(spark)
+    mine = plan().persist()
+    try:
+        assert mine.count() == 5
+        caller = _persistent_rdd_ids(spark) - before
+        assert caller
+        lib = materialize(plan())
+        assert lib.count() == 5
+        assert caller <= _persistent_rdd_ids(spark), \
+            "materialize evicted the caller's cached table"
+    finally:
+        mine.unpersist(True)
+
+
+def test_materialize_entries_bounded(spark):
+    """100 distinct builds, each forced by an action, leave at most
+    eight library entries live — in Spark's persistent-RDD registry and
+    in the materialized/evicted counters."""
+    import json
+
+    from tiledb_py_spark import stats
+    from tiledb_py_spark.operators._mat import materialize
+
+    was_enabled = stats.stats_enabled()
+    stats.stats_enable()
+    stats.stats_reset()
+    try:
+        before = _persistent_rdd_ids(spark)
+        for i in range(100):
+            t = materialize(spark.range(0, i + 1, 1, 1)
+                                 .select((F.col("id") * 2).alias("x")))
+            assert t.count() == i + 1
+        assert len(_persistent_rdd_ids(spark) - before) <= 8
+        c = json.loads(stats.stats_dump(print_out=False, json=True))
+        assert c["py.mat.materialized"] == 100
+        assert c["py.mat.materialized"] - c["py.mat.evicted"] <= 8
+    finally:
+        stats.stats_reset()
+        if not was_enabled:
+            stats.stats_disable()
 
 
 def test_sig_band_keys_string_path_matches_column_path(spark):
@@ -165,17 +220,26 @@ def test_bucket_index_sql_tree_matches_hof_fold(spark):
                   .collect())
 
 
-def test_materialize_rejects_unknown_mode(spark):
-    """A typo'd SPARK_GRAFT_MATERIALIZE opt-out must raise, not
-    silently persist-and-evict."""
-    from tiledb_py_spark.operators._mat import materialize
+def test_bucket_index_string_tree_under_escaped_string_literals(spark):
+    """String cuts in the IF tree must bucket like the fold whatever the
+    session's ``escapedStringLiterals`` parser setting is."""
+    from tiledb_py_spark.operators.stats_bounds import (
+        _quote_ident, bucket_index)
 
-    os.environ["SPARK_GRAFT_MATERIALIZE"] = "none"
+    key = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(key, "false")
+    spark.conf.set(key, "true")
     try:
-        with pytest.raises(ValueError, match="SPARK_GRAFT_MATERIALIZE"):
-            materialize(spark.range(3))
+        sdf = spark.createDataFrame(
+            [("bob(",), ("c\\]",), ("a",), ("",)], ["s"])
+        cuts = ["bob's", "c\\a", ""]
+        fold = sdf.select(bucket_index(F.col("s"), cuts).alias("b")).collect()
+        tree = sdf.select(bucket_index(_quote_ident("s"), cuts).alias("b")
+                          ).collect()
+        assert [r.b for r in fold] == [2, 2, 1, 0]
+        assert tree == fold
     finally:
-        os.environ.pop("SPARK_GRAFT_MATERIALIZE", None)
+        spark.conf.set(key, prev)
 
 
 def test_bucket_index_expr_array_matches_lit_array(spark):

@@ -1,6 +1,6 @@
 """Materialization point for small derived tables with multiple
-consumers (the r14 "checkpoint family": KN pattern tables, tfidf term
-tables, repeated-ngram/line-dedup collapses, surprisal count tables).
+consumers (KN pattern tables, tfidf term tables, repeated-ngram /
+line-dedup collapses, surprisal count tables).
 
 Why it exists: each consumer branch of such a table prunes/pushes
 different columns and filters into the aggregate, so the branches'
@@ -8,90 +8,76 @@ exchange subtrees canonicalize differently and neither plan-time
 ``ReuseExchange`` nor AQE runtime stage reuse dedups them — without a
 materialization point the corpus-sized scan+tokenize+explode lineage
 re-executes once PER consumer.  Materializing the (much smaller)
-derived table truncates the plan there (guide §3.3) and every branch
-reads the stored blocks instead.
+derived table truncates the plan there and every branch reads the
+stored blocks instead.
 
-The default mechanism (r15, measured) is ``persist(MEMORY_AND_DISK)``:
-the derived table lands in Spark's COLUMNAR compressed in-memory cache
-(``InMemoryTableScan`` in the plan), which at sf10 reads ~2x faster
-than the row-format executor blocks ``localCheckpoint`` writes
-(interleaved A/B, kn_ppl med 19.6 s persist vs 38.6 s lazy-ckpt vs
-43.4 s eager-ckpt; kn3 38.9/53.6; line_dedup parity).  Unlike a local
-checkpoint the cached lineage stays RECOMPUTABLE — an executor loss
-after materialization recomputes the lost partitions instead of
-failing the query — and no job runs at DataFrame-build time.
+Mechanism: ``persist(MEMORY_AND_DISK)``.  The table lands in Spark's
+columnar compressed in-memory cache (``InMemoryTableScan`` in the
+plan), which at sf10 read ~2x faster than the row-format executor
+blocks a local checkpoint writes (interleaved A/B, kn_ppl median
+19.6 s persist vs 38.6 s lazy checkpoint vs 43.4 s eager checkpoint;
+kn3_ppl 38.9 vs 53.6 s; line_dedup parity).  The cached lineage stays
+recomputable — an executor loss recomputes the lost partitions — and
+no job runs at DataFrame-build time.
 
-CROSS-RUN HONESTY (load-bearing): Spark's CacheManager matches cached
-plans structurally, so a SECOND build of the same operator in one
-session would silently serve the first build's cached blocks — a
-cross-run result cache the bench contract forbids (and stale data if
-the inputs mutated).  ``materialize`` therefore EVICTS any
-identical-plan cache entry (``unpersist(blocking=True)`` on the fresh
-DataFrame) before persisting, so every rebuild starts cold and
-recomputes from its sources; reuse happens only across the consumer
-branches WITHIN one build — exactly the plan-truncation semantics the
-checkpoint had.  ``tests/test_opt_r15.py`` pins this property.
+One policy, library-owned entries:
 
-Mode knob (``SPARK_GRAFT_MATERIALIZE``, read at build time so library
-users composing lazy pipelines can opt out without a signature
-change):
+- SALTED PER BUILD.  Each call tags its table with a no-op filter
+  ``lit(n) == lit(n)`` (``n`` from a process-wide counter) before
+  persisting.  Spark's CacheManager matches cached plans structurally,
+  and the salt makes every build's plan unique, so a rebuild of the
+  same operator never adopts an earlier build's blocks (it recomputes
+  from its sources — the cross-run honesty rule the bench contract
+  requires, pinned by ``test_materialize_rebuild_recomputes``), and a
+  table the CALLER cached is never matched or evicted.  The optimizer
+  folds the filter away, so the cached table and its consumers' plans
+  are otherwise unchanged.
+- BOUNDED.  The library keeps its entries in a FIFO and unpersists the
+  oldest (non-blocking) once more than ``_MAX_ENTRIES`` are live.
+  Eight is the number of call sites, and each operator build
+  materializes one table, so a plan composing every materializing
+  operator keeps all of its tables.  Entries of a stopped session are
+  dropped without an unpersist.  Trade-off: if one plan builds more
+  than eight materializing operators before its first action, the
+  oldest table is evicted before it is read and its lineage recomputes
+  once per consumer — slower, with the same results.
 
-- ``persist`` (default): evict-then-``persist(MEMORY_AND_DISK)`` as
-  above.  CACHE LIFETIME: each build leaves ONE live CacheManager
-  entry (small — pattern/vocabulary sized) until the next
-  identical-plan rebuild evicts it, ``spark.catalog.clearCache()``,
-  or session end; there is no caller-reachable handle on the internal
-  table, so a long-lived session building these operators over MANY
-  DISTINCT inputs accumulates one entry per distinct build and should
-  prefer ``ckpt`` (blocks freed by the ContextCleaner once the result
-  is unreachable) or ``off``.  The eviction is plan-structural, so it
-  also hits a structurally-identical table the CALLER cached (or a
-  still-alive previous build of the same operator over the same
-  input — that older result silently reverts to re-deriving its
-  lineage per consumer); callers that need two identical builds alive
-  must rename an internal column to decouple the plans.
-- ``ckpt``: ``localCheckpoint(eager=True)`` — the r14 default;
-  deterministic materialization point, plan truncated at a
-  ``Scan ExistingRDD``, but blocks are neither replicated nor
-  recomputable and the build itself runs the upstream jobs.
-- ``lazy``: ``localCheckpoint(eager=False)`` — same truncation, no
-  build-time job; measured ~2x slower than ``persist`` at sf10 (row
-  blocks).
-- ``off``: no materialization (the pre-r14 shape: every consumer
-  re-derives the lineage; AQE overlaps the redundant passes on an
-  idle cluster — the right choice only when cores are otherwise idle
-  and the upstream pass is cheap, e.g. the reverted bm25 site).
-
-The table is recomputed fresh inside every build of the operator
-(nothing is memoized across builds — the eviction guarantees it).
+``stats`` counts ``py.mat.materialized`` and ``py.mat.evicted``; their
+difference is the number of live entries.
 """
 
 from __future__ import annotations
 
-import os
+import itertools
+import threading
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from ..stats import record
+
+_MAX_ENTRIES = 8
+_lock = threading.Lock()
+_salt = itertools.count()  # next() is one atomic C call
+_entries: list = []  # library-owned persisted tables, oldest first
 
 
 def materialize(df: DataFrame) -> DataFrame:
-    """Materialize a small multi-consumer derived table per
-    ``SPARK_GRAFT_MATERIALIZE`` (see module docstring)."""
-    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "persist")
-    if mode == "off":
-        return df
-    if mode in ("ckpt", "lazy"):
-        return df.localCheckpoint(eager=(mode != "lazy"))
-    if mode != "persist":
-        # loud, not silent: this knob is the documented opt-out for
-        # lazy-pipeline composition, so a typo ("none", "OFF", ...)
-        # must not quietly keep persisting and evicting
-        raise ValueError(
-            f"SPARK_GRAFT_MATERIALIZE={mode!r}: expected one of "
-            "'persist', 'ckpt', 'lazy', 'off'")
-    from pyspark import StorageLevel
-
-    # evict any identical-plan entry left by a PREVIOUS build of this
-    # operator (blocking, so the subsequent persist registers a fresh
-    # uncomputed entry instead of adopting the old computed one)
-    df.unpersist(blocking=True)
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
+    """Persist a small multi-consumer derived table under a per-build
+    salt and register it in the bounded library FIFO (see module
+    docstring).  Returns the persisted DataFrame."""
+    n = next(_salt)
+    out = df.filter(F.lit(n) == F.lit(n)).persist(StorageLevel.MEMORY_AND_DISK)
+    record("py.mat.materialized")
+    with _lock:
+        # a stopped session's context drops its _jsc (and its cache)
+        live = [d for d in _entries
+                if d.sparkSession.sparkContext._jsc is not None] + [out]
+        dropped = len(_entries) + 1 - len(live)
+        evict = live[:-_MAX_ENTRIES]
+        _entries[:] = live[-_MAX_ENTRIES:]
+    for d in evict:
+        d.unpersist(blocking=False)
+    record("py.mat.evicted", dropped + len(evict))
+    return out

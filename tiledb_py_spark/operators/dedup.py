@@ -190,17 +190,6 @@ def _shingles_over(toks: Column, k: int) -> Column:
     )
 
 
-def _staged_shingles(df: DataFrame, text_col: str, id_col: str,
-                     k: int) -> DataFrame:
-    """(``__id``, ``__sh``) with the token array staged in its own
-    projection so the shingle lambda slices an attribute, not a
-    re-evaluated regex expression (the O(n) vs O(n^2) distinction that
-    ``minhash_signatures`` documents)."""
-    return (df.select(F.col(id_col).alias("__id"),
-                      tokens(text_col).alias("__toks"))
-              .select("__id", _shingles_over(F.col("__toks"), k).alias("__sh")))
-
-
 def _staged_shingle_hashes(df: DataFrame, text_col: str, id_col: str,
                            k: int) -> DataFrame:
     """(``__id``, ``__h``) — DISTINCT k-shingle identity hashes computed
@@ -1095,11 +1084,11 @@ def repeated_ngram_stats(df: DataFrame, text_col: str, id_col: str,
     # splitting handles the same hot key on a join, and the measured
     # cost difference at sf1 is noise (the gram hashing dominates both
     # formulations).
-    # MATERIALIZED (operators/_mat.py — evict-then-persist columnar
-    # cache by default, mode knob + recovery trade there): the dup branch and the
-    # join branch prune different columns, so their exchange subtrees
-    # canonicalize differently and neither ReuseExchange nor AQE stage
-    # reuse dedups them — without the checkpoint the scan+tokenize+
+    # MATERIALIZED (operators/_mat.py — salted per-build persist into
+    # the columnar cache): the dup branch and the join branch prune
+    # different columns, so their exchange subtrees canonicalize
+    # differently and neither ReuseExchange nor AQE stage reuse dedups
+    # them — without the materialization the scan+tokenize+
     # gram-hash pipeline ran once PER consumer.  One write of the
     # collapsed (id, gram, cnt) rows (no bigger than the exchange that
     # already carries them) buys back a full corpus pass; recomputed

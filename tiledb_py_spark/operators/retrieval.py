@@ -123,9 +123,9 @@ def tfidf_top_terms(df: DataFrame, text_col: str, id_col: str,
     frequency joined back on the term; the per-doc top-k is one window
     over the (id)-keyed shuffle."""
     toks = _tokens(text_col, tokens_col)
-    # materialized (operators/_mat.py — evict-then-persist columnar
-    # cache by default, mode knob + recovery trade there): the document-frequency
-    # branch and the scoring join otherwise each re-run the corpus
+    # materialized (operators/_mat.py — salted per-build persist into
+    # the columnar cache): the document-frequency branch and the
+    # scoring join otherwise each re-run the corpus
     # scan+tokenize+explode (branch-specific pruning defeats exchange
     # reuse); one write of the collapsed (id, term, tf) rows — no
     # bigger than the exchange that already carries them — buys back a

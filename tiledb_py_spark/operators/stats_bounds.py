@@ -265,12 +265,6 @@ def monotonic_view_sql(col: str, dtype: str) -> str:
     return f"CAST({q} AS DOUBLE)"
 
 
-def _sql_str_lit(s: str) -> str:
-    """Single-quoted Spark SQL string literal (C-style escaping — the
-    parser default ``escapedStringLiterals=false``)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def bucket_index(d, bounds) -> "object":
     """Bucket id = number of bounds strictly below ``d``.  Null ``d``
     yields 0; callers wanting null-bucket semantics wrap it.  Bounds may
@@ -300,9 +294,12 @@ def bucket_index(d, bounds) -> "object":
         # here preserves the documented contract for unsorted input
         # (every internal caller already passes sorted cuts — this is
         # a guard for external callers).  Strings sort by UTF-8 bytes
-        # to match Spark's UTF8_BINARY `>`.
+        # to match Spark's UTF8_BINARY `>`.  A string cut renders as a
+        # hex binary literal cast to STRING: no quoting or escaping, so
+        # it parses the same under any `escapedStringLiterals` setting,
+        # and it constant-folds to a plain string literal.
         if bounds and isinstance(bounds[0], str):
-            lits = [_sql_str_lit(str(b))
+            lits = [f"CAST(X'{str(b).encode().hex()}' AS STRING)"
                     for b in sorted(bounds, key=lambda s: str(s).encode())]
         elif all(math.isfinite(float(b)) for b in bounds):
             lits = [f"{float(b)!r}D" for b in sorted(float(b) for b in bounds)]

@@ -195,11 +195,10 @@ def unigram_surprisal(df: DataFrame, text_col: str, id_col: str,
     g = (df.select(F.col(id_col).alias("__id"), toks.alias("__toks"))
            .select("__id", F.explode("__toks").alias("__tok"))
            .select("__id", F.xxhash64("__tok").alias("__tok")))
-    # materialized (operators/_mat.py — evict-then-persist by default;
-    # the mode knob and the eager-build/fault-tolerance trade live there):
-    # the grand-total branch
-    # and the join-back otherwise each re-derive the corpus explode
-    # (vocabulary-sized table, recomputed fresh per execution)
+    # materialized (operators/_mat.py — salted per-build persist): the
+    # grand-total branch and the join-back otherwise each re-derive the
+    # corpus explode (vocabulary-sized table, recomputed fresh per
+    # execution)
     freq = materialize(g.groupBy("__tok").agg(F.count("*").alias("__cnt")))
     total = freq.agg(F.sum("__cnt").alias("__total"))
     return (g.join(freq, on="__tok")
@@ -586,11 +585,10 @@ def ngram_surprisal(df: DataFrame, text_col: str, id_col: str,
                      .alias("__g"),
                      F.xxhash64(F.slice("__toks", F.col("__i"), n - 1))
                      .alias("__p")))
-    # materialized (operators/_mat.py — evict-then-persist by default;
-    # mode knob + fault-tolerance trade documented there): the prefix-total
-    # branch and the ratio join prune different columns, so without
-    # the checkpoint each consumer re-derived the corpus-sized
-    # postings; the pattern table is distinct-n-gram-sized
+    # materialized (operators/_mat.py — salted per-build persist): the
+    # prefix-total branch and the ratio join prune different columns, so
+    # without it each consumer re-derived the corpus-sized postings; the
+    # pattern table is distinct-n-gram-sized
     pc = materialize(g.groupBy("__g", "__p").agg(F.count("*").alias("__c2")))
     c1 = pc.groupBy("__p").agg(F.sum("__c2").alias("__c1"))
     ratio = pc.join(c1, on="__p").select("__g", "__c2", "__c1")
@@ -870,13 +868,12 @@ def kneser_ney_logprob(df: DataFrame, text_col: str, id_col: str,
                      F.element_at("__hs", F.col("__i")).alias("__h")))
     # ONE pattern aggregation (nulls kept: document-initial tokens
     # group under __hp IS NULL); every count table below derives from
-    # it.  MATERIALIZED (operators/_mat.py — evict-then-persist
-    # columnar cache by default, mode knob + recovery trade documented
-    # there): the branch aggregates each prune/push different
-    # columns and filters into the aggregate, so their exchange
-    # subtrees canonicalize differently and NEITHER plan-time
+    # it.  MATERIALIZED (operators/_mat.py — salted per-build persist
+    # into the columnar cache): the branch aggregates each prune/push
+    # different columns and filters into the aggregate, so their
+    # exchange subtrees canonicalize differently and NEITHER plan-time
     # ReuseExchange nor AQE stage reuse can dedup them — without the
-    # checkpoint every branch re-derived the corpus-sized postings
+    # materialization every branch re-derived the corpus-sized postings
     # (measured: the scan+explode ran per branch).  The pattern table
     # is distinct-bigram-sized — far smaller than the postings it
     # replaces, and it is recomputed fresh on every execution.
@@ -977,12 +974,12 @@ def kneser_ney_trigram_logprob(df: DataFrame, text_col: str, id_col: str,
     # ONE pattern aggregation (r14 rework, same discipline as the
     # bigram variant): nulls kept so positions 1/2 group under null
     # __ha/__hb; every level's count table derives from this table.
-    # MATERIALIZED (operators/_mat.py — evict-then-persist columnar
-    # cache by default, mode knob + recovery trade there) because the level branches
-    # prune/push different columns and filters into the aggregate, so
-    # their exchange subtrees canonicalize differently and neither
+    # MATERIALIZED (operators/_mat.py — salted per-build persist into
+    # the columnar cache) because the level branches prune/push
+    # different columns and filters into the aggregate, so their
+    # exchange subtrees canonicalize differently and neither
     # ReuseExchange nor AQE stage reuse dedups them — without the
-    # checkpoint each branch re-derived the corpus-sized postings.
+    # materialization each branch re-derived the corpus-sized postings.
     # Distinct-trigram-sized, recomputed fresh on every execution.
     gk = materialize(
         g.groupBy("__ha", "__hb", "__h").agg(F.count("*").alias("__ck")))

@@ -1163,12 +1163,6 @@ def register(spark) -> None:
 # streaming source: subscribe to an array's fragment commits
 # ---------------------------------------------------------------------------
 
-def mf_read(uri):
-    from .. import manifest as mf
-
-    return mf.read_manifest(uri).fragments
-
-
 @dataclass
 class _FragStreamSplit(InputPartition):
     file_paths: tuple
@@ -1218,7 +1212,9 @@ class TileDBStreamReader(DataSourceStreamReader):
         # in a separate runner process and exposes no ReadLimit plumb,
         # so per-trigger backpressure cannot be anchored (verified
         # empirically); bound ingest by committing bounded fragments
-        frags = mf_read(self.uri)
+        from .. import manifest as mf
+
+        frags = mf.read_manifest(self.uri).fragments
         # offsets are identity-bearing: position PLUS the name of the
         # fragment at that position, so a consolidate that shrinks the
         # list and later commits that grow it back past the checkpoint

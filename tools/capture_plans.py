@@ -4,16 +4,14 @@ Usage: python tools/capture_plans.py <outdir> [suffix] [q1,q2,...]
 
 Writes <outdir>/<query>_<suffix>.txt for each query (default suffix
 "before", default query set = bench.BENCH_QUERIES).  Mostly
-planning-only — fixture arrays are built if missing; under the
-default ``persist`` materialization mode (operators/_mat.py) no jobs
-run at capture time and the materialized tables appear as
+planning-only — fixture arrays are built if missing; materialization
+(operators/_mat.py) persists lazily, so no jobs run at capture time
+and the materialized tables appear as
 ``InMemoryTableScan``/``InMemoryRelation`` nodes with their full
 (recomputable) lineage printed beneath.  ``fuzzy_text_join`` still
 eagerly localCheckpoints its pair list, so source_similarity executes
 its upstream stages during construction (plan truncated at a
-``Scan ExistingRDD``).  SPARK_GRAFT_MATERIALIZE=ckpt reproduces the
-r14 eager-checkpoint captures; =off captures the full
-pre-materialization lineage.
+``Scan ExistingRDD``).
 """
 from __future__ import annotations
 
