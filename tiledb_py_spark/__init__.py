@@ -91,3 +91,8 @@ __all__ = [
     "nan_safe_equal", "object_type", "open", "open_dataframe", "remove",
     "save", "schema_like", "vacuum", "version", "walk",
 ]
+
+# last, so the freeze covers this package's whole import-time heap
+from ._worker import prepare as _prepare_worker
+
+_prepare_worker()

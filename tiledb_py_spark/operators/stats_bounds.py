@@ -70,7 +70,8 @@ def column_chunk_minmax(rg, column: str):
     """Raw ``(min, max)`` statistics for ``column`` in one row-group
     footer (pyarrow ``RowGroupMetaData``), or ``None`` when the column
     is absent or carries no min/max.  Shared by the driver-side bounds
-    derivation here and the LWW component slicer
+    derivation here, the LWW component slicer and the per-slice
+    row-group filter of the LWW group reader
     (``sources/spark_datasource.py``) so the footer walk cannot drift."""
     for j in range(rg.num_columns):
         cc = rg.column(j)
