@@ -1126,13 +1126,11 @@ def q_funnel_by_cohort(spark, sf_dir):
 
 def q_ewma(spark, sf_dir):
     """Per-user event-time EWMA (alpha=0.3): one entity-key shuffle,
-    the recurrence via the default Arrow path (pandas' C ``ewm``
-    kernel per partition — the scale-safe impl; see ewma docstring).
-    The oracle replays the recurrence as a recursive CTE over
-    row_number; pandas' weighted-average formulation agrees with the
-    CTE's multiply-add to well inside the 4-dp rounding + checker
-    tolerance (and ``impl="expr"`` reproduces the CTE order exactly —
-    pytest-pinned equivalence between the two impls)."""
+    then pandas' C ``ewm`` kernel per partition (see the ewma
+    docstring).  The oracle replays the recurrence as a recursive CTE
+    over row_number; pandas' weighted-average formulation agrees with
+    the CTE's multiply-add to well inside the 4-dp rounding + checker
+    tolerance."""
     from tiledb_py_spark.streaming.events import ewma
 
     e = _events(spark, sf_dir)
@@ -1957,7 +1955,7 @@ def q_repetition_stats(spark, sf_dir):
     fraction (pseudo-lines injected every 8 tokens so the line stats are
     non-trivial on the single-line corpus), top-{2,3}-gram char
     coverage, and positionally-masked dup-{5,10}-gram char coverage —
-    all row-local array expressions; the oracle replays the identical
+    one row-local Arrow-batched UDF; the oracle replays the identical
     accounting with unnest + window SQL."""
     from tiledb_py_spark.operators.text import repetition_stats
 
@@ -2126,9 +2124,11 @@ def q_leakage_split(spark, sf_dir):
 
 def q_attribution(spark, sf_dir):
     """First/last-touch attribution (view/click -> purchase, 1-day
-    lookback): one entity-key Exchange, two frame-sharing RANGE window
-    aggregates over a portable zero-padded (ts_us, id) string key, no
-    join.  The oracle replays the identical frame and key packing."""
+    lookback): one entity-key Exchange, then two ``searchsorted``
+    probes per conversion into the user's sorted touches, no join.
+    The oracle answers the same question with two frame-sharing RANGE
+    window min/max aggregates over a zero-padded (ts_us, id) string
+    key."""
     from tiledb_py_spark.streaming.events import attribution
 
     e = _events(spark, sf_dir)
@@ -5038,7 +5038,7 @@ def oracle_sql() -> dict[str, str]:
                      CASE WHEN event_type <> 'purchase'
                           THEN lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
                                || ':' ||
-                               lpad(CAST(event_id AS VARCHAR), 12, '0')
+                               lpad(CAST(event_id AS VARCHAR), 20, '0')
                      END AS tkey
               FROM events
               WHERE event_type IN ('view', 'click', 'purchase')
@@ -5053,8 +5053,8 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT user_id, event_id AS conversion_id,
                    ts AS conversion_ts,
-                   CAST(substr(f, 22, 12) AS BIGINT) AS first_touch_id,
-                   CAST(substr(l, 22, 12) AS BIGINT) AS last_touch_id
+                   CAST(substr(f, 22, 20) AS BIGINT) AS first_touch_id,
+                   CAST(substr(l, 22, 20) AS BIGINT) AS last_touch_id
             FROM w WHERE event_type = 'purchase' AND f IS NOT NULL
             ORDER BY user_id, conversion_id
         """,

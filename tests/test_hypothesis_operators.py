@@ -25,23 +25,25 @@ _SETTINGS = dict(max_examples=15, deadline=None,
 @given(docs=corpus)
 @settings(**_SETTINGS)
 def test_repetition_stats_invariants(spark, docs):
-    """All fractions in [0,1]; dup-gram coverage monotone in n (a
-    duplicated 5-gram contains duplicated... no — but coverage is
-    bounded by 1 and 0 for docs shorter than n); arrow == expr."""
+    """All fractions in [0,1]; dup-gram coverage is 0 for docs shorter
+    than n or without repeated tokens; every column equals the
+    mask-based reference model."""
+    from reference_models import repetition_stats_model
+
     from tiledb_py_spark.operators.text import repetition_stats
 
     df = spark.createDataFrame(list(enumerate(docs)), ["doc_id", "text"])
     a = {r.doc_id: r.asDict() for r in
-         repetition_stats(df, "text", top_ns=(2,), dup_ns=(3,),
-                          impl="arrow").collect()}
-    e = {r.doc_id: r.asDict() for r in
-         repetition_stats(df, "text", top_ns=(2,), dup_ns=(3,),
-                          impl="expr").collect()}
+         repetition_stats(df, "text", top_ns=(2,), dup_ns=(3,)).collect()}
     for i, d in enumerate(docs):
-        for col, v in a[i].items():
+        e = repetition_stats_model(d, top_ns=(2,), dup_ns=(3,))
+        for col, w in e.items():
+            v = a[i][col]
             if col.endswith("frac"):
                 assert 0.0 <= v <= 1.0, (col, d)
-                assert v == pytest.approx(e[i][col]), (col, d)
+                assert v == pytest.approx(w), (col, d)
+            else:
+                assert v == w, (col, d)
         toks = d.split()
         if len(toks) < 3:
             assert a[i]["r_dup3gram_char_frac"] == 0.0

@@ -3,6 +3,7 @@
 Oracles are plain-Python recomputations on tiny inputs.
 """
 
+import contextlib
 import math
 
 import numpy as np
@@ -1012,19 +1013,31 @@ def test_deterministic_shuffle_is_seeded_permutation(spark):
 
 def test_ivf_assign_arrow_matches_expr(spark):
     """Arrow (matmul) and expression (codegen) cell assignment agree on
-    both metrics — the arrow path must be a pure implementation swap."""
-    from tiledb_py_spark.operators.similarity import IVFIndex
+    both metrics, at a cell count on each side of ``_EXPR_MAX_CELLS`` —
+    the arrow path must be a pure implementation swap.  ``assign``
+    takes the expression up to that many cells and Arrow above."""
+    from tiledb_py_spark.operators.similarity import (_EXPR_MAX_CELLS,
+                                                      IVFIndex)
+
+    def cells(d):
+        return {r.vec_id: r["__cell"] for r in d.collect()}
 
     rng = np.random.RandomState(9)
     rows = [(i, rng.randn(16).tolist()) for i in range(300)]
     df = spark.createDataFrame(rows, ["vec_id", "v"])
-    for metric in ("cosine", "l2"):
-        idx = IVFIndex(n_cells=8, n_probe=2, metric=metric).fit(df, "v")
-        a = {r.vec_id: r["__cell"]
-             for r in idx.assign(df, "v", impl="expr").collect()}
-        b = {r.vec_id: r["__cell"]
-             for r in idx.assign(df, "v", impl="arrow").collect()}
-        assert a == b, metric
+    for n_cells in (8, _EXPR_MAX_CELLS + 8):
+        for metric in ("cosine", "l2"):
+            idx = IVFIndex(n_cells=n_cells, n_probe=2,
+                           metric=metric).fit(df, "v")
+            a = cells(df.withColumn("__cell", idx._cell_expr(F.col("v"))))
+            b = cells(df.withColumn("__cell",
+                                    idx._cell_arrow_udf()(F.col("v"))))
+            assert a == b, (n_cells, metric)
+            assigned = idx.assign(df, "v")
+            plan = assigned._jdf.queryExecution().executedPlan().toString()
+            assert ("ArrowEvalPython" in plan) \
+                == (n_cells > _EXPR_MAX_CELLS), (n_cells, plan)
+            assert cells(assigned) == a, (n_cells, metric)
 
 
 def test_repeated_ngram_stats(spark):
@@ -2074,8 +2087,11 @@ def test_pq_index_l2_metric_ordering(spark):
 
 
 def test_repetition_stats_arrow_equals_expr(spark):
-    """The Arrow fast path and the pure-Catalyst expression path must
-    produce identical signals on mixed content (incl. empty docs)."""
+    """The Arrow kernel equals the mask-based reference model on mixed
+    content (incl. empty docs)."""
+    from reference_models import (assert_rows_match_model,
+                                  repetition_stats_model)
+
     docs = [
         (1, "a b a b a b c d"),
         (2, "x y z\nx y z\nq r s"),
@@ -2089,16 +2105,9 @@ def test_repetition_stats_arrow_equals_expr(spark):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     kw = dict(top_ns=(2, 3), dup_ns=(3, 5))
     a = {r.doc_id: r.asDict() for r in
-         repetition_stats(df, "text", impl="arrow", **kw).collect()}
-    e = {r.doc_id: r.asDict() for r in
-         repetition_stats(df, "text", impl="expr", **kw).collect()}
-    assert set(a) == set(e)
-    for k in a:
-        for col in a[k]:
-            if isinstance(a[k][col], float):
-                assert a[k][col] == pytest.approx(e[k][col]), (k, col)
-            else:
-                assert a[k][col] == e[k][col], (k, col)
+         repetition_stats(df, "text", **kw).collect()}
+    assert_rows_match_model(
+        a, {k: repetition_stats_model(t, **kw) for k, t in docs})
 
 
 def test_bpe_train_matches_sennrich_example(spark):
@@ -2251,27 +2260,24 @@ def test_temperature_mix_alpha_shapes(spark):
 
 
 def test_review_fixes_round6(spark, tmp_path):
-    """Round-6 review fixes: untrimmed line accounting parity, NULL
+    """Round-6 review fixes: untrimmed line accounting, NULL
     stratum rates, NULL clean_lines passthrough, literal line_sep,
     memoized BPE encode equivalence."""
     from tiledb_py_spark.operators.pipeline import temperature_mix
     from tiledb_py_spark.operators.text import clean_lines, repetition_stats
 
-    # (1) arrow/expr parity on whitespace-padded lines
+    # (1) whitespace-padded lines stay untrimmed: "a b " != " a b"
     df = spark.createDataFrame([(1, "a b \n a b"), (2, "x|y")],
                                ["doc_id", "text"])
-    for impl in ("arrow", "expr"):
-        r = {x.doc_id: x for x in
-             repetition_stats(df, "text", impl=impl,
-                              top_ns=(), dup_ns=()).collect()}
-        assert r[1].r_dup_line_frac == pytest.approx(0.0), impl
-        assert r[1].r_n_lines == 2, impl
+    r = {x.doc_id: x for x in
+         repetition_stats(df, "text", top_ns=(), dup_ns=()).collect()}
+    assert r[1].r_dup_line_frac == pytest.approx(0.0)
+    assert r[1].r_n_lines == 2
     # (2) literal '|' separator must not regex-split everywhere
-    for impl in ("arrow", "expr"):
-        r = {x.doc_id: x for x in
-             repetition_stats(df, "text", line_sep="|", impl=impl,
-                              top_ns=(), dup_ns=()).collect()}
-        assert r[2].r_n_lines == 2, impl
+    r = {x.doc_id: x for x in
+         repetition_stats(df, "text", line_sep="|",
+                          top_ns=(), dup_ns=()).collect()}
+    assert r[2].r_n_lines == 2
     # (3) NULL stratum carries its own temperature rate
     rows = ([(i, "big") for i in range(90)]
             + [(90 + i, None) for i in range(10)])
@@ -4134,10 +4140,12 @@ def test_compact_state_preserves_incremental_answers(spark, tmp_path):
 
 
 def test_ewma_arrow_equals_expr(spark):
-    """The Arrow (pandas ewm) scale path and the pure-Catalyst fold
-    produce identical EWMA rows — nulls (leading, interior, trailing),
-    ties broken by event_id, and multi-entity grouping included."""
+    """The Arrow (pandas ewm) path equals the plain-Python recurrence
+    model — nulls (leading, interior, trailing), ties broken by
+    event_id, and multi-entity grouping included."""
     import datetime as _dt
+
+    from reference_models import ewma_model
 
     from tiledb_py_spark.streaming.events import ewma
 
@@ -4154,9 +4162,10 @@ def test_ewma_arrow_equals_expr(spark):
 
     key = lambda r: (r.user_id, r.event_id)
     a = {key(r): (r.ewma, r.value) for r in
-         ewma(df, "value", impl="arrow").collect()}
-    e = {key(r): (r.ewma, r.value) for r in
-         ewma(df, "value", impl="expr").collect()}
+         ewma(df, "value").collect()}
+    model = ewma_model([(u, ts, eid, v) for u, eid, ts, v in rows],
+                       alpha=0.3)
+    e = {(u, eid): (model[u, eid], v) for u, eid, _ts, v in rows}
     assert a == e
     assert len(a) == len(rows)
     # leading nulls stay null (not NaN) through the Arrow round-trip
@@ -4721,8 +4730,10 @@ def test_ewma_arrow_carry_across_arrow_batches(spark):
     """The partition-wise Arrow EWMA continues an entity's recurrence
     across Arrow batch boundaries via the carried seed row: with
     2-row batches every entity spans batches, and the result must
-    equal the pure-Catalyst fold (impl='expr') exactly — nulls at the
-    boundary included."""
+    equal the plain-Python recurrence model — nulls at the boundary
+    included."""
+    from reference_models import ewma_model
+
     from tiledb_py_spark.streaming.events import ewma
 
     rows = []
@@ -4746,8 +4757,8 @@ def test_ewma_arrow_carry_across_arrow_batches(spark):
         else:
             spark.conf.set(
                 "spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    want = {(r.user_id, r.event_id): r.ewma
-            for r in ewma(df, "value", alpha=0.3, impl="expr").collect()}
+    want = ewma_model([(u, ts, eid, v) for u, eid, ts, v in rows],
+                      alpha=0.3)
     assert set(got) == set(want)
     for k in want:
         a, b = got[k], want[k]
@@ -4809,7 +4820,9 @@ def test_leakage_safe_split_properties(spark):
 def test_ewma_null_entity_key(spark):
     """A NULL entity key is a group like any other (pandas groupby
     dropna=False): the Arrow path must neither crash nor drop the
-    rows, and must match the Catalyst fold."""
+    rows, and must match the plain-Python recurrence model."""
+    from reference_models import ewma_model
+
     from tiledb_py_spark.streaming.events import ewma
 
     rows = [(1, 1, 1.0, 10.0), (None, 2, 2.0, 20.0),
@@ -4818,9 +4831,9 @@ def test_ewma_null_entity_key(spark):
         rows, "user_id long, event_id long, ts double, value double")
     got = {r.event_id: r.ewma
            for r in ewma(df, "value", alpha=0.5, ts_col="ts").collect()}
-    want = {r.event_id: r.ewma
-            for r in ewma(df, "value", alpha=0.5, ts_col="ts",
-                          impl="expr").collect()}
+    want = {eid: w for (_u, eid), w in
+            ewma_model([(u, ts, eid, v) for u, eid, ts, v in rows],
+                       alpha=0.5).items()}
     assert got == want
     assert got[3] == 0.5 * 40.0 + 0.5 * 20.0  # null-key group smoothed
 
@@ -4889,18 +4902,16 @@ def test_attribution_plan_one_exchange(spark):
         rows, "user_id long, event_id long, event_type string, ts string") \
         .selectExpr("user_id", "event_id", "event_type",
                     "cast(ts as timestamp) ts")
-    plan = attribution(df, ["view"], "purchase", impl="window") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
-    assert plan.count("Window") == 1, plan  # min+max share one frame
     aplan = attribution(df, ["view"], "purchase")._jdf.queryExecution() \
         .executedPlan().toString()
-    assert aplan.count("Exchange") == 1, aplan  # arrow default: one too
+    assert aplan.count("Exchange") == 1, aplan
 
 
 def test_attribution_impls_agree(spark):
-    """The arrow searchsorted path and the SQL window reference must
-    return identical rows, same-microsecond ties included."""
+    """The searchsorted path returns the brute-force model's rows,
+    same-microsecond ties included."""
+    from reference_models import attribution_events, attribution_model
+
     from tiledb_py_spark.streaming.events import attribution
 
     import random
@@ -4918,16 +4929,19 @@ def test_attribution_impls_agree(spark):
                     "cast(ts as timestamp) ts")
     kw = dict(touch_types=["view", "click"], conversion_type="purchase",
               lookback="1 minute")
-    a = {tuple(r) for r in attribution(df, impl="arrow", **kw).collect()}
-    w = {tuple(r) for r in attribution(df, impl="window", **kw).collect()}
+    a = {tuple(r) for r in attribution(df, **kw).collect()}
+    w = attribution_model(attribution_events(df), kw["touch_types"],
+                          kw["conversion_type"], 60_000_000)
     assert a == w and len(a) > 10
 
 
 def test_attribution_arrow_carry_across_batches(spark):
     """2-row Arrow batches force every entity across batch boundaries:
     the carried touch window must keep the arrow path identical to the
-    SQL window reference."""
+    brute-force model."""
     import random
+
+    from reference_models import attribution_events, attribution_model
 
     from tiledb_py_spark.streaming.events import attribution
 
@@ -4946,12 +4960,103 @@ def test_attribution_arrow_carry_across_batches(spark):
                          None)
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
-        a = {tuple(r) for r in attribution(df, impl="arrow", **kw).collect()}
+        a = {tuple(r) for r in attribution(df, **kw).collect()}
     finally:
         if old is None:
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
         else:
             spark.conf.set(
                 "spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    w = {tuple(r) for r in attribution(df, impl="window", **kw).collect()}
+    w = attribution_model(attribution_events(df), kw["touch_types"],
+                          kw["conversion_type"], 60_000_000)
     assert a == w and len(a) > 5
+
+
+@contextlib.contextmanager
+def _conf(spark, key, value):
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("by", [None, []])
+def test_ewma_empty_entity_key_is_one_series(spark, by):
+    """``by=None``/``[]`` smooths every row as one global series (in
+    one partition, across 2-row Arrow batches), matching the recurrence
+    model under a single key; no key column comes back."""
+    from reference_models import ewma_model
+
+    from tiledb_py_spark.streaming.events import ewma
+
+    rows = [(i % 3, i, float(i // 2), None if i % 4 == 1 else float(i))
+            for i in range(12)]
+    df = spark.createDataFrame(
+        rows, "user_id long, event_id long, ts double, value double")
+    with _conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", "2"):
+        out = ewma(df, "value", by=by, ts_col="ts", alpha=0.4)
+        got = {r.event_id: r.ewma for r in out.collect()}
+    assert out.columns == ["ts", "event_id", "value", "ewma"]
+    want = {eid: w for (_k, eid), w in
+            ewma_model([(0, ts, eid, v) for _u, eid, ts, v in rows],
+                       alpha=0.4).items()}
+    assert set(got) == set(want)
+    for k in want:
+        assert abs(got[k] - want[k]) < 1e-12, (k, got[k], want[k])
+
+
+@pytest.mark.parametrize("by", [None, []])
+def test_attribution_empty_entity_key_is_one_series(spark, by):
+    """``by=None``/``[]`` attributes over all rows as one entity:
+    touches of any user attribute any later conversion, matching the
+    brute-force model under a single key."""
+    import random
+
+    from reference_models import attribution_events, attribution_model
+
+    from tiledb_py_spark.streaming.events import attribution
+
+    rnd = random.Random(5)
+    rows = [(rnd.randrange(4), i,
+             rnd.choice(["view", "click", "purchase"]),
+             f"2024-01-01 00:{rnd.randrange(10):02d}:{rnd.randrange(60):02d}")
+            for i in range(120)]
+    df = spark.createDataFrame(
+        rows, "user_id long, event_id long, event_type string, ts string") \
+        .selectExpr("user_id", "event_id", "event_type",
+                    "cast(ts as timestamp) ts")
+    kw = dict(touch_types=["view", "click"], conversion_type="purchase",
+              lookback="1 minute")
+    with _conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", "2"):
+        out = attribution(df, by=by, **kw)
+        got = {tuple(r) for r in out.collect()}
+    assert out.columns == ["conversion_id", "conversion_ts",
+                           "first_touch_id", "last_touch_id"]
+    want = attribution_model(attribution_events(df, by=()),
+                             kw["touch_types"], kw["conversion_type"],
+                             60_000_000)
+    assert got == want and len(got) > 10
+
+
+def test_attribution_rejects_bad_lookback(spark):
+    """A lookback outside ``"<int> second|minute|hour|day[s]"`` raises a
+    ValueError naming the accepted form; accepted spellings still
+    build."""
+    from tiledb_py_spark.streaming.events import attribution
+
+    df = spark.createDataFrame(
+        [(1, 1, "view", "2024-01-01 00:00:00")],
+        "user_id long, event_id long, event_type string, ts string") \
+        .selectExpr("user_id", "event_id", "event_type",
+                    "cast(ts as timestamp) ts")
+    for bad in ("1 week", "90min", "1.5 hours", "-1 day", "day", ""):
+        with pytest.raises(ValueError,
+                           match=r"<int> second\|minute\|hour\|day\[s\]"):
+            attribution(df, ["view"], "purchase", lookback=bad)
+    for good in ("1 day", "2 days", "30 second", " 90  minutes "):
+        attribution(df, ["view"], "purchase", lookback=good)

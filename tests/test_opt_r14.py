@@ -53,8 +53,8 @@ def test_rep_stats_kernel_matches_string_form():
     reproduce the original joined-string formulation exactly — every
     count and char size is the same integer, so each emitted float is
     bit-identical.  Brute-force reference replayed here; no Spark
-    needed (the Arrow-vs-expr equivalence tests cover the UDF plumbing
-    separately)."""
+    needed (the reference-model tests of ``repetition_stats`` cover the
+    UDF plumbing separately)."""
     import re
     from collections import Counter
 

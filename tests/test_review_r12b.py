@@ -1,7 +1,7 @@
 """Round-12 review fixes, batch 3: events.py Arrow carry paths
-(NaN keys, per-group prune, wide-span fallback), window-impl id
-truncation, NaN-std guard, idempotent stream sink, asof NULL times,
-and group handle/delete state hygiene."""
+(NaN keys, per-group prune, wide-span fallback), >12-digit attribution
+ids, NaN-std guard, idempotent stream sink, asof NULL times, and group
+handle/delete state hygiene."""
 
 import contextlib
 
@@ -30,6 +30,8 @@ def test_ewma_null_key_across_arrow_batches(spark):
     """A NULL entity key spans 2-row Arrow batches: the carry-key
     equality must treat NaN == NaN (pandas delivers NULL bigint keys
     as float64 NaN), or the recurrence silently restarts mid-series."""
+    from reference_models import ewma_model
+
     from tiledb_py_spark.streaming.events import ewma
 
     rows = []
@@ -40,12 +42,12 @@ def test_ewma_null_key_across_arrow_batches(spark):
         rows, "user_id long, event_id long, ts string, value double") \
         .selectExpr("user_id", "event_id", "cast(ts as timestamp) ts",
                     "value")
-    want = {r.event_id: r.ewma
-            for r in ewma(df, "value", alpha=0.3, impl="expr").collect()}
+    want = {eid: w for (_u, eid), w in
+            ewma_model([(u, ts, eid, v) for u, eid, ts, v in rows],
+                       alpha=0.3).items()}
     with _conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", "2"):
         got = {r.event_id: r.ewma
-               for r in ewma(df, "value", alpha=0.3,
-                             impl="arrow").collect()}
+               for r in ewma(df, "value", alpha=0.3).collect()}
     assert set(got) == set(want)
     for k in want:
         assert abs(got[k] - want[k]) < 1e-12, (k, got[k], want[k])
@@ -60,6 +62,14 @@ def _attr_df(spark, rows):
         rows, "user_id long, event_id long, event_type string, ts string") \
         .selectExpr("user_id", "event_id", "event_type",
                     "cast(ts as timestamp) ts")
+
+
+def _attr_model(df):
+    from reference_models import attribution_events, attribution_model
+
+    return attribution_model(attribution_events(df),
+                             _ATTR_KW["touch_types"],
+                             _ATTR_KW["conversion_type"], 60_000_000)
 
 
 def test_attribution_carry_prunes_per_group_not_batch_global(spark):
@@ -77,13 +87,12 @@ def test_attribution_carry_prunes_per_group_not_batch_global(spark):
         (9, 5, "purchase", "2024-01-01 00:00:30"),
     ]
     df = _attr_df(spark, rows)
-    want = {tuple(r) for r in
-            attribution(df, impl="window", **_ATTR_KW).collect()}
+    want = _attr_model(df)
     with _conf(spark, "spark.sql.shuffle.partitions", "1"), \
             _conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch",
                   "2"):
         got = {tuple(r) for r in
-               attribution(df, impl="arrow", **_ATTR_KW).collect()}
+               attribution(df, **_ATTR_KW).collect()}
     assert got == want
     assert any(r[1] == 5 for r in got)   # user 9's conversion attributed
 
@@ -98,13 +107,12 @@ def test_attribution_null_key_across_batches(spark):
     rows.append((None, 9, "purchase", "2024-01-01 00:00:20"))
     rows.append((3, 10, "view", "2024-01-01 00:05:00"))
     df = _attr_df(spark, rows)
-    want = {tuple(r) for r in
-            attribution(df, impl="window", **_ATTR_KW).collect()}
+    want = _attr_model(df)
     with _conf(spark, "spark.sql.shuffle.partitions", "1"), \
             _conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch",
                   "2"):
         got = {tuple(r) for r in
-               attribution(df, impl="arrow", **_ATTR_KW).collect()}
+               attribution(df, **_ATTR_KW).collect()}
     assert got == want and len(got) == 1
 
 
@@ -130,20 +138,23 @@ def test_attribution_wide_span_fallback_keeps_carry(spark):
             .get(u, "2024-01-01 00:20:00")
         rows.append((u, 2000 + u, "view", ts))
     df = _attr_df(spark, rows)
-    want = {tuple(r) for r in
-            attribution(df, impl="window", **_ATTR_KW).collect()}
+    want = _attr_model(df)
     with _conf(spark, "spark.sql.shuffle.partitions", "1"), \
             _conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch",
                   "300"):
         got = {tuple(r) for r in
-               attribution(df, impl="arrow", **_ATTR_KW).collect()}
+               attribution(df, **_ATTR_KW).collect()}
     assert got == want
     assert any(r[1] == 2 for r in got)   # carried view attributed
 
 
 def test_attribution_window_impl_large_ids(spark):
-    """Snowflake-scale (>12 digit) event ids survive the window impl's
-    composite key (lpad TRUNCATES beyond the pad width)."""
+    """Snowflake-scale (>12 digit) event ids come back whole, from the
+    operator and from the DuckDB oracle's window form, whose composite
+    (ts_us, id) string key truncated them at a 12-char lpad."""
+    import duckdb
+
+    import __spark_entry__ as entry
     from tiledb_py_spark.streaming.events import attribution
 
     base = 7_000_000_000_000_000_00   # 18 digits
@@ -151,12 +162,19 @@ def test_attribution_window_impl_large_ids(spark):
             (1, base + 2, "click", "2024-01-01 00:00:05"),
             (1, base + 9, "purchase", "2024-01-01 00:00:30")]
     df = _attr_df(spark, rows)
-    out = attribution(df, impl="window", **_ATTR_KW).collect()
+    out = attribution(df, **_ATTR_KW).collect()
     assert len(out) == 1
     assert out[0].first_touch_id == base + 1
     assert out[0].last_touch_id == base + 2
-    arrow = attribution(df, impl="arrow", **_ATTR_KW).collect()
-    assert {tuple(r) for r in arrow} == {tuple(r) for r in out}
+    assert {tuple(r) for r in out} == _attr_model(df)
+    events = pd.DataFrame(rows, columns=["user_id", "event_id",
+                                         "event_type", "ts"]) \
+        .astype({"ts": "datetime64[us]"})
+    con = duckdb.connect()
+    con.register("events", events)
+    oracle = con.execute(entry.oracle_sql()["attribution"]).fetchall()
+    assert [(r[1], r[3], r[4]) for r in oracle] \
+        == [(base + 9, base + 1, base + 2)]
 
 
 def test_rolling_anomaly_min_periods_one_no_nan_flags(spark):
@@ -327,23 +345,26 @@ def test_exact_dedup_normalize_without_id_col(spark):
 
 
 def test_repetition_stats_impls_agree_on_unicode_whitespace(spark):
-    """The Python (arrow) path mirrors the expr path's JAVA-regex
-    semantics: ASCII-only \\s+, space-only line trim — Unicode
-    whitespace and tab-only lines scored differently before."""
+    """Spark's JAVA-regex semantics, checked against the reference
+    model: ASCII-only \\s+ (NBSP and U+2028 stay inside a token),
+    space-only line trim (a tab-only line counts), NULL text scores as
+    an empty document."""
+    from reference_models import (assert_rows_match_model,
+                                  repetition_stats_model)
+
     from tiledb_py_spark.operators.text import repetition_stats
 
     docs = [(1, "real line one two\n  \t  \nreal line one two"),
             (2, "foo bar foo bar plain words here\n"),
-            (3, None)]
+            (3, None),
+            (4, "a\u2028b c")]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    cols = ["doc_id", "r_n_lines", "r_dup_line_frac",
-            "r_top2gram_char_frac", "r_dup5gram_positions"]
-    a = {r.doc_id: tuple(r)[1:] for r in
-         repetition_stats(df, "text", impl="arrow").select(cols).collect()}
-    e = {r.doc_id: tuple(r)[1:] for r in
-         repetition_stats(df, "text", impl="expr").select(cols).collect()}
-    assert a == e
-    assert a[1][0] == 3              # the tab-only line IS a line
+    a = {r.doc_id: r.asDict() for r in
+         repetition_stats(df, "text").collect()}
+    assert_rows_match_model(
+        a, {k: repetition_stats_model(t) for k, t in docs})
+    assert a[1]["r_n_lines"] == 3             # the tab-only line IS a line
+    assert a[4]["r_top2gram_char_frac"] == 1.0   # 2 tokens, not 3
 
 
 def test_minhash_band_geometry_validated(spark):

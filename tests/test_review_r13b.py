@@ -257,18 +257,22 @@ def test_ivf_l2_metric_final_ranking(spark):
 
 
 def test_ivf_arrow_assign_ragged_vector(spark):
-    """One wrong-length/empty vector in the Arrow assign path maps to a
-    null cell (the expr path's behavior) instead of crashing the
-    stage."""
-    from tiledb_py_spark.operators.similarity import IVFIndex
+    """One wrong-length/empty vector in the Arrow assign path (taken
+    above ``_EXPR_MAX_CELLS`` cells) maps to a null cell (the expr
+    path's behavior) instead of crashing the stage."""
+    from tiledb_py_spark.operators.similarity import (_EXPR_MAX_CELLS,
+                                                      IVFIndex)
 
     rng = np.random.RandomState(3)
     good = [(i, rng.randn(4).tolist()) for i in range(200)]
     df = spark.createDataFrame(good + [(900, [1.0]), (901, [])],
                                "vec_id long, v array<double>")
-    idx = IVFIndex(n_cells=4, n_probe=2).fit(
+    idx = IVFIndex(n_cells=_EXPR_MAX_CELLS + 8, n_probe=2).fit(
         df.filter(F.col("vec_id") < 500), "v")
-    out = idx.assign(df, "v", impl="arrow").collect()
+    assigned = idx.assign(df, "v")
+    plan = assigned._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" in plan, plan
+    out = assigned.collect()
     cells = {r.vec_id: r["__cell"] for r in out}
     assert cells[900] is None and cells[901] is None
     assert all(cells[i] is not None for i in range(200))

@@ -255,10 +255,11 @@ def test_stream_neardup_within_watermark(spark, tmp_path):
 
 
 def test_stateless_quality_ops_run_on_streams(spark, tmp_path):
-    """The round-6 quality/cleaning operators are pure column
-    expressions, so they compose into a readStream unchanged — run
-    clean_lines + repetition_stats(impl='expr') + scrub_text over a
-    file stream and check the sink matches the batch answer."""
+    """The round-6 quality/cleaning operators are row-local (column
+    expressions and an Arrow-batched UDF), so they compose into a
+    readStream unchanged — run clean_lines + repetition_stats +
+    scrub_text over a file stream and check the sink matches the batch
+    answer."""
     from tiledb_py_spark.operators.pipeline import scrub_text
     from tiledb_py_spark.operators.text import clean_lines, repetition_stats
 
@@ -275,8 +276,7 @@ def test_stateless_quality_ops_run_on_streams(spark, tmp_path):
 
     def enrich(df):
         out = clean_lines(df, "text", min_words=3)
-        out = repetition_stats(out, "text", impl="expr",
-                               top_ns=(2,), dup_ns=())
+        out = repetition_stats(out, "text", top_ns=(2,), dup_ns=())
         return out.withColumn("scrubbed", scrub_text("text"))
 
     batch = {r.doc_id: r for r in

@@ -1262,9 +1262,11 @@ def winnow_fingerprints(df: DataFrame, text_col: str, id_col: str,
     matches.  Documents with fewer than ``window`` grams winnow their
     single partial window; docs shorter than ``k`` tokens emit nothing.
 
-    Row-local array machinery (each stage a multi-referenced column,
-    same CollapseProject staging rule as ``text.repetition_stats``);
-    only the selected (8-byte fp, pos, id) rows leave the row.
+    Row-local array machinery, each stage a multi-referenced column:
+    CollapseProject inlines a non-cheap alias referenced once, and
+    inlined inside a higher-order-function lambda it re-evaluates once
+    per element of the outer array.  Only the selected (8-byte fp, pos,
+    id) rows leave the row.
     ``gram_hash`` defaults to xxhash64; pass ``md5_hash60`` for the
     cross-engine-checkable form.  (r14 measured an Arrow/numpy
     sliding-window-min variant — per-doc and batch-flattened — at

@@ -27,6 +27,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: ``IVFIndex.assign`` inlines the nearest-cell expression (cheapest for
+#: small cell counts) up to this many cells; above it, one Arrow-batched
+#: numpy matmul per batch keeps the plan constant-size, where the
+#: unrolled expression grows linearly in n_cells x dim
+_EXPR_MAX_CELLS = 32
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -499,18 +505,14 @@ class IVFIndex:
 
         return cell
 
-    def assign(self, df: DataFrame, vec_col: str,
-               impl: str = "auto") -> DataFrame:
-        """Append ``__cell``.  ``impl``: "expr" = inline codegen expression
-        (cheapest for small cell counts), "arrow" = batched numpy matmul
-        (constant-size plan, wins for large n_cells), "auto" = expr up to
-        32 cells."""
+    def assign(self, df: DataFrame, vec_col: str) -> DataFrame:
+        """Append ``__cell``, the nearest centroid's id: by the inline
+        codegen expression up to ``_EXPR_MAX_CELLS`` cells, by the
+        Arrow-batched numpy matmul above (same ids, ties to the lowest)."""
         assert self.centroids is not None
-        if impl == "auto":
-            impl = "expr" if len(self.centroids) <= 32 else "arrow"
-        if impl == "arrow":
-            return df.withColumn("__cell", self._cell_arrow_udf()(F.col(vec_col)))
-        return df.withColumn("__cell", self._cell_expr(F.col(vec_col)))
+        if len(self.centroids) <= _EXPR_MAX_CELLS:
+            return df.withColumn("__cell", self._cell_expr(F.col(vec_col)))
+        return df.withColumn("__cell", self._cell_arrow_udf()(F.col(vec_col)))
 
     def _probe_cells(self, query_vec: Sequence[float],
                      n_probe: Optional[int] = None) -> list:

@@ -7,10 +7,10 @@ buckets, fingerprints.
 
 Default path is pure ``pyspark.sql.functions`` (whole-stage codegen);
 where an Arrow-batched pandas UDF measured decisively faster it is the
-default with the Catalyst form kept as the pytest-pinned reference
-(``repetition_stats``), and two signals are Python-only by nature
-(``compression_ratio_udf`` — zlib; a model-based language classifier
-would slot in the same way behind the ``language_id`` column contract).
+one implementation (``repetition_stats``), and two signals are
+Python-only by nature (``compression_ratio_udf`` — zlib; a model-based
+language classifier would slot in the same way behind the
+``language_id`` column contract).
 The built-in language-ID heuristic uses stopword-hit ratios against
 small word lists broadcast as literals — the classic n-gram/stopword
 approach, good enough for corpus bucketing.
@@ -210,24 +210,19 @@ def unigram_surprisal(df: DataFrame, text_col: str, id_col: str,
              .withColumnRenamed("__id", id_col))
 
 
-def _sum_lengths(arr: Column) -> Column:
-    return F.aggregate(arr, F.lit(0).cast("long"),
-                       lambda a, x: a + F.length(x))
-
-
 def _rep_stats_py(t, line_sep: str, top_ns, dup_ns) -> dict:
-    """Per-document repetition signals, plain Python — the single
-    definition the Arrow path executes; accounting identical to the
-    expr path (pytest asserts equality)."""
+    """Per-document repetition signals, plain Python — the kernel
+    ``repetition_stats`` runs in its Arrow-batched UDF."""
     from collections import Counter
 
     out: dict = {}
     if t is None:
-        t = ""  # the expr path scores NULL text as an empty document
-    # mirror the expr path's JAVA-regex semantics exactly: \s+ is
-    # ASCII-only there (str.split() breaks on NBSP/U+2028 and would
-    # diverge), and Spark's trim strips only 0x20 (str.strip() would
-    # drop a tab-only line the expr path counts)
+        t = ""  # NULL text scores as an empty document
+    # tokens split on ASCII whitespace only, like Spark's Java-regex
+    # \s in ``whitespace_tokens`` (NBSP and U+2028 stay inside a token;
+    # str.split() would break on them), and a line is empty only when
+    # nothing but spaces (0x20) remain, like Spark's ``trim`` (a
+    # tab-only line counts; str.strip() would drop it)
     import re as _re
 
     toks = [w for w in _re.split(r"\s+", t, flags=_re.ASCII) if w]
@@ -246,8 +241,8 @@ def _rep_stats_py(t, line_sep: str, top_ns, dup_ns) -> dict:
         acc += len(w)
         pref.append(acc)
     chars = max(acc, 1)
-    # line pieces stay UNTRIMMED (matching the expr path and the SQL
-    # oracle); only the emptiness test trims
+    # line pieces stay UNTRIMMED (as in the SQL oracle); only the
+    # emptiness test trims
     lines = [x for x in t.split(line_sep) if x.strip(" ")]
     n_lines = len(lines)
     dlines = set(lines)
@@ -280,52 +275,24 @@ def _rep_stats_py(t, line_sep: str, top_ns, dup_ns) -> dict:
     return out
 
 
-def _repetition_stats_arrow(df: DataFrame, text_col: str, line_sep: str,
-                            top_ns, dup_ns) -> DataFrame:
-    from pyspark.sql.functions import pandas_udf
-
-    fields = (["r_n_lines: long", "r_dup_line_frac: double",
-               "r_dup_line_char_frac: double"]
-              + [f"r_top{n}gram_char_frac: double" for n in top_ns]
-              + sum([[f"r_dup{n}gram_distinct: long",
-                      f"r_dup{n}gram_positions: long",
-                      f"r_dup{n}gram_char_frac: double"] for n in dup_ns],
-                    []))
-    schema = "struct<" + ", ".join(fields) + ">"
-    names = [f.split(":")[0] for f in fields]
-
-    @pandas_udf(schema)
-    def stats(texts: pd.Series) -> pd.DataFrame:
-        rows = [_rep_stats_py(t, line_sep, top_ns, dup_ns) for t in texts]
-        return pd.DataFrame(rows, columns=names)
-
-    from ._par import spread_for_python
-
-    out = spread_for_python(df).withColumn("__r", stats(F.col(text_col)))
-    return (out.withColumns({name: F.col("__r")[name] for name in names})
-               .drop("__r"))
-
-
 def repetition_stats(df: DataFrame, text_col: str,
                      line_sep: str = "\n",
                      top_ns: Sequence[int] = (2, 3),
-                     dup_ns: Sequence[int] = (5, 10),
-                     impl: str = "auto") -> DataFrame:
+                     dup_ns: Sequence[int] = (5, 10)) -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021 §A1.1): the
     document-level repetitiousness signals used to drop boilerplate and
     degenerate text from web corpora.
 
-    ``impl``: "arrow" (default via "auto") computes all signals in one
-    Arrow-batched pandas UDF — tiny constant-size plan, ~4x faster cold
-    (no Janino compile of the big lambda trees) and ~3x warm at sf0.1;
-    "expr" is the pure-Catalyst array-expression path (zero Python, the
-    plan-purity reference both the pytest equivalence check and the
-    DuckDB oracle hold the arrow path to).  Both are row-local: zero
+    All signals come from one Arrow-batched pandas UDF over
+    ``_rep_stats_py`` — a tiny constant-size plan, ~4x faster cold (no
+    Janino compile of big lambda trees) and ~3x warm at sf0.1 than the
+    Catalyst array-expression form it replaced.  Row-local: zero
     shuffles, the operator rides the scan stage.
 
     Appends, per document:
 
-    - ``r_n_lines`` — non-empty lines (split on ``line_sep``)
+    - ``r_n_lines`` — non-empty lines (split on the literal
+      ``line_sep``; a line of only spaces is empty)
     - ``r_dup_line_frac`` — fraction of lines that are repeats of an
       earlier line: ``(n_lines - n_distinct_lines) / n_lines``
     - ``r_dup_line_char_frac`` — fraction of line characters inside
@@ -343,149 +310,36 @@ def repetition_stats(df: DataFrame, text_col: str,
 
     Also emitted per dup-n: ``r_dup{n}gram_distinct`` (distinct grams
     occurring >= 2x) and ``r_dup{n}gram_positions`` (gram start
-    positions belonging to those grams) — useful on their own, and they
-    double-reference the staged arrays (see below).
+    positions belonging to those grams).
 
-    Char accounting is whitespace-normalized: a document's size is the
-    sum of its token lengths (separators excluded), a gram's size the
-    sum of its n tokens' lengths.  Documents shorter than n tokens score
-    0 for that n; empty documents score 0 everywhere.
+    Tokens are maximal runs of non-ASCII-whitespace characters.  Char
+    accounting is whitespace-normalized: a document's size is the sum
+    of its token lengths (separators excluded), a gram's size the sum
+    of its n tokens' lengths.  Documents shorter than n tokens score 0
+    for that n; empty and NULL documents score 0 everywhere."""
+    from pyspark.sql.functions import pandas_udf
 
-    EVERY intermediate array (tokens, lines, grams, sorted grams, dup
-    set, per-position flags) is STAGED as its own column and referenced
-    at least twice downstream.  This is load-bearing, not style: a
-    single-referenced non-cheap alias gets inlined by CollapseProject,
-    and an array expression inlined inside a higher-order-function
-    lambda re-evaluates once PER ELEMENT of the outer array — the
-    un-staged form of the positional mask is O(L * G * D) per row
-    (measured: minutes for one sf0.001 gate run vs ~1 s staged)."""
-    if impl == "auto":
-        impl = "arrow"
-    if impl == "arrow":
-        return _repetition_stats_arrow(df, text_col, line_sep,
-                                       tuple(top_ns), tuple(dup_ns))
-    c = F.col(text_col)
-    df = df.withColumn("__r_toks", whitespace_tokens(c))
-    toks = F.col("__r_toks")
-    L = F.size(toks)
-    tok_chars = _sum_lengths(toks)
-    safe_chars = F.greatest(tok_chars, F.lit(1)).cast("double")
+    from ._par import spread_for_python
 
-    # --- line repetition ---------------------------------------------------
-    # line_sep is a LITERAL separator: escape it for the regex split
-    # (a '|' or '.' separator would otherwise split everywhere)
-    import re as _re
+    top_ns, dup_ns = tuple(top_ns), tuple(dup_ns)
+    fields = (["r_n_lines: long", "r_dup_line_frac: double",
+               "r_dup_line_char_frac: double"]
+              + [f"r_top{n}gram_char_frac: double" for n in top_ns]
+              + sum([[f"r_dup{n}gram_distinct: long",
+                      f"r_dup{n}gram_positions: long",
+                      f"r_dup{n}gram_char_frac: double"] for n in dup_ns],
+                    []))
+    schema = "struct<" + ", ".join(fields) + ">"
+    names = [f.split(":")[0] for f in fields]
 
-    lines_e = F.coalesce(F.filter(F.split(c, _re.escape(line_sep), -1),
-                                  lambda l: F.length(F.trim(l)) > 0),
-                         F.array().cast("array<string>"))
-    df = df.withColumn("__r_lines", lines_e)
-    lines = F.col("__r_lines")
-    dlines = F.array_distinct(lines)
-    n_lines = F.size(lines)
-    safe_lines = F.greatest(n_lines, F.lit(1)).cast("double")
-    line_chars = _sum_lengths(lines)
-    safe_line_chars = F.greatest(line_chars, F.lit(1)).cast("double")
-    df = (df
-          .withColumn("r_n_lines", n_lines.cast("long"))
-          .withColumn("r_dup_line_frac",
-                      (n_lines - F.size(dlines)) / safe_lines)
-          .withColumn("r_dup_line_char_frac",
-                      (line_chars - _sum_lengths(dlines)) / safe_line_chars))
+    @pandas_udf(schema)
+    def stats(texts: pd.Series) -> pd.DataFrame:
+        rows = [_rep_stats_py(t, line_sep, top_ns, dup_ns) for t in texts]
+        return pd.DataFrame(rows, columns=names)
 
-    def grams_expr(n: int) -> Column:
-        # gram string at 1-based start i covers tokens i..i+n-1; its
-        # token-char size is length(gram) - (n-1) separators
-        return F.when(L >= n, F.transform(
-            F.sequence(F.lit(1), L - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-        ).otherwise(F.array().cast("array<string>"))
-
-    # --- top n-gram coverage ----------------------------------------------
-    for n in top_ns:
-        # max over distinct grams of count * token_chars, via one pass
-        # over the sorted gram array (a run's cover peaks at its end, so
-        # taking the max at every step captures it).  The sorted array is
-        # the HOF's array argument — evaluated once per row even inlined.
-        srt = F.array_sort(grams_expr(n))
-        acc0 = F.struct(F.lit(None).cast("string").alias("prev"),
-                        F.lit(0).cast("long").alias("run"),
-                        F.lit(0).cast("long").alias("best"))
-        step = lambda a, g: F.struct(  # noqa: E731
-            g.alias("prev"),
-            F.when(g == a["prev"], a["run"] + 1).otherwise(F.lit(1).cast("long"))
-             .alias("run"),
-            F.greatest(
-                a["best"],
-                (F.when(g == a["prev"], a["run"] + 1)
-                  .otherwise(F.lit(1).cast("long")))
-                * (F.length(g) - F.lit(n - 1))).alias("best"))
-        best = F.aggregate(srt, acc0, step, lambda a: a["best"])
-        # overlapping occurrences can cover a char repeatedly — clamp so
-        # the statistic stays a fraction (degenerate "w w w ..." docs)
-        df = df.withColumn(f"r_top{n}gram_char_frac",
-                           F.least(best / safe_chars, F.lit(1.0)))
-
-    # --- duplicated n-gram coverage (positional interval union) ------------
-    # A token is covered iff it lies inside [p, p+n-1] for some start p
-    # of a within-doc duplicated n-gram.  Formulation: sort (gram, pos)
-    # structs; every position whose gram equals a sorted neighbor is a
-    # duplicated occurrence; the ascending start list then merges into
-    # disjoint intervals in ONE aggregate pass, and each merged
-    # interval's char mass is one bounded token slice.  Per-row cost
-    # O(G log G + covered_span) — the earlier per-token slice+exists
-    # mask was O(L*n) slices with an O(G*D) membership array on top
-    # (measured ~3x slower steady-state and ~2x slower to JIT).
-    for n in dup_ns:
-        gc, pc, dc = (f"__r_g{n}", f"__r_p{n}", f"__r_ds{n}")
-        df = df.withColumn(gc, grams_expr(n))
-        grams = F.col(gc)
-        G = F.size(grams)
-        df = df.withColumn(pc, F.array_sort(F.transform(
-            grams, lambda g, i: F.struct(g.alias("g"),
-                                         (i + 1).alias("p")))))
-        srt = F.col(pc)
-
-        def _g(j):
-            return F.element_at(srt, j)["g"]
-
-        # duplicated occurrences: gram equals the previous or next entry
-        # in gram-sorted order (when() guards keep element_at in range)
-        is_dup = lambda j: (  # noqa: E731
-            F.when(j > 1, _g(j) == _g(j - 1)).otherwise(F.lit(False))
-            | F.when(j < G, _g(j) == _g(j + 1)).otherwise(F.lit(False)))
-        dupstarts = F.array_sort(F.transform(
-            F.filter(F.sequence(F.lit(1), G), is_dup),
-            lambda j: F.element_at(srt, j)["p"]))
-        df = df.withColumn(dc, F.when(G >= 2, dupstarts)
-                           .otherwise(F.array().cast("array<int>")))
-        ds = F.col(dc)
-
-        acc0 = F.struct(F.lit(0).alias("last"),
-                        F.lit(0).cast("long").alias("chars"))
-
-        def step(a, p):
-            lo = F.greatest(p, a["last"] + 1)
-            hi = p + (n - 1)
-            add = F.when(lo <= hi, F.aggregate(
-                F.slice(toks, lo, hi - lo + 1), F.lit(0).cast("long"),
-                lambda s, t: s + F.length(t))).otherwise(F.lit(0).cast("long"))
-            return F.struct(hi.alias("last"), (a["chars"] + add).alias("chars"))
-
-        covered = F.aggregate(ds, acc0, step, lambda a: a["chars"])
-        # distinct duplicated grams: first element of each >= 2 run
-        run_heads = F.when(G >= 2, F.size(F.filter(
-            F.sequence(F.lit(1), F.greatest(G - 1, F.lit(1))),
-            lambda j: (_g(j) == _g(j + 1))
-            & F.when(j > 1, _g(j) != _g(j - 1)).otherwise(F.lit(True))))
-        ).otherwise(F.lit(0))
-        df = (df
-              .withColumn(f"r_dup{n}gram_distinct", run_heads.cast("long"))
-              .withColumn(f"r_dup{n}gram_positions", F.size(ds).cast("long"))
-              .withColumn(f"r_dup{n}gram_char_frac", covered / safe_chars)
-              .drop(gc, pc, dc))
-
-    return df.drop("__r_toks", "__r_lines")
+    out = spread_for_python(df).withColumn("__r", stats(F.col(text_col)))
+    return (out.withColumns({name: F.col("__r")[name] for name in names})
+               .drop("__r"))
 
 
 def clean_lines(df: DataFrame, text_col: str,

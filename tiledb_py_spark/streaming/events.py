@@ -15,6 +15,7 @@ the driver's DuckDB oracle can check the batch equivalent.
 
 from __future__ import annotations
 
+import re
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -195,117 +196,88 @@ def funnel(events: DataFrame, steps, by="user_id", ts_col: str = "ts",
 def ewma(events: DataFrame, value_col: str = "value", by="user_id",
          ts_col: str = "ts", alpha: float = 0.3,
          tiebreak_col: str = "event_id",
-         out_col: str = "ewma", impl: str = "auto") -> DataFrame:
+         out_col: str = "ewma") -> DataFrame:
     """Per-entity exponentially weighted moving average in event-time
     order: ``ewma_1 = x_1``, ``ewma_t = alpha*x_t +
     (1-alpha)*ewma_{t-1}`` — the classic smoothing/anomaly baseline.
-    Returns the input rows plus ``out_col``.
+    Returns one row per input row with the columns ``by``, ``ts_col``,
+    ``tiebreak_col``, ``value_col`` (cast to double) and ``out_col``;
+    other input columns are not carried.  ``by=None`` or ``[]`` smooths
+    all rows as one global series (in one task).
 
-    Scale shape: ONE entity-key shuffle either way.  ``impl="arrow"``
-    (the ``"auto"`` default) runs the recurrence as a per-entity
-    ``applyInPandas`` using pandas' C ``ewm(adjust=False,
-    ignore_na=True)`` kernel — O(n) in the entity's series length, so
-    a HOT entity holding a constant fraction of the stream costs
-    linear work in one task.  ``impl="expr"`` is the pure-Catalyst
-    fold (collect to a sorted array, ``aggregate`` recurrence, explode
-    back): no Python worker hop, but the immutable-array accumulator
-    copies per element — O(n^2) for a single entity's series, fine at
-    typical per-entity cardinality (10-100 events), quadratic-pathological
-    on a skewed feed (measured: the sf1 hot-entity stress with ~20% of
-    1M events on one key finishes in seconds on arrow and does not
-    finish on expr).  Neither a window-sum rewrite (the closed form's
-    ``(1-alpha)^-i`` overflows on long series) nor a Catalyst scan
-    primitive exists, so arrow IS the scale path, not a fallback.
-    Ties on ``ts`` order by ``tiebreak_col``.  Null values propagate
-    the previous EWMA unchanged (the row still carries it)."""
+    Scale shape: ONE entity-key shuffle, then pandas' C
+    ``ewm(adjust=False, ignore_na=True)`` kernel per partition — O(n)
+    in the entity's series length, so a HOT entity holding a constant
+    fraction of the stream costs linear work in one task.  A Catalyst
+    fold (collect to a sorted array, ``aggregate`` recurrence) copies
+    its immutable accumulator per element — O(n^2) per entity, and it
+    did not finish the sf1 hot-entity stress (~20% of 1M events on one
+    key) that this path runs in seconds; a window-sum closed form
+    overflows (``(1-alpha)^-i``) on long series.
+    Ties on ``ts`` order by ``tiebreak_col``.  Null and NaN values
+    propagate the previous EWMA unchanged (the row still carries it;
+    leading ones stay NULL)."""
+    import pandas as pd
+
+    from pyspark.sql import types as T
+
     if not 0 < alpha <= 1:
         raise ValueError("alpha must be in (0, 1]")
-    if impl not in ("auto", "arrow", "expr"):
-        raise ValueError("impl must be auto|arrow|expr")
-    by = [by] if isinstance(by, str) else list(by)
-    if impl in ("auto", "arrow"):
-        import pandas as pd
+    by = [] if by is None else ([by] if isinstance(by, str) else list(by))
+    # no entity key: one global series under a constant key
+    keys = by or ["__g"]
+    if not by:
+        events = events.withColumn("__g", F.lit(0))
+    cols = [*keys, ts_col, tiebreak_col, value_col]
+    # PARTITION-wise, not group-wise: one entity-key Exchange, a
+    # partition-local sort, then pandas' C groupby().ewm() kernel
+    # over each Arrow batch — ONE python call per ~10k-row batch
+    # instead of one per entity (the per-group applyInPandas
+    # variant measured 5.4s at sf0.1 / 1500 entities; this shape
+    # is ~sub-second with identical results).  Entities spanning
+    # Arrow batch boundaries continue via a carried seed row (the
+    # adjust=False recurrence restarts exactly from the previous
+    # smoothed value).
+    proj = events.select(*cols) \
+        .withColumn(value_col, F.col(value_col).cast("double"))
+    proj = (proj.repartition(*[F.col(c) for c in by]) if by
+            else proj.repartition(1))
+    proj = proj.sortWithinPartitions(*by, ts_col, tiebreak_col)
+    schema_out = T.StructType(
+        list(proj.schema.fields)
+        + [T.StructField(out_col, T.DoubleType(), True)])
+    nkeys = len(keys)
 
-        from pyspark.sql import types as T
+    def per_partition(pdfs):
+        carry_key, carry = None, None
+        for pdf in pdfs:
+            if not len(pdf):
+                continue
+            prepended = False
+            if carry is not None:
+                first_key = tuple(pdf.iloc[0][k] for k in keys)
+                if _key_eq(first_key, carry_key):
+                    seed = pdf.iloc[[0]].copy()
+                    seed[value_col] = carry
+                    pdf = pd.concat([seed, pdf], ignore_index=True)
+                    prepended = True
+            # dropna=False: a NULL entity key is a group like any
+            # other (with the default dropna=True the ewm series comes
+            # back SHORTER than pdf and the assignment below raises)
+            s = pdf.groupby(keys, sort=False, dropna=False)[value_col] \
+                .ewm(alpha=alpha, adjust=False, ignore_na=True).mean()
+            pdf[out_col] = s.reset_index(
+                level=list(range(nkeys)), drop=True).to_numpy()
+            if prepended:
+                pdf = pdf.iloc[1:]
+            last = pdf.iloc[-1]
+            carry_key = tuple(last[k] for k in keys)
+            cv = last[out_col]
+            carry = None if pd.isna(cv) else float(cv)
+            yield pdf
 
-        cols = [*by, ts_col, tiebreak_col, value_col]
-        # PARTITION-wise, not group-wise: one entity-key Exchange, a
-        # partition-local sort, then pandas' C groupby().ewm() kernel
-        # over each Arrow batch — ONE python call per ~10k-row batch
-        # instead of one per entity (the per-group applyInPandas
-        # variant measured 5.4s at sf0.1 / 1500 entities; this shape
-        # is ~sub-second with identical results).  Entities spanning
-        # Arrow batch boundaries continue via a carried seed row (the
-        # adjust=False recurrence restarts exactly from the previous
-        # smoothed value).
-        proj = (events.select(*cols)
-                .withColumn(value_col, F.col(value_col).cast("double"))
-                .repartition(*[F.col(c) for c in by])
-                .sortWithinPartitions(*by, ts_col, tiebreak_col))
-        schema_out = T.StructType(
-            list(proj.schema.fields)
-            + [T.StructField(out_col, T.DoubleType(), True)])
-        nby = len(by)
-
-        def per_partition(pdfs):
-            carry_key, carry = None, None
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                prepended = False
-                if carry is not None:
-                    first_key = tuple(pdf.iloc[0][k] for k in by)
-                    if _key_eq(first_key, carry_key):
-                        seed = pdf.iloc[[0]].copy()
-                        seed[value_col] = carry
-                        pdf = pd.concat([seed, pdf], ignore_index=True)
-                        prepended = True
-                # dropna=False: a NULL entity key is a group like any
-                # other (the per-group predecessor processed it; with
-                # the default dropna=True the ewm series comes back
-                # SHORTER than pdf and the assignment below raises)
-                s = pdf.groupby(by, sort=False, dropna=False)[value_col] \
-                    .ewm(alpha=alpha, adjust=False, ignore_na=True).mean()
-                pdf[out_col] = s.reset_index(
-                    level=list(range(nby)), drop=True).to_numpy()
-                if prepended:
-                    pdf = pdf.iloc[1:]
-                last = pdf.iloc[-1]
-                carry_key = tuple(last[k] for k in by)
-                cv = last[out_col]
-                carry = None if pd.isna(cv) else float(cv)
-                yield pdf
-
-        return proj.mapInPandas(per_partition, schema_out)
-
-    evs = F.array_sort(F.collect_list(F.struct(
-        F.col(ts_col).alias("__ts"), F.col(tiebreak_col).alias("__tb"),
-        F.col(value_col).cast("double").alias("__x"))))
-    agg = events.groupBy(*by).agg(evs.alias("__evs"))
-
-    def fold(acc, e):
-        prev = F.when(F.size(acc) > 0, F.element_at(acc, -1))
-        # NaN is MISSING like NULL (the arrow path's pandas ignore_na
-        # semantics) — folding it arithmetically would poison every
-        # later value of the entity with NaN, silently diverging the
-        # two impls
-        miss = e["__x"].isNull() | F.isnan(e["__x"])
-        nxt = F.when(miss, prev) \
-            .when(prev.isNull(), e["__x"]) \
-            .otherwise(F.lit(alpha) * e["__x"]
-                       + F.lit(1.0 - alpha) * prev)
-        return F.concat(acc, F.array(nxt))
-
-    out = agg.withColumn(
-        "__ew", F.aggregate("__evs", F.array().cast("array<double>"), fold))
-    z = F.arrays_zip("__evs", "__ew")
-    out = (out.select(*by, F.explode(z).alias("__z"))
-           .select(*by,
-                   F.col("__z.__evs.__ts").alias(ts_col),
-                   F.col("__z.__evs.__tb").alias(tiebreak_col),
-                   F.col("__z.__evs.__x").alias(value_col),
-                   F.col("__z.__ew").alias(out_col)))
-    return out
+    out = proj.mapInPandas(per_partition, schema_out)
+    return out if by else out.drop("__g")
 
 
 def cohort_retention(events: DataFrame, by="user_id", ts_col: str = "ts",
@@ -394,8 +366,8 @@ def rolling_anomaly(events: DataFrame, value_col: str = "value",
     window aggregates over the same ROWS frame — Spark evaluates them
     in a single ``Window`` operator — then a row-local filter.  Bounded
     O(window) running state per entity — a hot entity costs linear work
-    in its own series, no quadratic fold (contrast the ``impl="expr"``
-    note on :func:`ewma`).  Ties on ``ts`` order by ``tiebreak_col``."""
+    in its own series, no quadratic fold.  Ties on ``ts`` order by
+    ``tiebreak_col``."""
     from pyspark.sql import Window
 
     by = [by] if isinstance(by, str) else list(by)
@@ -584,190 +556,172 @@ def time_resample(events: DataFrame, value_col: str = "value",
 def attribution(events: DataFrame, touch_types, conversion_type: str,
                 lookback: str = "1 day", by="user_id",
                 ts_col: str = "ts", type_col: str = "event_type",
-                id_col: str = "event_id", impl: str = "auto") -> DataFrame:
+                id_col: str = "event_id") -> DataFrame:
     """First- and last-touch attribution: for every CONVERSION event,
     the earliest and the latest preceding TOUCH event of the same
     entity within ``lookback`` (strictly earlier, microsecond
-    granularity — a touch in the same microsecond never attributes).
+    granularity — a touch in the same microsecond never attributes;
+    ties on the microsecond order by ``id_col``).
     Returns one row per attributed conversion: (by..., conversion id,
     conversion ts, first_touch_id, last_touch_id); conversions with no
     in-window touch are dropped (NULL-attribution rows are the
     difference between the two standard marketing-report variants —
-    filter upstream for the other).
+    filter upstream for the other).  ``lookback`` is
+    ``"<int> second|minute|hour|day[s]"``; ``by=None`` or ``[]``
+    attributes over all rows as one entity (in one task).
 
     Scale shape: non-touch non-conversion rows are filtered BEFORE the
-    shuffle; ONE entity-key Exchange either way.  ``impl="arrow"`` (the
-    ``"auto"`` default) answers each conversion with two vectorized
-    ``searchsorted`` probes into the entity's sorted touch array —
-    O(n log n) per entity, skew-safe.  ``impl="window"`` is the
-    pure-SQL reference (two frame-sharing RANGE window aggregates of a
-    zero-padded (ts_us, id) string key — the form the oracle replays),
-    but Spark re-scans non-invertible min/max frames per row, so a hot
-    entity costs O(rows x touches-per-window): the sf1skew hot entity
-    measured a 260x straggler / 93 s vs 4 s uniform, the same trade as
-    ``ewma``'s fold.  Both impls are pinned equal by
-    ``test_attribution_impls_agree``."""
-    from pyspark.sql import Window
+    shuffle; ONE entity-key Exchange, then each conversion is answered
+    with two vectorized ``searchsorted`` probes into the entity's
+    sorted touch array — O(n log n) per entity, skew-safe.  The
+    SQL form (two frame-sharing RANGE window min/max aggregates of a
+    zero-padded (ts_us, id) string key, which the DuckDB oracle
+    replays) re-scans the non-invertible frames per row in Spark, so a
+    hot entity costs O(rows x touches-per-window): the sf1skew hot
+    entity measured a 260x straggler / 93 s vs 4 s uniform."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
 
     by = [] if by is None else ([by] if isinstance(by, str) else list(by))
     touch_types = list(touch_types)
     if conversion_type in touch_types:
         raise ValueError("conversion_type must not be a touch type")
-    if impl not in ("auto", "arrow", "window"):
-        raise ValueError("impl must be auto|arrow|window")
-    n, unit = lookback.split()
+    m = re.fullmatch(r"\s*(\d+)\s+(second|minute|hour|day)s?\s*",
+                     str(lookback))
+    if m is None:
+        raise ValueError("lookback must be '<int> second|minute|hour|day[s]'"
+                         f", got {lookback!r}")
     per_unit = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
-    us = int(n) * per_unit[unit.rstrip("s")] * 1_000_000
+    us = int(m.group(1)) * per_unit[m.group(2)] * 1_000_000
+    # no entity key: one global series under a constant key
+    keys = by or ["__g"]
+    if not by:
+        events = events.withColumn("__g", F.lit(0))
 
     base = (events
             .filter(F.col(type_col).isin([*touch_types, conversion_type]))
-            .select(*by, F.col(id_col), F.col(ts_col),
+            .select(*keys, F.col(id_col), F.col(ts_col),
                     F.col(type_col).alias("__t"),
                     F.unix_micros(F.col(ts_col).cast("timestamp"))
                      .alias("__us")))
 
-    if impl in ("auto", "arrow"):
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+    src = base.schema
+    out_schema = T.StructType([
+        *[T.StructField(b, src[b].dataType, True) for b in by],
+        T.StructField("conversion_id", src[id_col].dataType, True),
+        T.StructField("conversion_ts", src[ts_col].dataType, True),
+        T.StructField("first_touch_id", src[id_col].dataType, True),
+        T.StructField("last_touch_id", src[id_col].dataType, True),
+    ])
+    out_cols = [*by, "conversion_id", "conversion_ts",
+                "first_touch_id", "last_touch_id"]
 
-        src = base.schema
-        out_schema = T.StructType([
-            *[T.StructField(b, src[b].dataType, True) for b in by],
-            T.StructField("conversion_id", src[id_col].dataType, True),
-            T.StructField("conversion_ts", src[ts_col].dataType, True),
-            T.StructField("first_touch_id", src[id_col].dataType, True),
-            T.StructField("last_touch_id", src[id_col].dataType, True),
-        ])
-        out_cols = [*by, "conversion_id", "conversion_ts",
-                    "first_touch_id", "last_touch_id"]
-
-        # PARTITION-wise (one python call per Arrow batch, not per
-        # entity — the ewma lesson; per-group applyInPandas measured
-        # 328s at sf100/1.5M entities vs ~window-parity this way).
-        # Every group in a batch vectorizes through TWO searchsorted
-        # probes on a composite (dense-group-rank, offset-us) int64
-        # key; entities spanning batch boundaries continue via a
-        # carried touch window (bounded by touches-per-lookback).
-        def per_partition(pdfs):
-            carry_key = None
-            carry_us = np.empty(0, dtype=np.int64)
-            carry_id = None
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                pdf = pdf.reset_index(drop=True)
-                gkeys = pd.MultiIndex.from_frame(pdf[by]) if len(by) > 1 \
-                    else pd.Index(pdf[by[0]])
-                # use_na_sentinel=False: the default assigns NULL keys
-                # code -1 instead of an appearance-order code, which
-                # breaks the composite-key blocks (negative keys) AND
-                # the carried window's code-0 assumption — the NULL-key
-                # group's conversions silently vanished
-                codes, _uniq = pd.factorize(gkeys, sort=False,
-                                            use_na_sentinel=False)
-                usv = pdf["__us"].to_numpy(dtype=np.int64)
-                base_us = int(usv.min()) - us - 2
-                span = int(usv.max()) - base_us + 2
-                if (codes.max() + 2) * span >= (1 << 62):
-                    span = None  # absurd span: per-group fallback below
-                is_conv = (pdf["__t"] == conversion_type).to_numpy()
-                first_key = gkeys[0]
-                prep_n = 0
-                if carry_key is not None \
-                        and _key_eq(first_key, carry_key) \
-                        and len(carry_us):
-                    prep_n = len(carry_us)
-                if span is not None:
-                    key = codes.astype(np.int64) * span + (usv - base_us)
-                    t_key = key[~is_conv]
-                    t_id = pdf.loc[~is_conv, id_col].to_numpy()
-                    if prep_n:
-                        ck = np.maximum(carry_us - base_us, 0)
-                        t_key = np.concatenate([ck, t_key])
-                        t_id = np.concatenate([carry_id, t_id])
-                        order = np.argsort(t_key, kind="stable")
-                        t_key, t_id = t_key[order], t_id[order]
-                    c = pdf[is_conv]
-                    c_key = key[is_conv]
-                    hi = np.searchsorted(t_key, c_key, side="left")
-                    lo = np.searchsorted(t_key, c_key - us, side="left")
+    # PARTITION-wise (one python call per Arrow batch, not per
+    # entity — the ewma lesson; per-group applyInPandas measured
+    # 328s at sf100/1.5M entities vs ~window-parity this way).
+    # Every group in a batch vectorizes through TWO searchsorted
+    # probes on a composite (dense-group-rank, offset-us) int64
+    # key; entities spanning batch boundaries continue via a
+    # carried touch window (bounded by touches-per-lookback).
+    def per_partition(pdfs):
+        carry_key = None
+        carry_us = np.empty(0, dtype=np.int64)
+        carry_id = None
+        for pdf in pdfs:
+            if not len(pdf):
+                continue
+            pdf = pdf.reset_index(drop=True)
+            gkeys = pd.MultiIndex.from_frame(pdf[keys]) if len(keys) > 1 \
+                else pd.Index(pdf[keys[0]])
+            # use_na_sentinel=False: the default assigns NULL keys
+            # code -1 instead of an appearance-order code, which
+            # breaks the composite-key blocks (negative keys) AND
+            # the carried window's code-0 assumption — the NULL-key
+            # group's conversions silently vanished
+            codes, _uniq = pd.factorize(gkeys, sort=False,
+                                        use_na_sentinel=False)
+            usv = pdf["__us"].to_numpy(dtype=np.int64)
+            base_us = int(usv.min()) - us - 2
+            span = int(usv.max()) - base_us + 2
+            if (codes.max() + 2) * span >= (1 << 62):
+                span = None  # absurd span: per-group fallback below
+            is_conv = (pdf["__t"] == conversion_type).to_numpy()
+            first_key = gkeys[0]
+            prep_n = 0
+            if carry_key is not None \
+                    and _key_eq(first_key, carry_key) \
+                    and len(carry_us):
+                prep_n = len(carry_us)
+            if span is not None:
+                key = codes.astype(np.int64) * span + (usv - base_us)
+                t_key = key[~is_conv]
+                t_id = pdf.loc[~is_conv, id_col].to_numpy()
+                if prep_n:
+                    ck = np.maximum(carry_us - base_us, 0)
+                    t_key = np.concatenate([ck, t_key])
+                    t_id = np.concatenate([carry_id, t_id])
+                    order = np.argsort(t_key, kind="stable")
+                    t_key, t_id = t_key[order], t_id[order]
+                c = pdf[is_conv]
+                c_key = key[is_conv]
+                hi = np.searchsorted(t_key, c_key, side="left")
+                lo = np.searchsorted(t_key, c_key - us, side="left")
+                ok = lo < hi
+                out = {b: c.loc[ok, b].to_numpy() for b in by}
+                out["conversion_id"] = c.loc[ok, id_col].to_numpy()
+                out["conversion_ts"] = c.loc[ok, ts_col].to_numpy()
+                out["first_touch_id"] = t_id[lo[ok]]
+                out["last_touch_id"] = t_id[hi[ok] - 1]
+                yield pd.DataFrame(out, columns=out_cols)
+            else:  # wide spans: per-group fallback
+                first_group = True
+                for _k, g in pdf.groupby(keys, sort=False, dropna=False):
+                    gus = g["__us"].to_numpy(dtype=np.int64)
+                    ic = (g["__t"] == conversion_type).to_numpy()
+                    tus, tid = gus[~ic], g.loc[~ic, id_col].to_numpy()
+                    # the carried window applies to the FIRST group
+                    # here too — ignoring it lost every cross-batch
+                    # attribution whenever a batch took this branch
+                    if first_group and prep_n:
+                        tus = np.concatenate([carry_us, tus])
+                        tid = np.concatenate([carry_id, tid])
+                        order = np.argsort(tus, kind="stable")
+                        tus, tid = tus[order], tid[order]
+                    first_group = False
+                    cc = g[ic]
+                    hi = np.searchsorted(tus, gus[ic], side="left")
+                    lo = np.searchsorted(tus, gus[ic] - us, side="left")
                     ok = lo < hi
-                    out = {b: c.loc[ok, b].to_numpy() for b in by}
-                    out["conversion_id"] = c.loc[ok, id_col].to_numpy()
-                    out["conversion_ts"] = c.loc[ok, ts_col].to_numpy()
-                    out["first_touch_id"] = t_id[lo[ok]]
-                    out["last_touch_id"] = t_id[hi[ok] - 1]
-                    yield pd.DataFrame(out, columns=out_cols)
-                else:  # wide spans: per-group fallback
-                    first_group = True
-                    for _k, g in pdf.groupby(by, sort=False, dropna=False):
-                        gus = g["__us"].to_numpy(dtype=np.int64)
-                        ic = (g["__t"] == conversion_type).to_numpy()
-                        tus, tid = gus[~ic], g.loc[~ic, id_col].to_numpy()
-                        # the carried window applies to the FIRST group
-                        # here too — ignoring it lost every cross-batch
-                        # attribution whenever a batch took this branch
-                        if first_group and prep_n:
-                            tus = np.concatenate([carry_us, tus])
-                            tid = np.concatenate([carry_id, tid])
-                            order = np.argsort(tus, kind="stable")
-                            tus, tid = tus[order], tid[order]
-                        first_group = False
-                        cc = g[ic]
-                        hi = np.searchsorted(tus, gus[ic], side="left")
-                        lo = np.searchsorted(tus, gus[ic] - us, side="left")
-                        ok = lo < hi
-                        yield pd.DataFrame(
-                            {**{b: cc.loc[ok, b].to_numpy() for b in by},
-                             "conversion_id": cc.loc[ok, id_col].to_numpy(),
-                             "conversion_ts": cc.loc[ok, ts_col].to_numpy(),
-                             "first_touch_id": tid[lo[ok]],
-                             "last_touch_id": tid[hi[ok] - 1]},
-                            columns=out_cols)
-                # carry the LAST group's in-lookback touches forward
-                last_key = gkeys[-1]
-                lmask = (codes == codes[-1]) & ~is_conv
-                lus = usv[lmask]
-                lid = pdf.loc[lmask, id_col].to_numpy()
-                if carry_key is not None \
-                        and _key_eq(last_key, carry_key) and prep_n:
-                    lus = np.concatenate([carry_us, lus])
-                    lid = np.concatenate([carry_id, lid])
-                if len(lus):
-                    # prune against the LAST GROUP's own max time —
-                    # usv.max() is batch-global and can belong to an
-                    # earlier group with far later timestamps, which
-                    # discarded the whole carry for the spanning group
-                    keep = lus >= int(lus.max()) - us
-                    lus, lid = lus[keep], lid[keep]
-                carry_key, carry_us, carry_id = last_key, lus, lid
+                    yield pd.DataFrame(
+                        {**{b: cc.loc[ok, b].to_numpy() for b in by},
+                         "conversion_id": cc.loc[ok, id_col].to_numpy(),
+                         "conversion_ts": cc.loc[ok, ts_col].to_numpy(),
+                         "first_touch_id": tid[lo[ok]],
+                         "last_touch_id": tid[hi[ok] - 1]},
+                        columns=out_cols)
+            # carry the LAST group's in-lookback touches forward
+            last_key = gkeys[-1]
+            lmask = (codes == codes[-1]) & ~is_conv
+            lus = usv[lmask]
+            lid = pdf.loc[lmask, id_col].to_numpy()
+            if carry_key is not None \
+                    and _key_eq(last_key, carry_key) and prep_n:
+                lus = np.concatenate([carry_us, lus])
+                lid = np.concatenate([carry_id, lid])
+            if len(lus):
+                # prune against the LAST GROUP's own max time —
+                # usv.max() is batch-global and can belong to an
+                # earlier group with far later timestamps, which
+                # discarded the whole carry for the spanning group
+                keep = lus >= int(lus.max()) - us
+                lus, lid = lus[keep], lid[keep]
+            carry_key, carry_us, carry_id = last_key, lus, lid
 
-        proj = base.repartition(*[F.col(b) for b in by]) \
-                   .sortWithinPartitions(*by, "__us", id_col)
-        return proj.mapInPandas(per_partition, out_schema)
-
-    # 20-char id field: Spark's lpad TRUNCATES strings longer than the
-    # pad width, so 12 chars silently corrupted snowflake-scale (>12
-    # digit) int64 ids in the min/max tie-break and the decode below
-    key = F.concat(F.lpad(F.col("__us").cast("string"), 20, "0"),
-                   F.lit(":"),
-                   F.lpad(F.col(id_col).cast("string"), 20, "0"))
-    touch_key = F.when(F.col("__t") != conversion_type, key)
-    w = (Window.partitionBy(*by).orderBy("__us")
-         .rangeBetween(-us, -1))
-    out = (base
-           .select(*by, id_col, ts_col, "__t",
-                   F.min(touch_key).over(w).alias("__first"),
-                   F.max(touch_key).over(w).alias("__last"))
-           .where((F.col("__t") == conversion_type)
-                  & F.col("__first").isNotNull()))
-    dec = lambda c: F.substring(c, 22, 20).cast("long")
-    return out.select(*by,
-                      F.col(id_col).alias("conversion_id"),
-                      F.col(ts_col).alias("conversion_ts"),
-                      dec(F.col("__first")).alias("first_touch_id"),
-                      dec(F.col("__last")).alias("last_touch_id"))
+    proj = (base.repartition(*[F.col(b) for b in by]) if by
+            else base.repartition(1))
+    proj = proj.sortWithinPartitions(*by, "__us", id_col)
+    return proj.mapInPandas(per_partition, out_schema)
 
 
 def dedup_event_stream(events: DataFrame, keys=("event_id",),
