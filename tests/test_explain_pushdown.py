@@ -559,3 +559,107 @@ def test_kn3_no_corpus_sized_broadcast_hint(spark):
                                      broadcast_tables=False)
     analyzed = out._jdf.queryExecution().analyzed().toString()
     assert analyzed.count("ResolvedHint") == 1
+
+
+def _scans(s: str) -> int:
+    # formatted plans list each node twice (tree + "(n) Node" detail
+    # header) — count the detail headers
+    import re
+    return len(re.findall(r"\(\d+\) Scan parquet", s))
+
+
+def _overlapping(uri, n_frags=7):
+    """Sparse no-duplicates array of ``n_frags`` overlapping fragments
+    (distinct commit ms) plus one live delete on ``a``; returns the
+    expected ``{k: a}``."""
+    import time
+
+    rng = np.random.default_rng(3)
+    want = {}
+    for i in range(n_frags):
+        k = np.arange(1000) if i == 0 else rng.choice(1000, 200, replace=False)
+        want.update({int(x): x * 1.0 + i for x in k})
+        tdb.from_pandas(uri, pd.DataFrame(
+            {"k": k.astype(np.int64), "a": k * 1.0 + i, "b": k * 2.0}),
+            index_dims=["k"], mode="append" if i else "ingest",
+            full_domain=True)
+        time.sleep(0.003)
+    with tdb.open(uri, mode="d") as A:
+        A.query(cond="a < 50.0").submit()
+    return {k: a for k, a in want.items() if a >= 50.0}
+
+
+def test_overlapping_lww_read_is_one_scan(uri, spark):
+    """An LWW merge read over many overlapping fragments and a live
+    delete plans ONE parquet scan (the fragment order comes from each
+    row's file path), and that scan still takes the range pushdown and
+    the pruned read schema."""
+    want = _overlapping(uri)
+    A = tdb.open(uri, spark=spark)
+    assert len(A._manifest.live_fragments(A.timestamp)) >= 6
+    plan = QueryPlan(dim_ranges=[DimRanges(name="k", intervals=[(100, 800)])],
+                     attrs=["a"], order="U")
+    df = A._execute(plan)
+    s = _plan(df)
+    assert _scans(s) == 1, s
+    assert "GreaterThanOrEqual(k,100)" in s and "LessThanOrEqual(k,800)" in s
+    read_schema = [ln for ln in s.splitlines() if "ReadSchema" in ln][0]
+    assert "a:double" in read_schema
+    assert "b:double" not in read_schema
+    assert {r.k: r.a for r in df.collect()} == {
+        k: a for k, a in want.items() if 100 <= k <= 800}
+
+
+def test_drop_readd_reads_one_scan_per_masked_group(uri, spark):
+    """Fragments that mask a dropped-then-re-added attr read under a
+    different schema: one scan per masked group, not per fragment."""
+    for i in range(3):
+        tdb.from_pandas(uri, pd.DataFrame(
+            {"k": np.arange(i, i + 5, dtype=np.int64), "v": [1.0 * i] * 5,
+             "w": [10 * i] * 5}),
+            index_dims=["k"], mode="append" if i else "ingest",
+            full_domain=True)
+    e1 = tdb.ArraySchemaEvolution()
+    e1.drop_attribute("w")
+    e1.array_evolve(uri)
+    e2 = tdb.ArraySchemaEvolution()
+    e2.add_attribute(tdb.Attr("w", dtype=np.int64, fill=-5))
+    e2.array_evolve(uri)
+    for i in range(3, 6):
+        tdb.from_pandas(uri, pd.DataFrame(
+            {"k": np.arange(i, i + 5, dtype=np.int64), "v": [1.0 * i] * 5,
+             "w": [10 * i] * 5}),
+            index_dims=["k"], mode="append")
+    with tdb.open(uri, spark=spark) as A:
+        df = A.dataframe()
+        assert _scans(_plan(df)) == 2
+        got = {r.k: (r.v, r.w) for r in df.collect()}
+    assert got == {k: (float(min(k, 5)), 10 * min(k, 5) if k >= 3 else -5)
+                   for k in range(10)}
+
+
+def test_new_fragment_does_not_recompile_the_read(uri, spark):
+    """Appending one fragment to an overlapping array must not recompile
+    the LWW read: the scan's generated code carries no per-fragment
+    literal, so it compiles a bounded number of classes (counted by
+    Spark's codegen metrics), not one per fragment."""
+    import time
+
+    _overlapping(uri)
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def read():
+        c0 = cm.METRIC_COMPILATION_TIME().getCount()
+        with tdb.open(uri, spark=spark) as A:
+            n = len(A.df[:])
+        return n, cm.METRIC_COMPILATION_TIME().getCount() - c0
+
+    n0, _ = read()
+    time.sleep(0.003)
+    k = np.random.default_rng(4).choice(1000, 200, replace=False)
+    tdb.from_pandas(uri, pd.DataFrame(
+        {"k": k.astype(np.int64), "a": k + 1e6, "b": k * 2.0}),
+        index_dims=["k"], mode="append")
+    n1, compiled = read()
+    assert n1 >= n0
+    assert compiled <= 4, compiled

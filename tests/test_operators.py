@@ -5060,3 +5060,46 @@ def test_attribution_rejects_bad_lookback(spark):
             attribution(df, ["view"], "purchase", lookback=bad)
     for good in ("1 day", "2 days", "30 second", " 90  minutes "):
         attribution(df, ["view"], "purchase", lookback=good)
+
+
+# operator -> (positional args after the events frame, keyword args)
+_GLOBAL_SERIES_OPS = {
+    "sessionize": ((), dict(gap_minutes=2.0)),
+    "funnel": ((["view", "click", "purchase"],), {}),
+    "cohort_retention": ((), dict(period="day")),
+    "event_transitions": ((), {}),
+    "rolling_anomaly": (("value",),
+                        dict(window=5, min_periods=2, threshold=1.0)),
+    "time_resample": (("value",), dict(interval="1 minute")),
+}
+
+
+@pytest.mark.parametrize("by", [None, []], ids=["none", "empty"])
+@pytest.mark.parametrize("op", sorted(_GLOBAL_SERIES_OPS))
+def test_event_operator_empty_entity_key_is_one_series(spark, op, by):
+    """``by=None``/``[]`` runs the operator over all rows as ONE
+    series: the answer equals the keyed run under a constant key
+    column, minus that column."""
+    import random
+
+    from tiledb_py_spark.streaming import events
+
+    rnd = random.Random(11)
+    rows = [(rnd.randrange(4), i,
+             rnd.choice(["view", "click", "purchase"]),
+             f"2024-01-0{1 + rnd.randrange(3)} 00:"
+             f"{rnd.randrange(20):02d}:{rnd.randrange(60):02d}",
+             rnd.gauss(10.0, 3.0) if i % 17 else 90.0)
+            for i in range(150)]
+    ev = spark.createDataFrame(
+        rows, "user_id long, event_id long, event_type string, "
+              "ts string, value double") \
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    args, kw = _GLOBAL_SERIES_OPS[op]
+    fn = getattr(events, op)
+    got = fn(ev, *args, by=by, **kw)
+    keyed = fn(ev.withColumn("__g", F.lit(0)), *args, by="__g", **kw) \
+        .drop("__g")
+    assert got.columns == keyed.columns
+    want = sorted(map(tuple, keyed.collect()), key=repr)
+    assert sorted(map(tuple, got.collect()), key=repr) == want and want

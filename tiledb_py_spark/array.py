@@ -338,30 +338,41 @@ class Array:
                 df = df.withColumn(a.name, F.coalesce(F.col(a.name), F.lit(fill)))
         return df
 
-    def _frag_df(self, f, sschema) -> DataFrame:
-        """Read one fragment under the declared schema, masking attrs
-        the fragment predates across a drop/re-add (attr identity:
-        ``Manifest.masked_attrs`` — the stored same-named column is the
-        dropped predecessor's data, possibly at another type; reading
-        it under the new declared type crashes or fabricates values).
-        Masked columns materialize as the attr's fill (non-nullable)
-        or NULL."""
-        path = mf.fragment_path(self.uri, f)
-        masked = set(self._manifest.masked_attrs(f.schema_version))
-        if not masked:
-            return self.spark.read.schema(sschema).parquet(path)
-        keep = T.StructType(
-            [x for x in sschema.fields if x.name not in masked])
-        df = self.spark.read.schema(keep).parquet(path)
-        types = {x.name: x.dataType for x in sschema.fields}
-        for a in self.schema.attrs_list:
-            if a.name not in masked:
-                continue
-            fill = (stored_scalar(a.fill, a.dtype)
-                    if a.fill is not None and not a.nullable else None)
-            col = F.lit(fill) if fill is not None else F.lit(None)
-            df = df.withColumn(a.name, col.cast(types[a.name]))
-        return df.select(*[x.name for x in sschema.fields])
+    def _read_fragments(self, frs, order: Optional[dict] = None) -> DataFrame:
+        """One parquet scan per group of fragments masking the same attrs
+        (``Manifest.masked_attrs``: a fragment predating a drop/re-add
+        reads that attr as its fill or NULL, never the predecessor's
+        column).  ``order`` (name -> ``frag_order_key``) adds ``__frag_ts``;
+        a row whose fragment is not in it fails the query."""
+        sschema = self.schema.spark_schema()
+        fills = {a.name: (stored_scalar(a.fill, a.dtype)
+                          if a.fill is not None and not a.nullable else None)
+                 for a in self.schema.attrs_list}
+        groups: dict = {}
+        for f in frs:
+            groups.setdefault(self._manifest.masked_attrs(f.schema_version),
+                              []).append(f)
+        parts = []
+        for masked, grp in groups.items():
+            keep = T.StructType([x for x in sschema.fields
+                                 if x.name not in masked])
+            df = self.spark.read.schema(keep).parquet(
+                *[mf.fragment_path(self.uri, f) for f in grp])
+            cols = [F.lit(fills[x.name]).cast(x.dataType).alias(x.name)
+                    if x.name in masked else _qcol(x.name)
+                    for x in sschema.fields]
+            if order is not None:
+                path = F.col("_metadata.file_path")
+                frag = F.substring_index(F.substring_index(path, "/", -2), "/", 1)
+                keys = F.create_map(*[F.lit(x) for kv in order.items()
+                                      for x in kv])
+                cols.append(F.coalesce(
+                    F.element_at(keys, frag),
+                    F.raise_error(F.concat(
+                        F.lit("file is in no fragment of this read: "),
+                        path))).alias("__frag_ts"))
+            parts.append(df.select(*cols))
+        return reduce(lambda a, b: a.unionByName(b), parts)
 
     def _stored_ranges(self, dim_ranges):
         """Rewrite range bounds/points into each dim's STORED representation
@@ -404,7 +415,11 @@ class Array:
                  keep_frag_ts: bool = False,
                  fragments: Optional[set] = None,
                  max_delete_ts: Optional[int] = None) -> DataFrame:
-        """Fragment-pruned union scan with deletes + duplicate resolution.
+        """Fragment-pruned scan with deletes + duplicate resolution: ONE
+        parquet scan whatever the fragment count.  Each row's LWW order
+        comes from its file path via a map literal (by reference in
+        generated code; a per-fragment ``lit`` compiles one class per
+        fragment).  The map grows with the number of live fragments.
         ``keep_frag_ts`` retains the fragment-order column for 'G'
         (global-order) reads.  ``fragments`` restricts the scan to the
         named write fragments (partial consolidation).
@@ -436,31 +451,16 @@ class Array:
         need_dedup = (not self.schema.allows_duplicates) and len(frs) > 1
         need_frag_ts = bool(deletes) or need_dedup or keep_frag_ts
 
-        sschema = self.schema.spark_schema()
-        any_masked = any(m.masked_attrs(f.schema_version) for f in frs)
-        if not need_frag_ts and not keep_frag_ts:
-            if not any_masked:
-                paths = [mf.fragment_path(self.uri, f) for f in frs]
-                return self._fill_evolved(
-                    self.spark.read.schema(sschema).parquet(*paths), frs)
-            # an attr was dropped and RE-added: fragments predating the
-            # re-add carry a same-named column that belongs to the
-            # dropped predecessor (possibly at another type) — read
-            # those per-fragment with the column masked to its fill
-            return self._fill_evolved(
-                reduce(lambda a, b: a.unionByName(b),
-                       [self._frag_df(f, sschema) for f in frs]), frs)
-
-        parts = []
-        # stable sort on ts ALONE: frs arrives in manifest commit order,
-        # so same-millisecond fragments keep their true write order —
-        # tie-breaking on the (random uuid) fragment name would flip
-        # last-write-wins for ~half of same-ms write pairs
-        for i, f in enumerate(sorted(frs, key=lambda f: f.timestamp_range[0])):
-            p = self._frag_df(f, sschema)
-            parts.append(p.withColumn(
-                "__frag_ts", F.lit(mf.frag_order_key(f.timestamp_range[0], i))))
-        df = self._fill_evolved(reduce(lambda a, b: a.unionByName(b), parts), frs)
+        order = None
+        if need_frag_ts:
+            # stable sort on ts ALONE: frs arrives in manifest commit
+            # order, so same-millisecond fragments keep their true write
+            # order — tie-breaking on the (random uuid) fragment name
+            # would flip last-write-wins for ~half of same-ms write pairs
+            order = {f.name: mf.frag_order_key(f.timestamp_range[0], i)
+                     for i, f in enumerate(sorted(
+                         frs, key=lambda f: f.timestamp_range[0]))}
+        df = self._fill_evolved(self._read_fragments(frs, order), frs)
 
         for dfrag in deletes:
             cond = self._compile_cond(dfrag.delete_condition)

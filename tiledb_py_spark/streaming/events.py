@@ -37,6 +37,15 @@ def _key_eq(a, b) -> bool:
         (x != x and y != y) or x == y for x, y in zip(a, b))
 
 
+def _by_cols(by) -> list:
+    """The entity-key columns of a ``by`` argument: a column name, a
+    sequence of names, or ``None``/``[]`` for one global series (whose
+    windows then run in a single task)."""
+    if by is None:
+        return []
+    return [by] if isinstance(by, str) else list(by)
+
+
 def tumbling_window_counts(events: DataFrame, window: str = "1 hour",
                            watermark: str = "1 hour",
                            streaming: bool = False) -> DataFrame:
@@ -108,7 +117,7 @@ def sessionize(events: DataFrame, by="user_id", ts_col: str = "ts",
     events."""
     from pyspark.sql import Window
 
-    by = [by] if isinstance(by, str) else list(by)
+    by = _by_cols(by)
     order = [F.col(ts_col)] + [F.col(c) for c in tiebreak_cols]
     w = Window.partitionBy(*by).orderBy(*order)
     prev = F.lag(ts_col).over(w)
@@ -155,7 +164,7 @@ def funnel(events: DataFrame, steps, by="user_id", ts_col: str = "ts",
     if k == 0 or len(set(steps)) != k:
         raise ValueError("steps must be a non-empty list of distinct "
                          "step values")
-    by = [by] if isinstance(by, str) else list(by)
+    by = _by_cols(by)
     if isinstance(within, str):
         within = F.expr(f"INTERVAL {within}")
 
@@ -223,7 +232,7 @@ def ewma(events: DataFrame, value_col: str = "value", by="user_id",
 
     if not 0 < alpha <= 1:
         raise ValueError("alpha must be in (0, 1]")
-    by = [] if by is None else ([by] if isinstance(by, str) else list(by))
+    by = _by_cols(by)
     # no entity key: one global series under a constant key
     keys = by or ["__g"]
     if not by:
@@ -295,13 +304,14 @@ def cohort_retention(events: DataFrame, by="user_id", ts_col: str = "ts",
     weeks), 'day', or 'month' (calendar-month offsets)."""
     if period not in ("day", "week", "month"):
         raise ValueError("period must be day|week|month")
-    by = [by] if isinstance(by, str) else list(by)
+    by = _by_cols(by)
     p = F.date_trunc(period, F.col(ts_col))
     first = (events.groupBy(*by)
              .agg(F.date_trunc(period, F.min(ts_col)).alias("__cohort")))
     active = (events.select(*by, p.alias("__p"))
               .dropDuplicates([*by, "__p"]))
-    j = active.join(first, on=by, how="inner")
+    j = (active.join(first, on=by, how="inner") if by
+         else active.crossJoin(first))
     if period == "month":
         off = (F.months_between(F.col("__p"), F.col("__cohort"))
                .cast("int"))
@@ -326,7 +336,7 @@ def event_transitions(events: DataFrame, by="user_id",
     ties on ``ts`` order via ``tiebreak_cols``."""
     from pyspark.sql import Window
 
-    by = [by] if isinstance(by, str) else list(by)
+    by = _by_cols(by)
     order = [F.col(ts_col)] + [F.col(c) for c in tiebreak_cols]
     w = Window.partitionBy(*by).orderBy(*order)
     prev = F.lag(step_col).over(w)
@@ -370,7 +380,7 @@ def rolling_anomaly(events: DataFrame, value_col: str = "value",
     ``tiebreak_col``."""
     from pyspark.sql import Window
 
-    by = [by] if isinstance(by, str) else list(by)
+    by = _by_cols(by)
     w = (Window.partitionBy(*by)
          .orderBy(F.col(ts_col), F.col(tiebreak_col))
          .rowsBetween(-window, -1))
@@ -512,7 +522,7 @@ def time_resample(events: DataFrame, value_col: str = "value",
 
     if fill not in ("ffill", "none"):
         raise ValueError(f"unknown fill {fill!r}")
-    by = [by] if isinstance(by, str) else list(by)
+    by = _by_cols(by)
     step = F.expr(f"INTERVAL {interval}")
     agg = (events
            .groupBy(*by, F.window(F.col(ts_col), interval).alias("__w"))
@@ -583,7 +593,7 @@ def attribution(events: DataFrame, touch_types, conversion_type: str,
     import pandas as pd
     from pyspark.sql import types as T
 
-    by = [] if by is None else ([by] if isinstance(by, str) else list(by))
+    by = _by_cols(by)
     touch_types = list(touch_types)
     if conversion_type in touch_types:
         raise ValueError("conversion_type must not be a touch type")

@@ -12,15 +12,38 @@ and the materialized tables appear as
 eagerly localCheckpoints its pair list, so source_similarity executes
 its upstream stages during construction (plan truncated at a
 ``Scan ExistingRDD``).
+
+A query whose result is built on the driver (every leaf of its physical
+plan is ``Scan ExistingRDD`` or ``LocalTableScan``, and no file scan
+appears anywhere in the plan, e.g. ``ivf_ann``) has no comparable plan:
+the RDD id in its leaf changes between runs.  Such a query gets a
+``note <query>: driver-built result, no plan`` line on stderr and its
+file starts with the ``DRIVER_BUILT`` marker line, so a plan-identity
+check can tell it apart instead of passing or failing on nothing.
 """
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+DRIVER_BUILT = "# driver-built result, no plan"
+_DRIVER_LEAVES = re.compile(r"Scan ExistingRDD|LocalTableScan")
+_FILE_SCAN = re.compile(r"\bScan (parquet|orc|csv|json|text)\b|BatchScan")
+
+
+def driver_built(df, text: str) -> bool:
+    """True when the physical plan reads no file: every leaf is a
+    driver-side RDD or local table."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+    return (all(_DRIVER_LEAVES.match(n) for n in names)
+            and not _FILE_SCAN.search(text))
 
 
 def main() -> int:
@@ -44,8 +67,13 @@ def main() -> int:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
+            text = buf.getvalue()
+            if driver_built(df, text):
+                print(f"note {name}: driver-built result, no plan",
+                      file=sys.stderr)
+                text = f"{DRIVER_BUILT}\n{text}"
             with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
-                f.write(buf.getvalue())
+                f.write(text)
             print(f"ok {name}", file=sys.stderr)
         except Exception as e:  # keep sweeping; a broken query is news too
             print(f"ERR {name}: {type(e).__name__}: {e}", file=sys.stderr)
