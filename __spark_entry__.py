@@ -325,7 +325,8 @@ def _lww_array(spark, sf_dir) -> str:
 
 def q_datasource_lww(spark, sf_dir):
     """format('tiledb') read over overlapping fragments on a no-duplicates
-    array: per-split merge-on-read anti-join resolves last-write-wins
+    array: the overlapping fragments form one merge split whose read
+    task anti-joins each fragment against the newer ones' coordinates
     (spark_datasource.py read path); oracle recomputes the overwrite."""
     from tiledb_py_spark.sources.spark_datasource import register
 
@@ -340,10 +341,9 @@ def q_datasource_lww(spark, sf_dir):
 def _lww_many_array(spark, sf_dir) -> str:
     """Hot-key upsert pattern: 50 appends all overwriting p_partkey < 100
     (update i writes retailprice + 1000 + i), on top of a full base write.
-    51 mutually-overlapping fragments — far past the datasource's
-    lww_group_threshold, so the scan plans ONE streaming-merge group split
-    per overlap component (spark_datasource._read_group) instead of
-    stacking O(F^2) per-split anti-join reads."""
+    51 mutually-overlapping fragments in one overlap component, which the
+    scan merges in one task reading every file once
+    (spark_datasource._read_group)."""
     import tiledb_py_spark as tdb
 
     def build(uri):
@@ -361,8 +361,8 @@ def _lww_many_array(spark, sf_dir) -> str:
 
 def q_datasource_lww_many(spark, sf_dir):
     """format('tiledb') over 51 mutually-overlapping fragments: the
-    many-overlap streaming-merge fallback must produce the same
-    last-write-wins answer (each file read once, not per-split)."""
+    merge split must produce the same last-write-wins answer with each
+    file read once."""
     from tiledb_py_spark.sources.spark_datasource import register
 
     register(spark)

@@ -5,6 +5,7 @@ Python, with no library code, so a test can hold the operator to it
 on any input (``attribution_events`` only reads a test's input rows).
 """
 
+import math
 import re
 from collections import Counter, defaultdict
 
@@ -105,6 +106,21 @@ def repetition_stats_model(text, line_sep="\n", top_ns=(2, 3),
         out[f"r_dup{n}gram_char_frac"] = \
             sum(len(w) for w, c in zip(toks, covered) if c) / chars
     return out
+
+
+def bucket_index_model(d, cuts):
+    """Number of ``cuts`` strictly below ``d`` in Spark's order: a null
+    ``d`` is bucket 0; doubles put NaN above +inf and equal to itself;
+    strings compare by UTF-8 bytes."""
+    if d is None:
+        return 0
+    if isinstance(d, str):
+        def key(x):
+            return x.encode()
+    else:
+        def key(x):
+            return (True, 0.0) if math.isnan(x) else (False, x)
+    return sum(1 for c in cuts if key(c) < key(d))
 
 
 def assert_rows_match_model(got, want):

@@ -130,7 +130,7 @@ def test_simhash_signatures_plan_has_no_exchange(spark):
 
 def test_format_lww_few_overlap_read_plans_no_shuffle(uri, spark):
     """format('tiledb') few-overlap LWW: supersession is resolved inside
-    each read task by a pyarrow anti-join against newer fragments'
+    the merge read task by a pyarrow anti-join against newer fragments'
     coordinates — the SPARK plan must stay a plain BatchScan with no
     Exchange (a shuffle here would mean LWW leaked into the engine plan)."""
     from tiledb_py_spark.sources.spark_datasource import (TileDBReader,
@@ -144,9 +144,9 @@ def test_format_lww_few_overlap_read_plans_no_shuffle(uri, spark):
                         "v": np.ones(10)})
     tdb.from_pandas(uri, upd, index_dims=["k"], mode="append")
 
-    # planning really does take the per-split anti-join route
+    # planning really does take the in-task merge route
     splits = TileDBReader(uri, None).partitions()
-    assert any(s.newer for s in splits) and not any(s.group for s in splits)
+    assert [len(s.group) for s in splits] == [2]
 
     df = spark.read.format("tiledb").load(uri)
     s = _plan(df)

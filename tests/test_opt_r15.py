@@ -165,66 +165,66 @@ def test_sig_band_keys_string_path_matches_column_path(spark):
     assert a == b
 
 
-def test_bucket_index_sql_tree_matches_hof_fold(spark):
-    """The SQL-snippet (binary-IF-tree codegen) form of bucket_index
-    must equal the Column (array-filter fold) form on every edge:
-    nulls (contract: bucket 0), duplicate cuts, string cuts containing
-    quotes/backslashes, weird column names, and the non-finite-cut
-    fallback."""
-    from tiledb_py_spark.operators.stats_bounds import (
-        _quote_ident, bucket_index, monotonic_view, monotonic_view_sql)
+def _assert_buckets_match_model(df, snippet, cuts):
+    """bucket_index(snippet, cuts) on every row equals the plain-Python
+    model applied to the row's value of ``snippet``."""
+    from reference_models import bucket_index_model
 
+    from tiledb_py_spark.operators.stats_bounds import bucket_index
+
+    rows = df.select(F.expr(snippet).alias("x"),
+                     bucket_index(snippet, cuts).alias("b")).collect()
+    assert rows
+    assert [r.b for r in rows] == [bucket_index_model(r.x, cuts)
+                                   for r in rows], (snippet, cuts)
+    return [r.b for r in rows]
+
+
+def test_bucket_index_sql_tree_matches_hof_fold(spark):
+    """The binary-IF-tree bucket_index equals the reference model on
+    every edge: nulls (contract: bucket 0), duplicate and unsorted cuts,
+    +-inf and NaN cuts, a NaN value, string cuts containing
+    quotes/backslashes, weird column names and timestamps.  A Column
+    ``d`` is refused, naming the SQL-snippet form."""
+    from tiledb_py_spark.operators.stats_bounds import (
+        _quote_ident, bucket_index, monotonic_view_sql)
+
+    nan, inf = float("nan"), float("inf")
     df = spark.createDataFrame(
-        [(float(x),) for x in range(10)] + [(None,)], ["d"])
-    fb = [1.5, 3.0, 3.0, 7.25]
-    assert (df.select(bucket_index(F.col("d"), fb).alias("b")).collect()
-            == df.select(bucket_index("`d`", fb).alias("b")).collect())
+        [(float(x),) for x in range(10)] + [(None,), (nan,), (inf,),
+                                            (-inf,)], "d double")
+    for cuts in ([1.5, 3.0, 3.0, 7.25], [5.0, 1.0, 3.0],
+                 [-inf, 2.0], [nan, inf, -inf, 2.0], [nan, nan, 4.0],
+                 [inf, 8.0]):
+        _assert_buckets_match_model(df, "`d`", cuts)
+    # NaN is greatest: a NaN value sits above every non-NaN cut, and
+    # NaN > NaN is false
+    got = _assert_buckets_match_model(df, "`d`", [nan, inf, -inf, 2.0])
+    assert got[-4:] == [0, 3, 2, 0]
 
     sdf = spark.createDataFrame(
-        [("apple",), ("bob's",), ("c\\d",), (None,), ("zz",)], ["s"])
-    sb = ["b", "bob's", "c\\a"]
-    assert (sdf.select(bucket_index(F.col("s"), sb).alias("b")).collect()
-            == sdf.select(bucket_index(_quote_ident("s"), sb).alias("b"))
-                  .collect())
+        [("apple",), ("bob's",), ("c\\d",), (None,), ("zz",), ("é",)], ["s"])
+    for cuts in (["b", "bob's", "c\\a"], ["m", "a", "f"], ["é", "z"]):
+        _assert_buckets_match_model(sdf, _quote_ident("s"), cuts)
 
     tdf = spark.sql(
         "select timestamp'2024-01-01' + make_interval(0,0,0,0,id,0,0) as ts"
         " from range(5) union all select null")
-    cuts = [1.7040e15, 1.70401e15]
-    assert (tdf.select(bucket_index(
-                monotonic_view("ts", "timestamp"), cuts).alias("b")).collect()
-            == tdf.select(bucket_index(
-                monotonic_view_sql("ts", "timestamp"), cuts).alias("b"))
-                  .collect())
+    _assert_buckets_match_model(
+        tdf, monotonic_view_sql("ts", "timestamp"), [1.7040e15, 1.70401e15])
 
     wdf = spark.createDataFrame([(1.0,), (0.2,)], ["we`ird col"])
-    assert (wdf.select(bucket_index(
-                monotonic_view_sql("we`ird col", "double"), [0.5]).alias("b"))
-               .collect()
-            == wdf.select(bucket_index(
-                F.col("`we``ird col`").cast("double"), [0.5]).alias("b"))
-                  .collect())
+    assert _assert_buckets_match_model(
+        wdf, monotonic_view_sql("we`ird col", "double"), [0.5]) == [1, 0]
 
-    nf = [float("-inf"), 2.0]
-    assert (df.select(bucket_index(F.col("d"), nf).alias("b")).collect()
-            == df.select(bucket_index("`d`", nf).alias("b")).collect())
-
-    # UNSORTED cuts: the documented contract (count of cuts strictly
-    # below d) is order-independent; the tree must sort internally
-    un = [5.0, 1.0, 3.0]
-    assert (df.select(bucket_index(F.col("d"), un).alias("b")).collect()
-            == df.select(bucket_index("`d`", un).alias("b")).collect())
-    uns = ["m", "a", "f"]
-    assert (sdf.select(bucket_index(F.col("s"), uns).alias("b")).collect()
-            == sdf.select(bucket_index(_quote_ident("s"), uns).alias("b"))
-                  .collect())
+    with pytest.raises(TypeError, match="SQL snippet"):
+        bucket_index(F.col("d"), [1.0])
 
 
 def test_bucket_index_string_tree_under_escaped_string_literals(spark):
-    """String cuts in the IF tree must bucket like the fold whatever the
+    """String cuts in the IF tree bucket like the model whatever the
     session's ``escapedStringLiterals`` parser setting is."""
-    from tiledb_py_spark.operators.stats_bounds import (
-        _quote_ident, bucket_index)
+    from tiledb_py_spark.operators.stats_bounds import _quote_ident
 
     key = "spark.sql.parser.escapedStringLiterals"
     prev = spark.conf.get(key, "false")
@@ -232,26 +232,18 @@ def test_bucket_index_string_tree_under_escaped_string_literals(spark):
     try:
         sdf = spark.createDataFrame(
             [("bob(",), ("c\\]",), ("a",), ("",)], ["s"])
-        cuts = ["bob's", "c\\a", ""]
-        fold = sdf.select(bucket_index(F.col("s"), cuts).alias("b")).collect()
-        tree = sdf.select(bucket_index(_quote_ident("s"), cuts).alias("b")
-                          ).collect()
-        assert [r.b for r in fold] == [2, 2, 1, 0]
-        assert tree == fold
+        got = _assert_buckets_match_model(
+            sdf, _quote_ident("s"), ["bob's", "c\\a", ""])
+        assert got == [2, 2, 1, 0]
+        df = spark.createDataFrame([(float("nan"),), (1.0,)], "d double")
+        _assert_buckets_match_model(df, "`d`", [float("nan"), float("-inf")])
     finally:
         spark.conf.set(key, prev)
 
 
 def test_bucket_index_expr_array_matches_lit_array(spark):
-    """The parsed-literal bounds array must bucket identically to the
-    F.lit form, including negative/scientific-notation cuts."""
-    from tiledb_py_spark.operators.stats_bounds import bucket_index
-
+    """Negative and scientific-notation double cuts render as literals
+    that bucket like the model."""
     bounds = [-1.5, -2.25e-3, 0.0, 1e-05, 3.7754, 1e22]
     df = spark.range(9).select((F.col("id") * 1.7 - 3).alias("d"))
-    new = df.select(bucket_index(F.col("d"), bounds).alias("b")).collect()
-    old_arr = F.array(*[F.lit(float(b)) for b in bounds])
-    old = df.select(
-        F.size(F.filter(old_arr, lambda bd: F.col("d") > bd)).alias("b")
-    ).collect()
-    assert new == old
+    _assert_buckets_match_model(df, "`d`", bounds)

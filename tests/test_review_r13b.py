@@ -196,9 +196,7 @@ def test_group_path_same_ms_lww_manifest_order(uri, spark, tmp_path):
     mf.commit(uri, _mutate)
 
     got = {r.k: r.v for r in
-           spark.read.format("tiledb")
-                .option("lww_group_threshold", "0")
-                .load(uri).collect()}
+           spark.read.format("tiledb").load(uri).collect()}
     assert got == {i: 2.0 for i in range(5)}, \
         "group path broke same-ms LWW ties by uuid name"
     # parity: the native scan resolves the same way

@@ -68,8 +68,8 @@ def test_format_overwrite_rejected(arr, spark):
 
 def test_format_overlapping_nodup_last_write_wins(uri, spark):
     """Overlapping fragments on a no-duplicates array resolve to the LAST
-    write per coordinate, merge-on-read style (per-split anti-join against
-    newer overlapping fragments' coordinates)."""
+    write per coordinate, merge-on-read style (the merge split anti-joins
+    each fragment against the newer ones' coordinates)."""
     pdf = pd.DataFrame({"k": np.arange(10, dtype=np.int64),
                         "v": np.zeros(10)})
     tdb.from_pandas(uri, pdf, index_dims=["k"], full_domain=True)
@@ -106,10 +106,9 @@ def test_format_lww_after_delete_resurfaces_old(uri, spark):
 
 def test_format_lww_many_overlaps_streams_each_file_once(uri, spark):
     """Hot-key upsert: 20 updates all overlapping the base fragment.
-    Planning must route the overlap component through a streaming-merge
-    group split where every parquet file is referenced exactly ONCE
-    (per-split `newer` stacking would reference newer files O(F^2) times),
-    and the result must match the engine's shuffle-dedup scan."""
+    Planning must route the overlap component through a merge split
+    where every parquet file is referenced exactly ONCE, and the result
+    must match the engine's shuffle-dedup scan."""
     base = pd.DataFrame({"k": np.arange(200, dtype=np.int64),
                          "v": np.zeros(200)})
     tdb.from_pandas(uri, base, index_dims=["k"])
@@ -129,7 +128,6 @@ def test_format_lww_many_overlaps_streams_each_file_once(uri, spark):
         refs.extend(p for paths, _d, _m in s.group for p in paths)
         if s.file_path:
             refs.append(s.file_path)
-        refs.extend(p for p, _d, _m in s.newer)
     assert len(refs) == len(set(refs)) == 21  # each file planned exactly once
 
     out = spark.read.format("tiledb").load(uri).orderBy("k").toPandas()
@@ -151,17 +149,31 @@ def test_format_lww_many_overlaps_streams_each_file_once(uri, spark):
     assert got["v"].tolist() == [19.0] * 10
 
 
-def test_format_lww_giant_component_auto_slices(uri, spark):
-    """A mutually-overlapping component above lww_split_bytes must NOT
-    serialize into one task: planning slices it into first-dim coordinate
-    ranges (one independent streaming merge per slice), and the sliced
-    result is identical to the engine's shuffle-dedup scan."""
+def _read_in_process(uri):
+    """Plan and read a ``format("tiledb")`` scan in THIS process, so a
+    monkeypatched ``_SPLIT_BYTES`` applies (Spark plans Python data
+    sources in a Python worker, which a monkeypatch made here does not
+    reach).  Returns (splits, rows sorted by k)."""
+    from tiledb_py_spark.sources.spark_datasource import TileDBReader
+
+    r = TileDBReader(uri, None)
+    splits = r.partitions()
+    out = pd.concat([b.to_pandas() for s in splits for b in r.read(s)])
+    return splits, out.sort_values("k").reset_index(drop=True)
+
+
+def test_format_lww_giant_component_auto_slices(uri, spark, monkeypatch):
+    """A merge component above _SPLIT_BYTES must NOT serialize into one
+    task: planning slices it into first-dim coordinate ranges (one
+    independent merge per slice), and the sliced result is identical to
+    the engine's shuffle-dedup scan."""
     import glob
     import os
 
     import pyarrow.parquet as pq
 
     from tiledb_py_spark import manifest as mf
+    from tiledb_py_spark.sources import spark_datasource as sd
 
     rng = np.random.RandomState(7)
     base = pd.DataFrame({"k": np.arange(5000, dtype=np.int64),
@@ -182,11 +194,9 @@ def test_format_lww_giant_component_auto_slices(uri, spark):
             pq.write_table(pq.read_table(p).sort_by("k"), p,
                            row_group_size=250)
 
-    from tiledb_py_spark.sources.spark_datasource import TileDBReader
-
-    # tiny byte threshold forces slicing of this small test component
-    r = TileDBReader(uri, None, lww_split_bytes=16 << 10)
-    splits = r.partitions()
+    # a tiny split size forces slicing of this small test component
+    monkeypatch.setattr(sd, "_SPLIT_BYTES", 16 << 10)
+    splits, sliced = _read_in_process(uri)
     group_splits = [s for s in splits if s.group]
     assert len(group_splits) > 1, "giant component should slice into >1 task"
     # slices must partition the domain: contiguous half-open ranges
@@ -195,10 +205,6 @@ def test_format_lww_giant_component_auto_slices(uri, spark):
     assert rngs[0][0] is None and rngs[-1][1] is None
     for a, b in zip(rngs, rngs[1:]):
         assert a[1] == b[0]
-
-    sliced = (spark.read.format("tiledb")
-              .option("lww_split_bytes", 16 << 10).load(uri)
-              .orderBy("k").toPandas())
     eng = tdb.open(uri, spark=spark).dataframe().orderBy("k").toPandas()
     assert sliced.equals(eng)
 
@@ -206,14 +212,12 @@ def test_format_lww_giant_component_auto_slices(uri, spark):
     # resurfaces previous values, identically to the engine scan
     with tdb.open(uri, "d", spark=spark) as A:
         A.query(cond="v >= 11.0").submit_delete()
-    sliced = (spark.read.format("tiledb")
-              .option("lww_split_bytes", 16 << 10).load(uri)
-              .orderBy("k").toPandas())
+    _, sliced = _read_in_process(uri)
     eng = tdb.open(uri, spark=spark).dataframe().orderBy("k").toPandas()
     assert sliced.equals(eng)
 
 
-def test_format_lww_unsorted_component_skips_slicing(uri, spark):
+def test_format_lww_unsorted_component_skips_slicing(uri, spark, monkeypatch):
     """Wide row groups (unsorted data) would be re-read by every slice —
     the planner must detect the amplification and fall back to fewer (or
     one) slices instead of multiplying I/O."""
@@ -223,7 +227,7 @@ def test_format_lww_unsorted_component_skips_slicing(uri, spark):
     import pyarrow.parquet as pq
 
     from tiledb_py_spark import manifest as mf
-    from tiledb_py_spark.sources.spark_datasource import TileDBReader
+    from tiledb_py_spark.sources import spark_datasource as sd
 
     rng = np.random.RandomState(3)
     base = pd.DataFrame({"k": np.arange(4000, dtype=np.int64),
@@ -242,35 +246,116 @@ def test_format_lww_unsorted_component_skips_slicing(uri, spark):
             perm = rng.permutation(tbl.num_rows)
             pq.write_table(tbl.take(perm), p, row_group_size=500)
 
-    r = TileDBReader(uri, None, lww_split_bytes=16 << 10)
-    splits = r.partitions()
+    monkeypatch.setattr(sd, "_SPLIT_BYTES", 16 << 10)
+    splits, out = _read_in_process(uri)
     group_splits = [s for s in splits if s.group]
-    assert len(group_splits) == 1 and group_splits[0].group_range in ((), (None, None))
+    assert len(group_splits) == 1 and group_splits[0].group_range == ()
     # and the merge still resolves LWW correctly on the shuffled files
-    out = spark.read.format("tiledb") \
-        .option("lww_split_bytes", 16 << 10).load(uri).orderBy("k").toPandas()
     eng = tdb.open(uri, spark=spark).dataframe().orderBy("k").toPandas()
     assert out.equals(eng)
 
 
 def test_format_lww_few_overlaps_keeps_per_split_anti_join(uri, spark):
-    """At or below the threshold the shuffle-free per-split anti-join is
-    the right plan (cost bounded by actual overlap) — no group splits."""
+    """A few overlapping fragments plan ONE merge split for their
+    component, with each file planned exactly once, while a fragment
+    that overlaps nothing keeps its plain split."""
     base = pd.DataFrame({"k": np.arange(100, dtype=np.int64),
                          "v": np.zeros(100)})
-    tdb.from_pandas(uri, base, index_dims=["k"])
+    tdb.from_pandas(uri, base, index_dims=["k"], full_domain=True)
     for i in range(1, 4):
         upd = pd.DataFrame({"k": np.arange(10, dtype=np.int64),
                             "v": np.full(10, float(i))})
         tdb.from_pandas(uri, upd, index_dims=["k"], mode="append")
+    far = pd.DataFrame({"k": np.arange(200, 210, dtype=np.int64),
+                        "v": np.full(10, 5.0)})
+    tdb.from_pandas(uri, far, index_dims=["k"], mode="append")
 
     from tiledb_py_spark.sources.spark_datasource import TileDBReader
 
     splits = TileDBReader(uri, None).partitions()
-    assert not any(s.group for s in splits)
-    assert any(s.newer for s in splits)
+    group_splits = [s for s in splits if s.group]
+    assert len(group_splits) == 1 and len(group_splits[0].group) == 4
+    plain = [s.file_path for s in splits if s.file_path]
+    refs = [p for paths, _d, _m in group_splits[0].group for p in paths]
+    assert len(plain) == 1
+    assert len(refs + plain) == len(set(refs + plain)) == 5
     out = spark.read.format("tiledb").load(uri).orderBy("k").toPandas()
-    assert out["v"].tolist() == [3.0] * 10 + [0.0] * 90
+    assert out["v"].tolist() == [3.0] * 10 + [0.0] * 90 + [5.0] * 10
+
+
+def test_format_lww_attr_filter_keeps_supersession(uri, spark):
+    """A pushed ATTR predicate filters only the merged output: a newer
+    version that fails it still hides the older version that passes."""
+    base = pd.DataFrame({"k": np.arange(50, dtype=np.int64),
+                         "v": np.zeros(50)})
+    tdb.from_pandas(uri, base, index_dims=["k"])
+    upd = pd.DataFrame({"k": np.arange(10, 30, dtype=np.int64),
+                        "v": np.full(20, 100.0)})
+    tdb.from_pandas(uri, upd, index_dims=["k"], mode="append")
+    df = spark.read.format("tiledb").load(uri)
+    got = sorted(r.k for r in df.filter(df.v < 50).collect())
+    assert got == list(range(10)) + list(range(30, 50))
+
+
+def test_format_lww_composite_string_key_matches_engine(uri, spark):
+    """A 2-D (int64, string) array with overlapping appends and a delete:
+    the exact anti-join on the composite key gives the engine's answer."""
+    rng = np.random.RandomState(11)
+    words = np.array(["x", "y", "zz", "été", "a b"])
+
+    def batch(n, v):
+        return pd.DataFrame({
+            "a": rng.randint(0, 20, n).astype(np.int64),
+            "s": words[rng.randint(0, len(words), n)],
+            "v": np.full(n, v)}).drop_duplicates(["a", "s"])
+
+    tdb.from_pandas(uri, batch(80, 0.0), index_dims=["a", "s"],
+                    full_domain=True)
+    for i in range(1, 4):
+        tdb.from_pandas(uri, batch(40, float(i)), index_dims=["a", "s"],
+                        mode="append")
+    with tdb.open(uri, "d", spark=spark) as A:
+        A.query(cond="v == 2.0").submit_delete()
+    out = (spark.read.format("tiledb").load(uri)
+           .orderBy("a", "s").toPandas())
+    eng = (tdb.open(uri, spark=spark).dataframe()
+           .orderBy("a", "s").toPandas())
+    assert not out.duplicated(["a", "s"]).any()
+    assert out.equals(eng)
+
+
+def test_format_lww_list_attr_merges(uri, spark):
+    """A list-typed (var-length) attr passes through the merge: only the
+    dim columns enter the anti-join."""
+    def batch(ks, x):
+        return pd.DataFrame({
+            "k": np.asarray(ks, dtype=np.int64),
+            "emb": [np.full(3, x, dtype="float32") for _ in ks]})
+
+    tdb.from_pandas(uri, batch(range(10), 0.0), index_dims=["k"])
+    tdb.from_pandas(uri, batch(range(5), 1.0), index_dims=["k"],
+                    mode="append")
+    got = {r.k: list(r.emb) for r in
+           spark.read.format("tiledb").load(uri).collect()}
+    assert got == {k: [1.0 if k < 5 else 0.0] * 3 for k in range(10)}
+
+
+def test_format_read_refuses_unknown_option(arr, spark, tmp_path):
+    """Every read option outside the supported set fails loudly, naming
+    the option — a removed one is never silently ignored."""
+    for opt in ("lww_group_threshold", "lww_split_bytes", "timestmap"):
+        with pytest.raises(Exception, match=rf"unknown option.*{opt}"):
+            spark.read.format("tiledb").option(opt, "0").load(arr).collect()
+    assert spark.read.format("tiledb").option("timestamp", 2**62) \
+        .load(arr).count() == 500
+    q = (spark.readStream.format("tiledb").option("timestamp", "1")
+         .load(arr).writeStream.format("noop")
+         .option("checkpointLocation", str(tmp_path / "ckpt")).start())
+    try:
+        with pytest.raises(Exception, match=r"unknown option.*timestamp"):
+            q.awaitTermination(120)
+    finally:
+        q.stop()
 
 
 def test_rg_stats_pruning_plans_fewer_splits(uri, spark):
@@ -476,7 +561,7 @@ def test_stream_native_sink_replay_idempotent(arr, spark, tmp_path):
 
     from tiledb_py_spark import manifest as mf
     from tiledb_py_spark.sources.spark_datasource import (
-        TileDBStreamWriter, _StreamPieceCommit)
+        TileDBStreamWriter, _FragCommit)
 
     out_uri = str(tmp_path / "replay_sink")
     tdb.from_pandas(out_uri, pd.DataFrame(
@@ -491,7 +576,7 @@ def test_stream_native_sink_replay_idempotent(arr, spark, tmp_path):
             "k": pa.array(vals, type=pa.int64()),
             "v2": pa.array([float(v) for v in vals])}),
             os.path.join(w.stage_dir, fn))
-        return _StreamPieceCommit(file_name=fn, rows=len(vals))
+        return _FragCommit(file_name=fn, rows=len(vals))
 
     w.commit([stage([1, 2, 3])], batchId=7)
     v7 = mf.read_manifest(out_uri).version

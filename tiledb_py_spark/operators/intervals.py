@@ -68,10 +68,10 @@ def _resolve_range(df, d, bounds) -> tuple:
 
 def _uniform_bucket(d, lo: float, hi: float, nb: int):
     """Uniform-width bucket id in [0, nb-1] — plain arithmetic, fully
-    whole-stage-codegen'd.  The as-of join's quantile buckets
-    (``stats_bounds.bucket_index``) were measured ~10x slower here: the
-    higher-order ``filter`` over a 64-literal array is interpreted,
-    allocating the array per evaluated row.  Uniform buckets are safe
+    whole-stage-codegen'd, and needs no job to find cuts.  Quantile
+    buckets as an interpreted higher-order ``filter`` over a 64-literal
+    array were measured ~10x slower here (the array is allocated per
+    evaluated row).  Uniform buckets are safe
     for a JOIN key (unlike as-of's per-bucket windows): the stream side
     of a hash join never shuffles, so bucket skew does not become task
     skew, and AQE splits any skewed sort-merge partition.  Out-of-range

@@ -278,9 +278,7 @@ def global_running_sum(df: DataFrame, order_cols: Sequence[str],
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
         return df.withColumn(cum_col, F.sum(value_col).over(w))
     # null first-order values yield bucket 0 (bucket_index's default),
-    # matching the nulls-first position of a plain ascending window;
-    # SQL-snippet form -> codegen'd binary-search IF tree
-    # (stats_bounds.bucket_index)
+    # matching the nulls-first position of a plain ascending window
     df2 = df.withColumn("__gcs_bkt", bucket_index(d_sql, bounds))
     wb = (Window.partitionBy("__gcs_bkt").orderBy(*order)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))

@@ -24,6 +24,7 @@ balance.
 from __future__ import annotations
 
 import datetime as _dt
+import math
 import os
 from concurrent.futures import ThreadPoolExecutor
 from typing import Optional, Sequence
@@ -70,9 +71,9 @@ def column_chunk_minmax(rg, column: str):
     """Raw ``(min, max)`` statistics for ``column`` in one row-group
     footer (pyarrow ``RowGroupMetaData``), or ``None`` when the column
     is absent or carries no min/max.  Shared by the driver-side bounds
-    derivation here, the LWW component slicer and the per-slice
-    row-group filter of the LWW group reader
-    (``sources/spark_datasource.py``) so the footer walk cannot drift."""
+    derivation here and the LWW component slicer
+    (``sources/spark_datasource._component_ranges``) so the footer walk
+    cannot drift."""
     for j in range(rg.num_columns):
         cc = rg.column(j)
         if cc.path_in_schema == column:
@@ -266,78 +267,65 @@ def monotonic_view_sql(col: str, dtype: str) -> str:
     return f"CAST({q} AS DOUBLE)"
 
 
-def bucket_index(d, bounds) -> "object":
-    """Bucket id = number of bounds strictly below ``d``.  Null ``d``
-    yields 0; callers wanting null-bucket semantics wrap it.  Bounds may
-    be floats (numeric/timestamp monotonic view) or strings
-    (``string_range_bounds`` cuts; UTF8_BINARY ``>`` matches orderBy).
+def _double_sql(b: float) -> str:
+    """SQL literal of a double cut; the non-finite ones have no literal
+    syntax, so they are string casts (no escapes: they parse the same
+    under any ``escapedStringLiterals`` setting, with ANSI on or off)."""
+    if math.isnan(b):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(b):
+        return "CAST('Infinity' AS DOUBLE)" if b > 0 \
+            else "CAST('-Infinity' AS DOUBLE)"
+    return f"{b!r}D"
 
-    Pass ``d`` as a SQL snippet (``monotonic_view_sql`` or a quoted
-    column name) to get the CODEGEN form: a binary-search ``IF`` tree
-    built with ONE parsed expression — log2(n) comparisons per row
-    inside whole-stage codegen, vs the array-filter fold which is
-    evaluated interpreted (higher-order functions sit outside codegen)
-    and touches every cut.  Measured over the sf10 events scan,
-    31 cuts: 0.21 s (tree) vs 0.27 s (flat int(d>b) sum) vs 1.43 s
-    (fold) — ~6.7x per row — at sub-ms build cost.  Passing a Column
-    keeps the array-filter form (same values) for callers whose ``d``
-    has no SQL rendering — an equivalent tree built through the Column
-    API would cost ~134 ms of driver build per 31-cut site, which is
-    why the fold form existed at all."""
-    import math
 
+def bucket_index(d: str, bounds) -> "object":
+    """Bucket id = number of bounds strictly below ``d``, in Spark's
+    order (doubles: NaN is greatest and ``NaN > NaN`` is false; strings:
+    UTF8_BINARY, which matches orderBy).  Null ``d`` yields 0; callers
+    wanting null-bucket semantics wrap it.  Bounds may be floats
+    (numeric/timestamp monotonic view, including +-inf and NaN) or
+    strings (``string_range_bounds`` cuts), in any order.
+
+    ``d`` is a SQL snippet (``monotonic_view_sql`` or a quoted column
+    name): the id is a binary-search ``IF`` tree built with ONE parsed
+    expression — log2(n) comparisons per row inside whole-stage codegen.
+    Measured over the sf10 events scan, 31 cuts: 0.21 s, vs 1.43 s for
+    an interpreted array-filter fold (higher-order functions sit outside
+    codegen and touch every cut).  A Column ``d`` is refused: an
+    equivalent tree built through the Column API would cost ~134 ms of
+    driver build per 31-cut site."""
     from pyspark.sql import functions as F
 
-    if isinstance(d, str):
-        # the tree is a binary SEARCH, so it needs sorted cuts; the
-        # fold form counts order-independently.  "count of cuts
-        # strictly below d" is itself order-independent, so sorting
-        # here preserves the documented contract for unsorted input
-        # (every internal caller already passes sorted cuts — this is
-        # a guard for external callers).  Strings sort by UTF-8 bytes
-        # to match Spark's UTF8_BINARY `>`.  A string cut renders as a
-        # hex binary literal cast to STRING: no quoting or escaping, so
-        # it parses the same under any `escapedStringLiterals` setting,
-        # and it constant-folds to a plain string literal.
-        if bounds and isinstance(bounds[0], str):
-            lits = [f"CAST(X'{str(b).encode().hex()}' AS STRING)"
-                    for b in sorted(bounds, key=lambda s: str(s).encode())]
-        elif all(math.isfinite(float(b)) for b in bounds):
-            lits = [f"{float(b)!r}D" for b in sorted(float(b) for b in bounds)]
-        else:
-            # non-finite cuts have no SQL literal rendering — fall back
-            # to the array-filter form over the parsed column
-            return bucket_index(F.expr(d), bounds)
-        if not lits:
-            return F.expr("0")
-
-        def tree(lo: int, hi: int) -> str:
-            # bucket id for d within cuts[lo:hi] (= count of cuts < d)
-            if lo == hi:
-                return str(lo)
-            mid = (lo + hi) // 2
-            return (f"IF(({d}) > {lits[mid]}, "
-                    f"{tree(mid + 1, hi)}, {tree(lo, mid)})")
-
-        # null d: IF's null predicate takes the FALSE branch (it never
-        # propagates null), so the tree descends low at every level and
-        # lands on leaf 0 — the fold form's null-yields-0 contract
-        # holds structurally.  The coalesce is a defensive no-op kept
-        # so a future edit to the leaves cannot silently break that
-        # contract.
-        return F.expr(f"coalesce({tree(0, len(lits))}, 0)")
-
-    # the literal array is built with ONE parsed SQL expression, not
-    # num_buckets F.lit() py4j round trips (~0.1 s of driver build time
-    # per 64-cut call site; repr() round-trips doubles exactly and the
-    # parsed tree is the same array-of-Literal node set)
+    if not isinstance(d, str):
+        raise TypeError(
+            "bucket_index takes d as a SQL snippet (monotonic_view_sql(col, "
+            f"dtype) or a backtick-quoted column name), not {type(d).__name__}")
+    # the tree is a binary SEARCH, so it needs the cuts in Spark's
+    # order; "count of cuts strictly below d" does not depend on the
+    # order the caller gave.  A string cut renders as a hex binary
+    # literal cast to STRING: no quoting or escaping, so it parses the
+    # same under any `escapedStringLiterals` setting, and it
+    # constant-folds to a plain string literal.
     if bounds and isinstance(bounds[0], str):
-        barr = F.array(*[F.lit(bd) for bd in bounds])
+        lits = [f"CAST(X'{str(b).encode().hex()}' AS STRING)"
+                for b in sorted(bounds, key=lambda s: str(s).encode())]
     else:
-        fb = [float(bd) for bd in bounds]
-        if all(math.isfinite(b) for b in fb):
-            barr = F.expr(
-                "array(" + ",".join(f"{b!r}D" for b in fb) + ")")
-        else:
-            barr = F.array(*[F.lit(b) for b in fb])
-    return F.size(F.filter(barr, lambda bd: d > bd))
+        lits = [_double_sql(b) for b in sorted(
+            (float(b) for b in bounds), key=lambda b: (math.isnan(b), b))]
+    if not lits:
+        return F.expr("0")
+
+    def tree(lo: int, hi: int) -> str:
+        # bucket id for d within cuts[lo:hi] (= count of cuts < d)
+        if lo == hi:
+            return str(lo)
+        mid = (lo + hi) // 2
+        return (f"IF(({d}) > {lits[mid]}, "
+                f"{tree(mid + 1, hi)}, {tree(lo, mid)})")
+
+    # null d: IF's null predicate takes the FALSE branch (it never
+    # propagates null), so the tree descends low at every level and
+    # lands on leaf 0.  The coalesce is a defensive no-op kept so a
+    # future edit to the leaves cannot silently break that contract.
+    return F.expr(f"coalesce({tree(0, len(lits))}, 0)")

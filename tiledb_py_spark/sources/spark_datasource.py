@@ -8,8 +8,10 @@ parquet-fragment + manifest storage.
 
 Read path:
 - ``partitions()``: driver-side planning — time-travel fragment selection
-  and per-dim MBR pruning from pushed filters, then ONE InputPartition per
-  (parquet file, row-group span), so a 1000-executor cluster gets balanced
+  and per-dim MBR pruning from pushed filters.  A fragment that overlaps
+  no other live fragment (or any fragment of an array that allows
+  duplicates) becomes plain splits: (parquet file, row-group span)
+  pieces of ~``_SPLIT_BYTES``, so a 1000-executor cluster gets balanced
   splits without listing data files on executors.
 - ``pushFilters()``: typed Spark filters are kept for pruning AND handed
   back to Spark for re-evaluation (double-filtering keeps correctness
@@ -18,20 +20,12 @@ Read path:
   filter expression — columnar end-to-end.
 - Delete-condition fragments are applied per batch (row-level, fragment
   timestamp-aware).  Cross-fragment last-write-wins on no-duplicates
-  arrays is resolved per-task, merge-on-read style: planning attaches to
-  each split the parquet files of NEWER fragments whose MBR overlaps its
-  fragment, and ``read()`` anti-joins its rows against their (still-live)
-  coordinates — the equality-delete pattern, no shuffle, cost bounded by
-  actual MBR overlap.  When a fragment has more than
-  ``lww_group_threshold`` (default 8) newer overlapping fragments — the
-  hot-key upsert pattern, where per-split stacking would re-read newer
-  files O(F^2) times — its whole overlap component becomes a
-  streaming-merge split that reads each file exactly once (see
-  ``_read_group``).  A component bigger than ``lww_split_bytes``
-  (default 1 GiB) is further auto-sliced into first-dim coordinate
-  ranges derived from row-group stats, one merge task per slice —
-  a giant component regains parallelism and bounded memory instead of
-  serializing into one task.
+  arrays is resolved merge-on-read, with no shuffle: every connected
+  component of MBR-overlapping fragments becomes merge splits, sliced
+  by first-dim coordinate range to ~``_SPLIT_BYTES`` each.  A merge task
+  reads each member file once, newest fragment first, and drops the
+  rows whose coordinates a newer member already holds — an exact Arrow
+  anti-join on the dim columns (see ``_read_group``).
 
 Write path (``format("tiledb")`` batch and stream sinks): at plan time
 the driver reads the manifest once, refuses missing or unknown columns
@@ -59,7 +53,7 @@ runs in the worker.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterator, List, Optional, Sequence
 
 from pyspark.sql.datasource import (DataSource, DataSourceArrowWriter,
@@ -72,6 +66,14 @@ from pyspark.sql.datasource import (DataSourceStreamArrowWriter,
 from pyspark.sql.types import StructType
 
 FORMAT_NAME = "tiledb"
+# ~96 MB of compressed row groups per read task, for plain and merge
+# splits alike: big enough to amortize the Python worker's fixed cost per
+# task (~3 ms of CPU on a 4-core host, ~250 ms before _worker.prepare)
+# and its round-trip, small enough to balance a cluster
+_SPLIT_BYTES = 96 << 20
+# the only options a read takes; Spark passes ``path`` from ``load()``
+# (keys arrive lower-cased)
+_READ_OPTIONS = frozenset({"path", "uri"})
 
 
 @dataclass
@@ -82,24 +84,15 @@ class _Split(InputPartition):
     predicates: tuple = ()
     # delete conditions visible to this fragment: tuple of expr strings
     deletes: tuple = ()
-    # last-write-wins on no-duplicates arrays, merge-on-read style: rows
-    # whose coordinates also appear in a NEWER overlapping fragment are
-    # superseded.  Each entry is (parquet_path, deletes_for_that_fragment)
-    # — the task anti-joins its batch against the union of their (still
-    # live) coordinates.  No shuffle; cost bounded by MBR overlap.
-    newer: tuple = ()
     dim_names: tuple = ()
-    # many-overlap fallback: one split per connected component of
-    # mutually-overlapping fragments, entries (file_paths, deletes) in
-    # NEWEST-fragment-first order.  The task streams fragments newest
-    # first, anti-joining each against the coordinates already seen —
-    # every file is read exactly ONCE (the per-split `newer` stacking
-    # above is O(F^2) reads when F fragments all overlap).
+    # last-write-wins merge split (no-duplicates arrays): one connected
+    # component of MBR-overlapping fragments, entries (file_paths,
+    # deletes, masked) NEWEST fragment first.  The task reads every file
+    # once (see TileDBReader._read_group).  Empty for a plain split.
     group: tuple = ()
-    # giant-component auto-split: restrict this group task to first-dim
-    # coordinates in [lo, hi) — (None, None) / () means the whole domain.
-    # A coordinate lives in exactly one slice, so per-slice merges are
-    # independent and the component regains parallelism + bounded memory.
+    # restrict a merge split to first-dim coordinates in [lo, hi)
+    # (None = unbounded; () = the whole domain).  A coordinate lives in
+    # exactly one slice, so the slices of a component merge independently.
     group_range: tuple = ()
     # schema-evolution support: the declared arrow schema (pa.Schema,
     # picklable) + per-attr fill values — fragments written before an
@@ -192,8 +185,6 @@ class _FragCommit(WriterCommitMessage):
     rows: int = 0
 
 
-_StreamPieceCommit = _FragCommit   # the stream sink's name for it
-
 
 class TileDBDataSource(DataSource):
     """``format("tiledb")`` entry point."""
@@ -218,16 +209,23 @@ class TileDBDataSource(DataSource):
 
         return mf.read_manifest(self._uri()).schema.spark_schema()
 
+    def _check_read_options(self, allowed) -> None:
+        """Refuse LOUDLY any option a read does not use: a misspelt or
+        removed option would otherwise be silently ignored."""
+        unknown = sorted(set(self.options) - allowed)
+        if unknown:
+            raise ValueError(
+                f"format('tiledb') read: unknown option(s) {unknown}; "
+                f"supported: {sorted(allowed)}")
+
     def reader(self, schema: StructType) -> "TileDBReader":
+        self._check_read_options(_READ_OPTIONS | {"timestamp"})
         ts = self.options.get("timestamp")
-        thr = self.options.get("lww_group_threshold")
-        sb = self.options.get("lww_split_bytes")
         return TileDBReader(self._uri(), int(ts) if ts is not None else None,
-                            lww_group_threshold=int(thr) if thr is not None else 8,
-                            lww_split_bytes=int(sb) if sb is not None else 1 << 30,
                             spark_schema=schema)
 
     def streamReader(self, schema: StructType) -> "TileDBStreamReader":
+        self._check_read_options(_READ_OPTIONS)
         return TileDBStreamReader(self._uri(), schema)
 
     def _plan_write(self, schema: StructType, overwrite: bool):
@@ -260,13 +258,9 @@ _PUSHABLE = (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan,
 
 class TileDBReader(DataSourceReader):
     def __init__(self, uri: str, timestamp: Optional[int],
-                 lww_group_threshold: int = 8,
-                 lww_split_bytes: int = 1 << 30,
                  spark_schema: Optional[StructType] = None):
         self.uri = uri
         self.timestamp = timestamp
-        self.lww_group_threshold = lww_group_threshold
-        self.lww_split_bytes = lww_split_bytes
         self.spark_schema = spark_schema
         self._preds: list[tuple] = []
 
@@ -358,71 +352,35 @@ class TileDBReader(DataSourceReader):
             if a.fill is not None and not a.nullable
             and a.name in {f.name for f in arrow_schema})
 
-        _files_cache: dict = {}
-        _dels_cache: dict = {}
-
         def frag_files(f) -> list:
-            got = _files_cache.get(f.name)
-            if got is not None:
-                return got
             out = []
             for root, _dirs, files in os.walk(mf.fragment_path(self.uri, f)):
                 for fn in sorted(files):
                     if fn.endswith(".parquet"):
                         out.append(os.path.join(root, fn))
-            _files_cache[f.name] = out
             return out
 
         def frag_deletes(f) -> tuple:
-            got = _dels_cache.get(f.name)
-            if got is not None:
-                return got
             # deletes apply to cells written at or before the delete's ts
-            out = tuple(
+            return tuple(
                 d.delete_condition for d in deletes
                 if d.timestamp_range[0] >= f.timestamp_range[0] and d.delete_condition)
-            _dels_cache[f.name] = out
-            return out
 
         # commit order for last-write-wins (same total order as
         # Array._scan_df: timestamp, manifest order for same-ms ties —
         # NOT the random uuid name, which would flip LWW for ~half of
         # same-millisecond write pairs)
         frs = sorted(frs, key=lambda f: f.timestamp_range[0])
-
-        def frag_masked(f) -> tuple:
-            return m.masked_attrs(f.schema_version)
-
-        mbrs = [_decode_mbr(schema, f.nonempty_domain) for f in frs]
-        need_lww = (not schema.allows_duplicates) and len(frs) > 1
         preds = tuple(self._preds)
         dim_names = tuple(d.name for d in schema.domain)
-        newer_map: dict[str, tuple] = {}
-        grouped: set = set()
-        group_splits: list[_Split] = []
-        if need_lww:
-            # pairwise MBR-overlap graph (i < j means j is newer)
-            n = len(frs)
-            edges = [[] for _ in range(n)]
-            newer_count = [0] * n
-            for i in range(n):
-                for j in range(i + 1, n):
-                    if all(_box_overlap(mbrs[i].get(d.name), mbrs[j].get(d.name))
-                           for d in schema.domain):
-                        edges[i].append(j)
-                        edges[j].append(i)
-                        newer_count[i] += 1
-            # Hot-key upsert workloads produce F mutually-overlapping
-            # fragments; stacking each fragment's newer files onto every
-            # split is O(F^2) file reads across the scan.  Above the
-            # threshold, route each connected overlap component through
-            # ONE streaming-merge split instead: fragments are processed
-            # newest first against a running seen-coordinate set, so each
-            # file is read exactly once (O(F)).  Parallelism drops to one
-            # task per component — for a single giant component prefer the
-            # native scan (Array.dataframe()), which resolves LWW with a
-            # fully parallel max_by shuffle (array.py _scan_df).
-            parent = list(range(n))
+        splits: list[_Split] = []
+        plain = list(range(len(frs)))
+        if not schema.allows_duplicates and len(frs) > 1:
+            # connected components of the pairwise MBR-overlap graph
+            # (union-find); every component of 2+ fragments is merged by
+            # _read_group, which reads each of its files exactly once
+            mbrs = [_decode_mbr(schema, f.nonempty_domain) for f in frs]
+            parent = list(range(len(frs)))
 
             def find(x):
                 while parent[x] != x:
@@ -430,198 +388,81 @@ class TileDBReader(DataSourceReader):
                     x = parent[x]
                 return x
 
-            for i in range(n):
-                for j in edges[i]:
-                    ri, rj = find(i), find(j)
-                    if ri != rj:
-                        parent[ri] = rj
+            for i in range(len(frs)):
+                for j in range(i + 1, len(frs)):
+                    if all(_box_overlap(mbrs[i].get(d.name), mbrs[j].get(d.name))
+                           for d in schema.domain):
+                        parent[find(i)] = find(j)
             comps: dict[int, list] = {}
-            for i in range(n):
+            for i in range(len(frs)):
                 comps.setdefault(find(i), []).append(i)
+            plain = []
             for members in comps.values():
-                if (len(members) > 1
-                        and max(newer_count[i] for i in members) > self.lww_group_threshold):
-                    # newest first; same-ms ties break by MANIFEST order
-                    # (the list index — frs is stably ts-sorted), never
-                    # the random uuid name, matching the per-split path
-                    # and Array._scan_df's frag_order_key (a name
-                    # tie-break flips LWW for ~half of same-ms pairs)
-                    entries = tuple(
-                        (tuple(frag_files(frs[i])), frag_deletes(frs[i]),
-                         frag_masked(frs[i]))
-                        for i in sorted(
-                            members,
-                            key=lambda i: (frs[i].timestamp_range[0], i),
-                            reverse=True))
-                    # a giant component must not serialize into ONE task:
-                    # slice it by first-dim coordinate ranges (from parquet
-                    # row-group stats) so each slice is an independent,
-                    # memory-bounded streaming merge — parallelism is
-                    # restored without shuffling (a coordinate lives in
-                    # exactly one slice)
-                    for rng in self._component_ranges(entries, dim_names[0]):
-                        group_splits.append(_Split(
-                            file_path="", row_groups=(), predicates=preds,
-                            deletes=(), group=entries, dim_names=dim_names,
-                            group_range=rng, arrow_schema=arrow_schema,
-                            fills=fills))
-                    grouped.update(members)
-            for i, f in enumerate(frs):
-                if i in grouped:
+                if len(members) == 1:
+                    plain.extend(members)
                     continue
-                entries = []
-                for j in sorted(edges[i]):
-                    if j <= i:
-                        continue
-                    dels = frag_deletes(frs[j])
-                    jm = frag_masked(frs[j])
-                    entries.extend((p, dels, jm) for p in frag_files(frs[j]))
-                newer_map[f.name] = tuple(entries)
+                # newest first; same-ms ties break by MANIFEST order (the
+                # list index — frs is stably ts-sorted), never the random
+                # uuid name, matching Array._scan_df's frag_order_key
+                entries = tuple(
+                    (tuple(frag_files(frs[i])), frag_deletes(frs[i]),
+                     m.masked_attrs(frs[i].schema_version))
+                    for i in sorted(
+                        members,
+                        key=lambda i: (frs[i].timestamp_range[0], i),
+                        reverse=True))
+                for rng in _component_ranges(entries, dim_names[0]):
+                    splits.append(_Split(
+                        file_path="", row_groups=(), predicates=preds,
+                        group=entries, dim_names=dim_names,
+                        group_range=rng, arrow_schema=arrow_schema,
+                        fills=fills))
 
-        splits: list[_Split] = list(group_splits)
         # prefetch parquet footers concurrently — serial footer reads
         # (one round-trip each on object storage) put O(#files) planning
-        # latency on the driver (_component_ranges' existing pattern)
+        # latency on the driver
         from concurrent.futures import ThreadPoolExecutor
 
-        plain_paths = [p for i, f in enumerate(frs) if i not in grouped
-                       for p in frag_files(f)]
+        plain_files = {i: frag_files(frs[i]) for i in plain}
+        plain_paths = [p for paths in plain_files.values() for p in paths]
         md_map: dict = {}
         if plain_paths:
             with ThreadPoolExecutor(
                     max_workers=min(16, len(plain_paths))) as ex:
                 md_map = dict(zip(plain_paths, ex.map(
                     lambda p: pq.ParquetFile(p).metadata, plain_paths)))
-        # ~96 MB of compressed row groups per task: big enough to amortize
-        # the Python worker's fixed cost per task (~3 ms of CPU on a 4-core
-        # host, ~250 ms before _worker.prepare) and its round-trip, small
-        # enough to balance a cluster
-        target_bytes = 96 << 20
-        for i, f in enumerate(frs):
-            if i in grouped:
-                continue
-            fdel = frag_deletes(f)
-            newer = newer_map.get(f.name, ())
+        for i in plain:
+            f = frs[i]
+            masked = m.masked_attrs(f.schema_version)
             # row-group stats of a masked (drop/re-add predecessor)
             # column describe the WRONG attr — never prune on them
-            fm = set(frag_masked(f))
-            prune_preds = (preds if not fm
-                           else tuple(p for p in preds if p[0] not in fm))
-            for p in frag_files(f):
+            prune_preds = tuple(p for p in preds if p[0] not in masked)
+            fdel = frag_deletes(f)
+            for p in plain_files[i]:
                 md = md_map[p]
-                live = [i for i in range(md.num_row_groups)
-                        if _rg_matches(md.row_group(i), prune_preds)]
-                group: list = []
+                spans: list = [[]]
                 size = 0
-                for i in live:
-                    group.append(i)
-                    size += md.row_group(i).total_byte_size
-                    if size >= target_bytes:
-                        splits.append(_Split(file_path=p, row_groups=tuple(group),
-                                             predicates=preds, deletes=fdel,
-                                             newer=newer, dim_names=dim_names,
-                                             arrow_schema=arrow_schema,
-                                             fills=fills, masked=frag_masked(f)))
-                        group, size = [], 0
-                if group:
-                    splits.append(_Split(file_path=p, row_groups=tuple(group),
-                                         predicates=preds, deletes=fdel,
-                                         newer=newer, dim_names=dim_names,
-                                         arrow_schema=arrow_schema,
-                                         fills=fills, masked=frag_masked(f)))
+                for rg in range(md.num_row_groups):
+                    if not _rg_matches(md.row_group(rg), prune_preds):
+                        continue
+                    if size >= _SPLIT_BYTES:
+                        spans.append([])
+                        size = 0
+                    spans[-1].append(rg)
+                    size += md.row_group(rg).total_byte_size
+                splits.extend(
+                    _Split(file_path=p, row_groups=tuple(span),
+                           predicates=preds, deletes=fdel,
+                           dim_names=dim_names, arrow_schema=arrow_schema,
+                           fills=fills, masked=masked)
+                    for span in spans if span)
         return splits or [_Split(file_path="", row_groups=(), predicates=(),
                                  deletes=())]
-
-    def _component_ranges(self, entries, dim0: str):
-        """First-dim range slicing for a giant overlap component.
-
-        Returns a list of ``(lo, hi)`` half-open first-dim ranges (``None``
-        = unbounded; ``[()]`` = a single whole-domain slice) sized so each
-        slice covers roughly ``lww_split_bytes`` of row-group data.
-        Boundaries are taken from row-group min values, so for fragments
-        sorted on the first dim each row group feeds ~1 slice; in the
-        worst (unsorted) case a row group is re-read once per slice it
-        straddles — still far better than one serialized mega-task.
-        Components below the threshold, or with missing first-dim stats,
-        keep the single-task streaming merge.  Footers are read with a
-        thread pool: a giant component has many files by construction,
-        and serial footer fetches (one round-trip each on object
-        storage) would put unbounded planning latency on the driver."""
-        import pyarrow.parquet as pq
-        from concurrent.futures import ThreadPoolExecutor
-
-        all_paths = [p for paths, _dels, _m in entries for p in paths]
-
-        from ..operators.stats_bounds import column_chunk_minmax
-
-        def footer(p):
-            md = pq.ParquetFile(p).metadata
-            out = []
-            for i in range(md.num_row_groups):
-                rg = md.row_group(i)
-                out.append((column_chunk_minmax(rg, dim0),
-                            rg.total_byte_size))
-            return out
-
-        rgs = []  # ((min, max) | None, bytes)
-        total = 0
-        if all_paths:
-            with ThreadPoolExecutor(
-                    max_workers=min(16, len(all_paths))) as ex:
-                for file_rgs in ex.map(footer, all_paths):
-                    for mm, size in file_rgs:
-                        rgs.append((mm, size))
-                        total += size
-        if total <= self.lww_split_bytes or any(mm is None for mm, _ in rgs):
-            return [()]
-        n_slices = min(64, -(-total // self.lww_split_bytes))
-        rgs.sort(key=lambda t: (t[0][0], t[0][1]))
-        target = total / n_slices
-        bounds: list = []
-        acc = 0.0
-        next_cut = target
-        for (mn, _mx), size in rgs:
-            if acc >= next_cut and (not bounds or mn > bounds[-1]):
-                bounds.append(mn)
-                next_cut += target
-            acc += size
-        if not bounds:
-            return [()]
-
-        def amplification(bnds) -> float:
-            """Bytes read across all slices / component bytes: a row
-            group is re-read by every slice it straddles."""
-            read = 0
-            for (mn, mx), size in rgs:
-                k = 1 + sum(1 for b in bnds if mn < b <= mx)
-                read += k * size
-            return read / total
-
-        # engine-written fragments are range-clustered (sorted on the
-        # first dim), so row groups are narrow and each feeds ~1 slice.
-        # For unsorted data (wide row groups spanning many slices) the
-        # re-read cost can exceed the parallelism win — halve the slice
-        # count until amplification is acceptable (sorted fragments sit
-        # at ~1.0x; 1.5x tolerates boundary straddle, rejects layouts
-        # where most row groups span multiple slices), degrading to the
-        # single-task merge in the worst case.
-        while bounds and amplification(bounds) > 1.5:
-            bounds = bounds[1::2]
-        if not bounds:
-            return [()]
-        ranges = []
-        lo = None
-        for b in bounds:
-            ranges.append((lo, b))
-            lo = b
-        ranges.append((lo, None))
-        return ranges
 
     def read(self, split: _Split):
         import pyarrow as pa
         import pyarrow.dataset as ds
         import pyarrow.fs as pafs
-        import pyarrow.parquet as pq
 
         if split.group:
             yield from self._read_group(split)
@@ -666,61 +507,16 @@ class TileDBReader(DataSourceReader):
             split.predicates,
             available=(file_cols - set(split.masked)) if conform else None)
 
-        newer_coords = None
-        if split.newer:
-            # last-write-wins: drop rows whose coordinates survive in a
-            # newer overlapping fragment (equality-delete / merge-on-read
-            # semantics, resolved per-task with a pyarrow anti-join —
-            # no shuffle, no cross-partition coordination)
-            dims = list(split.dim_names)
-            newer_parts = []
-            for path, dels, jmask in split.newer:
-                nt = pq.read_table(path, columns=None if dels else dims)
-                if dels:
-                    if jmask or (split.arrow_schema is not None
-                                 and set(f.name for f in split.arrow_schema)
-                                 - set(nt.column_names)):
-                        # pre-evolution fragment: delete conditions may
-                        # reference columns it lacks (or columns it must
-                        # NOT read — drop/re-add mask) — conform first
-                        # (fill/null), matching the native scan's
-                        # evolved-fill-then-delete order
-                        nt = _conform_table(nt, split.arrow_schema,
-                                            split.fills, jmask)
-                    # a newer row that was itself deleted no longer
-                    # supersedes (the older cell resurfaces, matching
-                    # Array._scan_df delete-then-dedup order)
-                    nt = _apply_deletes(nt, dels)
-                nt = nt.select(dims)
-                if split.arrow_schema is not None:
-                    # legacy fragments (pre-r14 sink) can store dims at
-                    # narrower types (int32 k vs declared int64): left
-                    # uncast, concat_tables over mixed siblings and the
-                    # anti-join against the declared-typed scan both
-                    # raise ArrowInvalid — cast to the declared dim
-                    # types like every other read surface
-                    dim_target = pa.schema(
-                        [split.arrow_schema.field(d) for d in dims])
-                    if nt.schema != dim_target:
-                        nt = nt.cast(dim_target)
-                newer_parts.append(nt)
-            if newer_parts:
-                newer_coords = pa.concat_tables(newer_parts) \
-                    .group_by(dims).aggregate([])
-
         for batch in frag.to_batches(filter=expr):
             if batch.num_rows == 0:
                 continue
-            if conform or split.deletes or newer_coords is not None:
+            if conform or split.deletes:
                 tbl = pa.Table.from_batches([batch])
                 if conform:
                     tbl = _conform_table(tbl, split.arrow_schema,
                                          split.fills, split.masked)
                 if split.deletes:
                     tbl = _apply_deletes(tbl, split.deletes)
-                if newer_coords is not None:
-                    tbl = tbl.join(newer_coords, keys=list(split.dim_names),
-                                   join_type="left anti")
                 for b in tbl.to_batches():
                     if b.num_rows:
                         yield b
@@ -728,101 +524,145 @@ class TileDBReader(DataSourceReader):
                 yield batch
 
     def _read_group(self, split: _Split):
-        """Streaming last-write-wins merge over one connected component of
-        mutually-overlapping fragments (many-overlap fallback): fragments
-        arrive NEWEST first; each is anti-joined against the coordinates
-        of all newer fragments seen so far, then contributes its own
-        (post-delete) coordinates to the seen set.
+        """Last-write-wins merge over one connected component of
+        MBR-overlapping fragments.  Members arrive NEWEST first; each is
+        read once, conformed to the declared schema (evolution fills,
+        drop/re-add masks, legacy narrow dim types), cleared of its
+        deleted cells, and anti-joined against the coordinates of the
+        newer members; its surviving coordinates then join that seen set
+        — so a deleted newer cell no longer hides the older one, the
+        ``Array._scan_df`` delete-then-dedup order.
 
-        Memory: the seen set holds ONE uint64 hash per distinct
-        coordinate (8 bytes/coord regardless of dim count/width; a 64-bit
-        collision wrongly superseding a live row is ~n^2/2^65 — negligible
-        at any realistic component size), plus one fragment slice at a
-        time.  With a ``group_range`` the task reads only the row groups
-        whose first-dim stats intersect its slice and filters rows to the
-        slice, so both I/O and the seen set scale with the slice, not the
-        component."""
+        The anti-join is exact: an Arrow hash join on the dim columns
+        alone (the attrs never enter the join, so list-typed attrs and
+        ``not null`` fields pass through untouched).  Memory: the seen
+        coordinates' own bytes — one row of dim values per distinct live
+        coordinate — plus one member fragment at a time.
+
+        Pruning before the merge uses only dim predicates and the slice's
+        ``[lo, hi)`` first-dim range (row-group statistics, then rows): a
+        newer version of a cell has the same coordinates, so every
+        version of a cell is kept or dropped together.  Attr predicates
+        filter only the merged output — a newer version that fails them
+        still hides the older one.
+
+        Trade-off: a component under ``_SPLIT_BYTES`` is one task however
+        many fragments it has, where a per-fragment split would give one
+        task per file; total CPU is lower because every file is read
+        once, not once per older overlapping fragment."""
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        from ..operators.stats_bounds import column_chunk_minmax
-
-        expr = _preds_to_expr(split.predicates)
+        import pyarrow.dataset as ds
 
         dims = list(split.dim_names)
-        dim0 = dims[0]
-        lo, hi = (tuple(split.group_range) + (None, None))[:2] \
-            if split.group_range else (None, None)
-
-        def read_sliced(p):
-            f = pq.ParquetFile(p)
-            if lo is None and hi is None:
-                return f.read()
-            md = f.metadata
-            keep = []
-            for i in range(md.num_row_groups):
-                mm = column_chunk_minmax(md.row_group(i), dim0)
-                if mm is None:  # no stats: must read; row filter below
-                    keep.append(i)
-                elif ((lo is None or mm[1] >= lo)
-                        and (hi is None or mm[0] < hi)):
-                    keep.append(i)
-            if not keep:
-                return pa.Table.from_batches([], schema=f.schema_arrow)
-            tbl = f.read_row_groups(keep)
-            mask = None
-            if lo is not None:
-                mask = pc.greater_equal(tbl[dim0], lo)
-            if hi is not None:
-                m2 = pc.less(tbl[dim0], hi)
-                mask = m2 if mask is None else pc.and_(mask, m2)
-            return tbl.filter(mask) if mask is not None else tbl
-
-        target = split.arrow_schema
-        seen = None  # sorted unique coord hashes of all newer fragments
+        lo, hi = (tuple(split.group_range) + (None, None))[:2]
+        pre = [p for p in split.predicates if p[0] in dims]
+        if lo is not None:
+            pre.append((dims[0], ">=", lo))
+        if hi is not None:
+            pre.append((dims[0], "<", hi))
+        pre_expr = _preds_to_expr(pre)
+        out_expr = _preds_to_expr(split.predicates)
+        seen = None  # dim columns of every live coordinate seen so far
         for paths, dels, gmask in split.group:
-            parts = [read_sliced(p) for p in paths]
-            if target is not None:
-                # conform BEFORE concat: pre-evolution fragments lack
-                # added columns (mixed-schema concat fails), and the
-                # output filter may reference an evolved column
-                parts = [_conform_table(t, target, split.fills, gmask)
-                         for t in parts]
-                if not parts:
-                    # an empty (record-only / fully-pruned) member:
-                    # contributes nothing, but concat_tables([]) raises
-                    parts = [target.empty_table()]
-            tbl = pa.concat_tables(parts)
+            if not paths:
+                continue  # a record-only member contributes nothing
+            tbl = ds.dataset(list(paths), format="parquet").to_table(
+                filter=pre_expr)
+            tbl = _conform_table(tbl, split.arrow_schema, split.fills, gmask)
             if dels:
                 tbl = _apply_deletes(tbl, dels)
-            h = _coord_hashes(tbl, dims)
-            surv = tbl if seen is None else tbl.filter(
-                pa.array(~np.isin(h, seen, assume_unique=False)))
-            if expr is not None:
-                # output-side pruning only; the full (slice-local) fragment
-                # still feeds the seen set — a newer row outside the
-                # predicate still supersedes an older in-range row
-                surv = surv.filter(expr)
-            for b in surv.to_batches():
+            if seen is not None:
+                rows = tbl.select(dims).append_column(
+                    "__row", pa.array(np.arange(tbl.num_rows)))
+                tbl = tbl.take(rows.join(seen, keys=dims,
+                                         join_type="left anti")["__row"])
+            coords = tbl.select(dims)
+            seen = coords if seen is None else pa.concat_tables([seen, coords])
+            if out_expr is not None:
+                tbl = tbl.filter(out_expr)
+            for b in tbl.to_batches():
                 if b.num_rows:
                     yield b
-            hs = np.unique(h)
-            seen = hs if seen is None else np.union1d(seen, hs)
 
 
-def _coord_hashes(tbl, dims):
-    """uint64 hash per row of the dim-coordinate tuple (deterministic
-    pandas hashing — stable across processes/executors)."""
-    import pandas as pd
+def _component_ranges(entries, dim0: str):
+    """First-dim range slicing for a merge component.
 
-    if tbl.num_rows == 0:
-        import numpy as np
+    Returns a list of ``(lo, hi)`` half-open first-dim ranges (``None``
+    = unbounded; ``[()]`` = a single whole-domain slice) sized so each
+    slice covers roughly ``_SPLIT_BYTES`` of row-group data.  Boundaries
+    are taken from row-group min values, so for fragments sorted on the
+    first dim each row group feeds ~1 slice; in the worst (unsorted)
+    case a row group is re-read once per slice it straddles — still far
+    better than one serialized mega-task.  Components under
+    ``_SPLIT_BYTES``, or with missing first-dim stats, stay one merge
+    task.  Footers are read with a thread pool: serial footer fetches
+    (one round-trip each on object storage) would put planning latency
+    proportional to the component's file count on the driver."""
+    import pyarrow.parquet as pq
+    from concurrent.futures import ThreadPoolExecutor
 
-        return np.empty(0, dtype="uint64")
-    pdf = tbl.select(dims).to_pandas()
-    return pd.util.hash_pandas_object(pdf, index=False).to_numpy()
+    from ..operators.stats_bounds import column_chunk_minmax
+
+    all_paths = [p for paths, _dels, _m in entries for p in paths]
+
+    def footer(p):
+        md = pq.ParquetFile(p).metadata
+        return [(column_chunk_minmax(md.row_group(i), dim0),
+                 md.row_group(i).total_byte_size)
+                for i in range(md.num_row_groups)]
+
+    rgs = []  # ((min, max) | None, bytes)
+    if all_paths:
+        with ThreadPoolExecutor(max_workers=min(16, len(all_paths))) as ex:
+            for file_rgs in ex.map(footer, all_paths):
+                rgs.extend(file_rgs)
+    total = sum(size for _mm, size in rgs)
+    if total <= _SPLIT_BYTES or any(mm is None for mm, _ in rgs):
+        return [()]
+    n_slices = min(64, -(-total // _SPLIT_BYTES))
+    rgs.sort(key=lambda t: (t[0][0], t[0][1]))
+    target = total / n_slices
+    bounds: list = []
+    acc = 0.0
+    next_cut = target
+    for (mn, _mx), size in rgs:
+        if acc >= next_cut and (not bounds or mn > bounds[-1]):
+            bounds.append(mn)
+            next_cut += target
+        acc += size
+    if not bounds:
+        return [()]
+
+    def amplification(bnds) -> float:
+        """Bytes read across all slices / component bytes: a row
+        group is re-read by every slice it straddles."""
+        read = 0
+        for (mn, mx), size in rgs:
+            k = 1 + sum(1 for b in bnds if mn < b <= mx)
+            read += k * size
+        return read / total
+
+    # engine-written fragments are range-clustered (sorted on the
+    # first dim), so row groups are narrow and each feeds ~1 slice.
+    # For unsorted data (wide row groups spanning many slices) the
+    # re-read cost can exceed the parallelism win — halve the slice
+    # count until amplification is acceptable (sorted fragments sit
+    # at ~1.0x; 1.5x tolerates boundary straddle, rejects layouts
+    # where most row groups span multiple slices), degrading to the
+    # single-task merge in the worst case.
+    while bounds and amplification(bounds) > 1.5:
+        bounds = bounds[1::2]
+    if not bounds:
+        return [()]
+    ranges = []
+    lo = None
+    for b in bounds:
+        ranges.append((lo, b))
+        lo = b
+    ranges.append((lo, None))
+    return ranges
 
 
 def _apply_deletes(tbl, conds):
