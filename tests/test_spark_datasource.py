@@ -125,7 +125,7 @@ def test_format_lww_many_overlaps_streams_each_file_once(uri, spark):
     assert group_splits, "expected the overlap component to be grouped"
     refs = []
     for s in splits:
-        refs.extend(p for paths, _d, _m in s.group for p in paths)
+        refs.extend(p for pieces, _d, _m in s.group for p, _rg in pieces)
         if s.file_path:
             refs.append(s.file_path)
     assert len(refs) == len(set(refs)) == 21  # each file planned exactly once
@@ -217,10 +217,28 @@ def test_format_lww_giant_component_auto_slices(uri, spark, monkeypatch):
     assert sliced.equals(eng)
 
 
+def _yielded_pieces(splits, md_of):
+    """(path, row group) of every row group a merge split YIELDS rows
+    from (members before ``seen_only`` only supply coordinates), one
+    entry per split that yields it, plus each split's yielded bytes."""
+    pieces, sizes = [], []
+    for s in splits:
+        size = 0
+        for member in s.group[s.seen_only:]:
+            for path, rgs in member[0]:
+                md = md_of(path)
+                for i in (range(md.num_row_groups) if rgs is None else rgs):
+                    pieces.append((path, i))
+                    size += md.row_group(i).total_byte_size
+        sizes.append(size)
+    return pieces, sizes
+
+
 def test_format_lww_unsorted_component_skips_slicing(uri, spark, monkeypatch):
-    """Wide row groups (unsorted data) would be re-read by every slice —
-    the planner must detect the amplification and fall back to fewer (or
-    one) slices instead of multiplying I/O."""
+    """Wide row groups (unsorted data) would be re-read by every range
+    slice — the planner must not range-slice them, and must not fall
+    back to one serialized task either: it cuts the members into
+    row-group spans, each row group yielded by exactly one split."""
     import glob
     import os
 
@@ -239,20 +257,82 @@ def test_format_lww_unsorted_component_skips_slicing(uri, spark, monkeypatch):
         tdb.from_pandas(uri, upd, index_dims=["k"], mode="append")
     # shuffle every fragment file and rewrite with small row groups:
     # each row group now spans ~the whole key domain
+    all_rgs = set()
     for f in mf.read_manifest(uri).fragments:
         for p in glob.glob(os.path.join(mf.fragment_path(uri, f.name),
                                         "**", "*.parquet"), recursive=True):
             tbl = pq.read_table(p)
             perm = rng.permutation(tbl.num_rows)
             pq.write_table(tbl.take(perm), p, row_group_size=500)
+            all_rgs |= {(p, i)
+                        for i in range(pq.ParquetFile(p).num_row_groups)}
 
     monkeypatch.setattr(sd, "_SPLIT_BYTES", 16 << 10)
     splits, out = _read_in_process(uri)
     group_splits = [s for s in splits if s.group]
-    assert len(group_splits) == 1 and group_splits[0].group_range == ()
+    assert len(group_splits) > 1
+    assert all(s.group_range == () for s in group_splits)
+    pieces, _ = _yielded_pieces(
+        group_splits, lambda p: pq.ParquetFile(p).metadata)
+    assert len(pieces) == len(set(pieces)) and set(pieces) == all_rgs
     # and the merge still resolves LWW correctly on the shuffled files
     eng = tdb.open(uri, spark=spark).dataframe().orderBy("k").toPandas()
     assert out.equals(eng)
+
+    # a delete that kills the newest versions resurfaces the previous
+    # ones across split boundaries, as in the engine scan
+    with tdb.open(uri, "d", spark=spark) as A:
+        A.query(cond="v >= 11.0").submit_delete()
+    _, out = _read_in_process(uri)
+    eng = tdb.open(uri, spark=spark).dataframe().orderBy("k").toPandas()
+    assert out.equals(eng)
+
+
+def test_format_lww_sink_base_plus_upsert_keeps_bounded_splits(
+        uri, spark, monkeypatch):
+    """A large base written unsorted by the format("tiledb") sink plus
+    one small overlapping upsert: the merge must keep one bounded split
+    per base span (each re-reading only the upsert's coordinates), not
+    one task holding the whole component."""
+    import pyarrow.parquet as pq
+
+    from pyspark.sql import functions as F
+
+    from tiledb_py_spark.sources import spark_datasource as sd
+
+    tdb.from_pandas(uri, pd.DataFrame({"k": np.arange(1, dtype=np.int64),
+                                       "v": np.zeros(1)}),
+                    index_dims=["k"], mode="schema_only", full_domain=True)
+    (spark.range(20_000).select(F.col("id").alias("k"),
+                                (F.col("id") * 0.5).alias("v"))
+     .repartition(6).write.format("tiledb").mode("append").save(uri))
+    upd = pd.DataFrame({"k": np.arange(100, 20_000, 97, dtype=np.int64),
+                        "v": np.full(206, -1.0)})
+    tdb.from_pandas(uri, upd, index_dims=["k"], mode="append")
+
+    monkeypatch.setattr(sd, "_SPLIT_BYTES", 16 << 10)
+    splits, out = _read_in_process(uri)
+    group_splits = [s for s in splits if s.group]
+    assert len(group_splits) >= 6
+    md = {}
+
+    def md_of(p):
+        return md.setdefault(p, pq.ParquetFile(p).metadata)
+
+    pieces, sizes = _yielded_pieces(group_splits, md_of)
+    assert len(pieces) == len(set(pieces))
+    biggest_rg = max(md_of(p).row_group(i).total_byte_size
+                     for p, i in pieces)
+    assert max(sizes) <= sd._SPLIT_BYTES + biggest_rg
+    # the only re-read input is the upsert's coordinates
+    upsert = group_splits[0].group[0][0]
+    assert all(s.group[:s.seen_only] in ((), (group_splits[0].group[0],))
+               for s in group_splits)
+    assert sum(s.seen_only for s in group_splits) == len(group_splits) - 1
+    assert len(upsert) == 1
+    eng = tdb.open(uri, spark=spark).dataframe().orderBy("k").toPandas()
+    assert out.equals(eng)
+    assert (out.set_index("k").loc[upd["k"], "v"] == -1.0).all()
 
 
 def test_format_lww_few_overlaps_keeps_per_split_anti_join(uri, spark):
@@ -276,7 +356,8 @@ def test_format_lww_few_overlaps_keeps_per_split_anti_join(uri, spark):
     group_splits = [s for s in splits if s.group]
     assert len(group_splits) == 1 and len(group_splits[0].group) == 4
     plain = [s.file_path for s in splits if s.file_path]
-    refs = [p for paths, _d, _m in group_splits[0].group for p in paths]
+    refs = [p for pieces, _d, _m in group_splits[0].group
+            for p, _rg in pieces]
     assert len(plain) == 1
     assert len(refs + plain) == len(set(refs + plain)) == 5
     out = spark.read.format("tiledb").load(uri).orderBy("k").toPandas()

@@ -72,7 +72,7 @@ def column_chunk_minmax(rg, column: str):
     footer (pyarrow ``RowGroupMetaData``), or ``None`` when the column
     is absent or carries no min/max.  Shared by the driver-side bounds
     derivation here and the LWW component slicer
-    (``sources/spark_datasource._component_ranges``) so the footer walk
+    (``sources/spark_datasource._component_splits``) so the footer walk
     cannot drift."""
     for j in range(rg.num_columns):
         cc = rg.column(j)

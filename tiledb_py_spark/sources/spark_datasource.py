@@ -21,11 +21,13 @@ Read path:
 - Delete-condition fragments are applied per batch (row-level, fragment
   timestamp-aware).  Cross-fragment last-write-wins on no-duplicates
   arrays is resolved merge-on-read, with no shuffle: every connected
-  component of MBR-overlapping fragments becomes merge splits, sliced
-  by first-dim coordinate range to ~``_SPLIT_BYTES`` each.  A merge task
-  reads each member file once, newest fragment first, and drops the
-  rows whose coordinates a newer member already holds — an exact Arrow
-  anti-join on the dim columns (see ``_read_group``).
+  component of MBR-overlapping fragments becomes merge splits of
+  ~``_SPLIT_BYTES`` each — first-dim coordinate ranges when the row
+  groups are narrow in the first dim, member row-group spans otherwise
+  (see ``_component_splits``).  A merge task streams its members newest
+  fragment first and drops the rows whose coordinates a newer member
+  holds — an exact Arrow anti-join on the dim columns (see
+  ``_read_group``).
 
 Write path (``format("tiledb")`` batch and stream sinks): at plan time
 the driver reads the manifest once, refuses missing or unknown columns
@@ -85,15 +87,19 @@ class _Split(InputPartition):
     # delete conditions visible to this fragment: tuple of expr strings
     deletes: tuple = ()
     dim_names: tuple = ()
-    # last-write-wins merge split (no-duplicates arrays): one connected
-    # component of MBR-overlapping fragments, entries (file_paths,
-    # deletes, masked) NEWEST fragment first.  The task reads every file
-    # once (see TileDBReader._read_group).  Empty for a plain split.
+    # last-write-wins merge split (no-duplicates arrays): members of one
+    # connected component of MBR-overlapping fragments, NEWEST first,
+    # entries (pieces, deletes, masked) with pieces ((path, row_groups
+    # | None = all), ...).  The task reads each piece once (see
+    # TileDBReader._read_group).  Empty for a plain split.
     group: tuple = ()
     # restrict a merge split to first-dim coordinates in [lo, hi)
     # (None = unbounded; () = the whole domain).  A coordinate lives in
     # exactly one slice, so the slices of a component merge independently.
     group_range: tuple = ()
+    # the first seen_only group members only supply coordinates that
+    # supersede the later ones; another split yields their own rows
+    seen_only: int = 0
     # schema-evolution support: the declared arrow schema (pa.Schema,
     # picklable) + per-attr fill values — fragments written before an
     # attribute existed lack its column; the task adds it back as
@@ -373,12 +379,12 @@ class TileDBReader(DataSourceReader):
         frs = sorted(frs, key=lambda f: f.timestamp_range[0])
         preds = tuple(self._preds)
         dim_names = tuple(d.name for d in schema.domain)
-        splits: list[_Split] = []
         plain = list(range(len(frs)))
+        comps: list = []  # merge components: fragment indices, newest first
         if not schema.allows_duplicates and len(frs) > 1:
             # connected components of the pairwise MBR-overlap graph
             # (union-find); every component of 2+ fragments is merged by
-            # _read_group, which reads each of its files exactly once
+            # _read_group
             mbrs = [_decode_mbr(schema, f.nonempty_domain) for f in frs]
             parent = list(range(len(frs)))
 
@@ -393,44 +399,43 @@ class TileDBReader(DataSourceReader):
                     if all(_box_overlap(mbrs[i].get(d.name), mbrs[j].get(d.name))
                            for d in schema.domain):
                         parent[find(i)] = find(j)
-            comps: dict[int, list] = {}
+            members: dict[int, list] = {}
             for i in range(len(frs)):
-                comps.setdefault(find(i), []).append(i)
-            plain = []
-            for members in comps.values():
-                if len(members) == 1:
-                    plain.extend(members)
-                    continue
-                # newest first; same-ms ties break by MANIFEST order (the
-                # list index — frs is stably ts-sorted), never the random
-                # uuid name, matching Array._scan_df's frag_order_key
-                entries = tuple(
-                    (tuple(frag_files(frs[i])), frag_deletes(frs[i]),
-                     m.masked_attrs(frs[i].schema_version))
-                    for i in sorted(
-                        members,
-                        key=lambda i: (frs[i].timestamp_range[0], i),
-                        reverse=True))
-                for rng in _component_ranges(entries, dim_names[0]):
-                    splits.append(_Split(
-                        file_path="", row_groups=(), predicates=preds,
-                        group=entries, dim_names=dim_names,
-                        group_range=rng, arrow_schema=arrow_schema,
-                        fills=fills))
+                members.setdefault(find(i), []).append(i)
+            plain = [ms[0] for ms in members.values() if len(ms) == 1]
+            # newest first; same-ms ties break by MANIFEST order (the list
+            # index — frs is stably ts-sorted), never the random uuid
+            # name, matching Array._scan_df's frag_order_key
+            comps = [sorted(ms, key=lambda i: (frs[i].timestamp_range[0], i),
+                            reverse=True)
+                     for ms in members.values() if len(ms) > 1]
 
-        # prefetch parquet footers concurrently — serial footer reads
-        # (one round-trip each on object storage) put O(#files) planning
-        # latency on the driver
+        # prefetch every planned file's parquet footer concurrently, in
+        # one pool — serial footer reads (one round-trip each on object
+        # storage) put O(#files) planning latency on the driver
         from concurrent.futures import ThreadPoolExecutor
 
-        plain_files = {i: frag_files(frs[i]) for i in plain}
-        plain_paths = [p for paths in plain_files.values() for p in paths]
+        files = {i: frag_files(f) for i, f in enumerate(frs)}
+        all_paths = [p for paths in files.values() for p in paths]
         md_map: dict = {}
-        if plain_paths:
+        if all_paths:
             with ThreadPoolExecutor(
-                    max_workers=min(16, len(plain_paths))) as ex:
-                md_map = dict(zip(plain_paths, ex.map(
-                    lambda p: pq.ParquetFile(p).metadata, plain_paths)))
+                    max_workers=min(16, len(all_paths))) as ex:
+                md_map = dict(zip(all_paths, ex.map(
+                    lambda p: pq.ParquetFile(p).metadata, all_paths)))
+        splits: list[_Split] = []
+        dim_preds = tuple(p for p in preds if p[0] in dim_names)
+        for comp in comps:
+            entries = tuple(
+                (tuple(files[i]), frag_deletes(frs[i]),
+                 m.masked_attrs(frs[i].schema_version)) for i in comp)
+            splits.extend(
+                _Split(file_path="", row_groups=(), predicates=preds,
+                       group=group, group_range=rng, seen_only=seen_only,
+                       dim_names=dim_names, arrow_schema=arrow_schema,
+                       fills=fills)
+                for group, rng, seen_only in _component_splits(
+                    entries, md_map, dim_names[0], dim_preds))
         for i in plain:
             f = frs[i]
             masked = m.masked_attrs(f.schema_version)
@@ -438,47 +443,27 @@ class TileDBReader(DataSourceReader):
             # column describe the WRONG attr — never prune on them
             prune_preds = tuple(p for p in preds if p[0] not in masked)
             fdel = frag_deletes(f)
-            for p in plain_files[i]:
-                md = md_map[p]
-                spans: list = [[]]
-                size = 0
-                for rg in range(md.num_row_groups):
-                    if not _rg_matches(md.row_group(rg), prune_preds):
-                        continue
-                    if size >= _SPLIT_BYTES:
-                        spans.append([])
-                        size = 0
-                    spans[-1].append(rg)
-                    size += md.row_group(rg).total_byte_size
-                splits.extend(
-                    _Split(file_path=p, row_groups=tuple(span),
-                           predicates=preds, deletes=fdel,
-                           dim_names=dim_names, arrow_schema=arrow_schema,
-                           fills=fills, masked=masked)
-                    for span in spans if span)
+            splits.extend(
+                _Split(file_path=p, row_groups=span, predicates=preds,
+                       deletes=fdel, dim_names=dim_names,
+                       arrow_schema=arrow_schema, fills=fills, masked=masked)
+                for p in files[i] for span in _rg_spans(md_map[p], prune_preds))
         return splits or [_Split(file_path="", row_groups=(), predicates=(),
                                  deletes=())]
 
     def read(self, split: _Split):
         import pyarrow as pa
-        import pyarrow.dataset as ds
-        import pyarrow.fs as pafs
 
         if split.group:
             yield from self._read_group(split)
             return
         if not split.file_path:
             return
-        # The split's row groups stream through a dataset fragment so the
-        # filter is evaluated with page/row-group statistics (no whole-
-        # split materialization — bounded memory regardless of split
-        # size).  Its footer, read once, also gives the file schema below.
-        if "://" in split.file_path:
-            fs, fs_path = pafs.FileSystem.from_uri(split.file_path)
-        else:
-            fs, fs_path = pafs.LocalFileSystem(), os.path.abspath(split.file_path)
-        frag = ds.ParquetFileFormat().make_fragment(
-            fs_path, filesystem=fs, row_groups=list(split.row_groups))
+        # The split's row groups stream through a dataset fragment (no
+        # whole-split materialization — bounded memory regardless of
+        # split size).  Its footer, read once, also gives the file schema
+        # below.
+        frag = _parquet_fragment(split.file_path, split.row_groups)
         # Conform the output batches to the declared schema when the
         # file (a) lacks declared columns — schema evolution, fill/null
         # them — or (b) stores the declared columns in a different
@@ -525,19 +510,26 @@ class TileDBReader(DataSourceReader):
 
     def _read_group(self, split: _Split):
         """Last-write-wins merge over one connected component of
-        MBR-overlapping fragments.  Members arrive NEWEST first; each is
-        read once, conformed to the declared schema (evolution fills,
-        drop/re-add masks, legacy narrow dim types), cleared of its
-        deleted cells, and anti-joined against the coordinates of the
-        newer members; its surviving coordinates then join that seen set
-        — so a deleted newer cell no longer hides the older one, the
-        ``Array._scan_df`` delete-then-dedup order.
+        MBR-overlapping fragments.  Members arrive NEWEST first and are
+        read one at a time, streamed batch by batch: each batch is
+        conformed to the declared schema (evolution fills, drop/re-add
+        masks, legacy narrow dim types), cleared of its deleted cells,
+        and anti-joined against the coordinates of the newer members.
+        A member's coordinates join that seen set once the whole member
+        is read — so a deleted newer cell no longer hides the older one,
+        the ``Array._scan_df`` delete-then-dedup order.  The first
+        ``split.seen_only`` members only feed the seen set: another split
+        yields their rows (see ``_component_splits``); a member read only
+        for its coordinates and without deletes reads only its dims.
 
         The anti-join is exact: an Arrow hash join on the dim columns
         alone (the attrs never enter the join, so list-typed attrs and
         ``not null`` fields pass through untouched).  Memory: the seen
-        coordinates' own bytes — one row of dim values per distinct live
-        coordinate — plus one member fragment at a time.
+        coordinates' own bytes — one row of dim values per live
+        coordinate of the newer members — plus the batches awaiting the
+        join, at most as many rows as the seen set (so each hash build
+        over the seen set is amortized over at least as many probe rows)
+        or one batch.  No member is materialized whole.
 
         Pruning before the merge uses only dim predicates and the slice's
         ``[lo, hi)`` first-dim range (row-group statistics, then rows): a
@@ -552,9 +544,9 @@ class TileDBReader(DataSourceReader):
         once, not once per older overlapping fragment."""
         import numpy as np
         import pyarrow as pa
-        import pyarrow.dataset as ds
 
         dims = list(split.dim_names)
+        dim_schema = pa.schema([split.arrow_schema.field(d) for d in dims])
         lo, hi = (tuple(split.group_range) + (None, None))[:2]
         pre = [p for p in split.predicates if p[0] in dims]
         if lo is not None:
@@ -564,105 +556,171 @@ class TileDBReader(DataSourceReader):
         pre_expr = _preds_to_expr(pre)
         out_expr = _preds_to_expr(split.predicates)
         seen = None  # dim columns of every live coordinate seen so far
-        for paths, dels, gmask in split.group:
-            if not paths:
-                continue  # a record-only member contributes nothing
-            tbl = ds.dataset(list(paths), format="parquet").to_table(
-                filter=pre_expr)
-            tbl = _conform_table(tbl, split.arrow_schema, split.fills, gmask)
-            if dels:
-                tbl = _apply_deletes(tbl, dels)
+
+        def survivors(tbls):
+            tbl = pa.concat_tables(tbls)
             if seen is not None:
+                # in the calling thread: a task is one core's work, and
+                # Acero's threaded joins, run between the batches of a
+                # live scan, aborted a few percent of processes at exit
+                # (std::terminate)
                 rows = tbl.select(dims).append_column(
                     "__row", pa.array(np.arange(tbl.num_rows)))
-                tbl = tbl.take(rows.join(seen, keys=dims,
-                                         join_type="left anti")["__row"])
-            coords = tbl.select(dims)
-            seen = coords if seen is None else pa.concat_tables([seen, coords])
+                tbl = tbl.take(rows.join(
+                    seen, keys=dims, join_type="left anti",
+                    use_threads=False)["__row"])
             if out_expr is not None:
                 tbl = tbl.filter(out_expr)
-            for b in tbl.to_batches():
-                if b.num_rows:
-                    yield b
+            return [b for b in tbl.to_batches() if b.num_rows]
+
+        for k, (pieces, dels, gmask) in enumerate(split.group):
+            emit = k >= split.seen_only
+            columns, target = ((None, split.arrow_schema) if emit or dels
+                               else (dims, dim_schema))
+            coords, pending, n = [], [], 0
+            for path, row_groups in pieces:
+                for batch in _parquet_fragment(path, row_groups).to_batches(
+                        filter=pre_expr, columns=columns):
+                    if not batch.num_rows:
+                        continue
+                    tbl = _conform_table(pa.Table.from_batches([batch]),
+                                         target, split.fills, gmask)
+                    if dels:
+                        tbl = _apply_deletes(tbl, dels)
+                    coords.append(tbl.select(dims))
+                    if emit:
+                        pending.append(tbl)
+                        n += tbl.num_rows
+                        if seen is None or n >= seen.num_rows:
+                            yield from survivors(pending)
+                            pending, n = [], 0
+            if pending:
+                yield from survivors(pending)
+            if coords:
+                seen = pa.concat_tables(
+                    ([seen] if seen is not None else []) + coords)
 
 
-def _component_ranges(entries, dim0: str):
-    """First-dim range slicing for a merge component.
+def _parquet_fragment(path: str, row_groups=None):
+    """A pyarrow dataset fragment over one parquet file, restricted to
+    ``row_groups`` (``None`` = all): its batches stream, and a filter
+    skips row groups by their statistics."""
+    import pyarrow.dataset as ds
+    import pyarrow.fs as pafs
 
-    Returns a list of ``(lo, hi)`` half-open first-dim ranges (``None``
-    = unbounded; ``[()]`` = a single whole-domain slice) sized so each
-    slice covers roughly ``_SPLIT_BYTES`` of row-group data.  Boundaries
-    are taken from row-group min values, so for fragments sorted on the
-    first dim each row group feeds ~1 slice; in the worst (unsorted)
-    case a row group is re-read once per slice it straddles — still far
-    better than one serialized mega-task.  Components under
-    ``_SPLIT_BYTES``, or with missing first-dim stats, stay one merge
-    task.  Footers are read with a thread pool: serial footer fetches
-    (one round-trip each on object storage) would put planning latency
-    proportional to the component's file count on the driver."""
-    import pyarrow.parquet as pq
-    from concurrent.futures import ThreadPoolExecutor
+    if "://" in path:
+        fs, fs_path = pafs.FileSystem.from_uri(path)
+    else:
+        fs, fs_path = pafs.LocalFileSystem(), os.path.abspath(path)
+    return ds.ParquetFileFormat().make_fragment(
+        fs_path, filesystem=fs,
+        row_groups=None if row_groups is None else list(row_groups))
 
+
+def _rg_spans(md, preds: tuple = ()) -> list:
+    """Row-group spans of one parquet file (its footer ``md``) of about
+    ``_SPLIT_BYTES`` each, over the row groups ``preds`` may match."""
+    spans: list = [[]]
+    size = 0
+    for rg in range(md.num_row_groups):
+        if not _rg_matches(md.row_group(rg), preds):
+            continue
+        if size >= _SPLIT_BYTES:
+            spans.append([])
+            size = 0
+        spans[-1].append(rg)
+        size += md.row_group(rg).total_byte_size
+    return [tuple(span) for span in spans if span]
+
+
+def _component_splits(entries, md_map, dim0: str, dim_preds: tuple):
+    """Plan one merge component as ``(group, group_range, seen_only)``
+    triples, one merge task each, of about ``_SPLIT_BYTES`` of row-group
+    data per task.  ``entries``: ``(paths, deletes, masked)`` per member,
+    newest first; ``md_map``: path -> parquet footer.  Group entries hold
+    ``(path, row_groups)`` pieces (``None`` = the whole file).
+
+    A component of at most ``_SPLIT_BYTES`` is one task.  A larger one
+    takes whichever of two plans re-reads fewer bytes:
+
+    - First-dim range slices (``_first_dim_ranges``): every slice
+      merges all members restricted to its ``[lo, hi)``; a row group is
+      read by every slice it straddles.  Cheap when the row groups are
+      narrow in the first dim (sorted fragments).
+    - Member spans: consecutive members are packed into tasks of about
+      ``_SPLIT_BYTES``, a larger member is cut into row-group spans of
+      that size, and each task first reads the coordinates of every
+      newer member (``seen_only``).  Cheap when the newer members are
+      small — a large base plus small upserts re-reads only the
+      upserts per span, whatever the row-group layout (unsorted sink
+      writes and Hilbert-ordered fragments have row groups as wide as
+      the domain, which every range slice would re-read)."""
+    whole = tuple((tuple((p, None) for p in paths), dels, masked)
+                  for paths, dels, masked in entries)
+    rgs = [[md_map[p].row_group(i) for p in paths
+            for i in range(md_map[p].num_row_groups)]
+           for paths, _dels, _masked in entries]
+    sizes = [sum(rg.total_byte_size for rg in member) for member in rgs]
+    total = sum(sizes)
+    if total <= _SPLIT_BYTES:
+        return [(whole, (), 0)]
+    spans = []
+    start = run = 0  # members [start, k) wait for one packed task
+    for k, ((paths, dels, masked), size) in enumerate(zip(entries, sizes)):
+        if start < k and run + size > _SPLIT_BYTES:
+            spans.append((whole[:k], (), start))
+            start, run = k, 0
+        if size <= _SPLIT_BYTES:
+            run += size
+            continue
+        for p in paths:
+            for span in _rg_spans(md_map[p], dim_preds):
+                spans.append((whole[:k] + ((((p, span),), dels, masked),),
+                              (), k))
+        start = k + 1
+    if start < len(entries):
+        spans.append((whole, (), start))
+    # imported only here: the operators package costs ~80 ms to import
+    # in a fresh planning worker
     from ..operators.stats_bounds import column_chunk_minmax
 
-    all_paths = [p for paths, _dels, _m in entries for p in paths]
+    ranges, range_reread = _first_dim_ranges(
+        [(column_chunk_minmax(rg, dim0), rg.total_byte_size)
+         for member in rgs for rg in member], total)
+    if ranges and range_reread <= sum(sum(sizes[:seen_only])
+                                      for _g, _r, seen_only in spans):
+        return [(whole, rng, 0) for rng in ranges]
+    return spans
 
-    def footer(p):
-        md = pq.ParquetFile(p).metadata
-        return [(column_chunk_minmax(md.row_group(i), dim0),
-                 md.row_group(i).total_byte_size)
-                for i in range(md.num_row_groups)]
 
-    rgs = []  # ((min, max) | None, bytes)
-    if all_paths:
-        with ThreadPoolExecutor(max_workers=min(16, len(all_paths))) as ex:
-            for file_rgs in ex.map(footer, all_paths):
-                rgs.extend(file_rgs)
-    total = sum(size for _mm, size in rgs)
-    if total <= _SPLIT_BYTES or any(mm is None for mm, _ in rgs):
-        return [()]
-    n_slices = min(64, -(-total // _SPLIT_BYTES))
-    rgs.sort(key=lambda t: (t[0][0], t[0][1]))
-    target = total / n_slices
+def _first_dim_ranges(rgs, total: int):
+    """``(ranges, reread)``: half-open ``(lo, hi)`` first-dim ranges
+    (``None`` = unbounded) cutting row groups ``rgs`` —
+    ``((min, max) | None, bytes)`` pairs totalling ``total`` bytes — at
+    row-group minimums into slices of about ``_SPLIT_BYTES``, and the
+    bytes read beyond ``total`` because a row group is read by every
+    slice it straddles.  ``([], 0)`` when a statistic is missing or no
+    cut exists."""
+    import bisect
+
+    if any(mm is None for mm, _size in rgs):
+        return [], 0
+    rgs = sorted(rgs, key=lambda t: t[0])
+    target = total / -(-total // _SPLIT_BYTES)
     bounds: list = []
-    acc = 0.0
-    next_cut = target
+    acc, next_cut = 0, target
     for (mn, _mx), size in rgs:
         if acc >= next_cut and (not bounds or mn > bounds[-1]):
             bounds.append(mn)
             next_cut += target
         acc += size
     if not bounds:
-        return [()]
-
-    def amplification(bnds) -> float:
-        """Bytes read across all slices / component bytes: a row
-        group is re-read by every slice it straddles."""
-        read = 0
-        for (mn, mx), size in rgs:
-            k = 1 + sum(1 for b in bnds if mn < b <= mx)
-            read += k * size
-        return read / total
-
-    # engine-written fragments are range-clustered (sorted on the
-    # first dim), so row groups are narrow and each feeds ~1 slice.
-    # For unsorted data (wide row groups spanning many slices) the
-    # re-read cost can exceed the parallelism win — halve the slice
-    # count until amplification is acceptable (sorted fragments sit
-    # at ~1.0x; 1.5x tolerates boundary straddle, rejects layouts
-    # where most row groups span multiple slices), degrading to the
-    # single-task merge in the worst case.
-    while bounds and amplification(bounds) > 1.5:
-        bounds = bounds[1::2]
-    if not bounds:
-        return [()]
-    ranges = []
-    lo = None
-    for b in bounds:
-        ranges.append((lo, b))
-        lo = b
-    ranges.append((lo, None))
-    return ranges
+        return [], 0
+    edges = [None] + bounds + [None]
+    return (list(zip(edges, edges[1:])),
+            sum(size * (bisect.bisect_right(bounds, mx)
+                        - bisect.bisect_right(bounds, mn))
+                for (mn, mx), size in rgs))
 
 
 def _apply_deletes(tbl, conds):
