@@ -515,9 +515,10 @@ class TileDBReader(DataSourceReader):
         conformed to the declared schema (evolution fills, drop/re-add
         masks, legacy narrow dim types), cleared of its deleted cells,
         and anti-joined against the coordinates of the newer members.
-        A member's coordinates join that seen set once the whole member
-        is read — so a deleted newer cell no longer hides the older one,
-        the ``Array._scan_df`` delete-then-dedup order.  The first
+        A member's surviving coordinates join that seen set once the
+        whole member is read — so a deleted newer cell no longer hides
+        the older one, the ``Array._scan_df`` delete-then-dedup order.
+        The first
         ``split.seen_only`` members only feed the seen set: another split
         yields their rows (see ``_component_splits``); a member read only
         for its coordinates and without deletes reads only its dims.
@@ -525,7 +526,7 @@ class TileDBReader(DataSourceReader):
         The anti-join is exact: an Arrow hash join on the dim columns
         alone (the attrs never enter the join, so list-typed attrs and
         ``not null`` fields pass through untouched).  Memory: the seen
-        coordinates' own bytes — one row of dim values per live
+        coordinates' own bytes — one row of dim values per distinct live
         coordinate of the newer members — plus the batches awaiting the
         join, at most as many rows as the seen set (so each hash build
         over the seen set is amortized over at least as many probe rows)
@@ -557,7 +558,10 @@ class TileDBReader(DataSourceReader):
         out_expr = _preds_to_expr(split.predicates)
         seen = None  # dim columns of every live coordinate seen so far
 
-        def survivors(tbls):
+        def merge(tbls, coords, emit):
+            """Anti-join ``tbls`` against the seen coordinates; keep the
+            survivors' coordinates in ``coords`` and, when ``emit``,
+            yield the survivors that pass the pushed predicates."""
             tbl = pa.concat_tables(tbls)
             if seen is not None:
                 # in the calling thread: a task is one core's work, and
@@ -569,9 +573,11 @@ class TileDBReader(DataSourceReader):
                 tbl = tbl.take(rows.join(
                     seen, keys=dims, join_type="left anti",
                     use_threads=False)["__row"])
-            if out_expr is not None:
-                tbl = tbl.filter(out_expr)
-            return [b for b in tbl.to_batches() if b.num_rows]
+            coords.append(tbl.select(dims))
+            if emit:
+                if out_expr is not None:
+                    tbl = tbl.filter(out_expr)
+                yield from (b for b in tbl.to_batches() if b.num_rows)
 
         for k, (pieces, dels, gmask) in enumerate(split.group):
             emit = k >= split.seen_only
@@ -587,15 +593,13 @@ class TileDBReader(DataSourceReader):
                                          target, split.fills, gmask)
                     if dels:
                         tbl = _apply_deletes(tbl, dels)
-                    coords.append(tbl.select(dims))
-                    if emit:
-                        pending.append(tbl)
-                        n += tbl.num_rows
-                        if seen is None or n >= seen.num_rows:
-                            yield from survivors(pending)
-                            pending, n = [], 0
+                    pending.append(tbl)
+                    n += tbl.num_rows
+                    if seen is None or n >= seen.num_rows:
+                        yield from merge(pending, coords, emit)
+                        pending, n = [], 0
             if pending:
-                yield from survivors(pending)
+                yield from merge(pending, coords, emit)
             if coords:
                 seen = pa.concat_tables(
                     ([seen] if seen is not None else []) + coords)
