@@ -18,3 +18,16 @@ def spark():
 @pytest.fixture()
 def uri(tmp_path):
     return str(tmp_path / "arr")
+
+
+@pytest.fixture()
+def format_keys(spark):
+    """Sorted values of one column of a ``spark.read.format("tiledb")``
+    read — the second documented read surface, for tests that check it
+    agrees with the engine's."""
+    from tiledb_py_spark.sources.spark_datasource import register
+
+    register(spark)
+    return lambda uri, col="k": sorted(
+        r[col] for r in
+        spark.read.format("tiledb").load(uri).select(col).collect())

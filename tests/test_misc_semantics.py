@@ -223,7 +223,7 @@ def test_ns_datetime_attr_qc(uri, spark):
     assert res["t"].dtype == np.dtype("datetime64[ns]")
 
 
-def test_ns_datetime_attr_delete(uri, spark):
+def test_ns_datetime_attr_delete(uri, spark, format_keys):
     """Delete with a condition on a ns attr applies in stored space."""
     ts = pd.to_datetime(["2020-01-01", "2021-06-01", "2022-03-05"])
     pdf = pd.DataFrame({"k": np.arange(3, dtype=np.int64),
@@ -233,6 +233,7 @@ def test_ns_datetime_attr_delete(uri, spark):
         A.query(cond="t < '2021-01-01'").submit_delete()
     res = tdb.open(uri, spark=spark).multi_index[:]
     assert sorted(res["k"].tolist()) == [1, 2]
+    assert format_keys(uri) == [1, 2]
 
 
 def test_coarse_unit_datetime_dim(uri, spark):

@@ -360,7 +360,7 @@ def test_delete_mode(uri, spark):
     assert sorted(out["k"].tolist()) == [0, 1, 2, 3, 4, 5, 6]
 
 
-def test_delete_null_cells_survive(uri, spark):
+def test_delete_null_cells_survive(uri, spark, format_keys):
     """TileDB QC semantics: NULL cells never match a delete condition, so
     they must SURVIVE the delete — under SQL three-valued logic the
     anti-filter would silently drop them (ADVICE r1, array.py delete)."""
@@ -374,9 +374,10 @@ def test_delete_null_cells_survive(uri, spark):
     out = tdb.open(uri, spark=spark).df[:].reset_index()
     # rows 2 and 5 match (30, 50) and die; nulls (1, 3) survive
     assert sorted(out["k"].tolist()) == [0, 1, 3, 4]
+    assert format_keys(uri) == [0, 1, 3, 4]
 
 
-def test_delete_negated_cond_null_semantics(uri, spark):
+def test_delete_negated_cond_null_semantics(uri, spark, format_keys):
     """Negation flips the leaf-level null->False: 'not (v > 10)' MATCHES
     null cells (leaf false, NOT true), so they are deleted."""
     pdf = pd.DataFrame({
@@ -388,6 +389,7 @@ def test_delete_negated_cond_null_semantics(uri, spark):
         A.query(cond="not (v > 10.0)").submit_delete()
     out = tdb.open(uri, spark=spark).df[:].reset_index()
     assert sorted(out["k"].tolist()) == [2, 4]
+    assert format_keys(uri) == [2, 4]
 
 
 def test_metadata_kv(uri, spark):

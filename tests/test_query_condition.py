@@ -1,16 +1,19 @@
 """QueryCondition compiler (P5-P10): the reference's string-expression
-language retargeted to pyspark Columns.
+language retargeted to pyspark Columns and pyarrow Expressions.
 
 Mirrors test_query_condition.py coverage: every predicate form,
-error cases, enum label translation.
+error cases, enum label translation.  Every case runs on both backends
+(``_vals``) with the same expected rows.
 """
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from tiledb_py_spark import TileDBError
-from tiledb_py_spark.functions.query_condition import compile_condition
+from tiledb_py_spark.functions.query_condition import (QueryCondition,
+                                                       compile_condition)
 
 COLS = {"a", "b", "s", "d", "flag"}
 DTYPES = {"a": np.dtype("int64"), "b": np.dtype("float64"),
@@ -18,22 +21,34 @@ DTYPES = {"a": np.dtype("int64"), "b": np.dtype("float64"),
           "flag": np.dtype("bool")}
 
 
+def _frames(spark, pdf):
+    """The same pandas rows as a Spark DataFrame and an Arrow table."""
+    return spark.createDataFrame(pdf), pa.Table.from_pandas(pdf)
+
+
 @pytest.fixture(scope="module")
 def df(spark):
-    pdf = pd.DataFrame({
+    return _frames(spark, pd.DataFrame({
         "a": [1, 2, 3, 4, 5],
         "b": [1.0, 2.5, 3.5, 4.0, 5.5],
         "s": ["x", "y", "z", "x", "y"],
         "d": pd.to_datetime(["2020-01-01", "2020-06-01", "2021-01-01",
                              "2021-06-01", "2022-01-01"]),
         "flag": [True, False, True, False, True],
-    })
-    return spark.createDataFrame(pdf)
+    }))
 
 
-def _vals(df, expr, col="a", **kw):
-    cond = compile_condition(expr, columns=COLS, dtypes=DTYPES, **kw)
-    return sorted(r[col] for r in df.filter(cond).select(col).collect())
+def _vals(frames, expr, col="a", columns=COLS, dtypes=DTYPES, **kw):
+    """Sorted ``col`` values of the rows ``expr`` selects: the Spark
+    backend (``df.filter``) and the Arrow backend (``pa.Table.filter`` on
+    the same pandas rows) must agree."""
+    sdf, tbl = frames
+    cond = compile_condition(expr, columns=columns, dtypes=dtypes, **kw)
+    got = sorted(r[col] for r in sdf.filter(cond).select(col).collect())
+    expr_arrow = QueryCondition(expr).to_arrow(columns=columns,
+                                               dtypes=dtypes, **kw)
+    assert sorted(tbl.filter(expr_arrow)[col].to_pylist()) == got, expr
+    return got
 
 
 def test_comparisons(df):
@@ -107,23 +122,15 @@ def test_malformed_raises():
 def test_enum_labels(spark):
     """Condition values matched against enum LABELS, translated to codes
     (query_condition.py:248-257)."""
-    pdf = pd.DataFrame({"c": [0, 1, 2, 0, 1]})
-    df = spark.createDataFrame(pdf)
-    enums = {"c": {"red": 0, "green": 1, "blue": 2}}
-    cond = compile_condition("c == 'green'", columns={"c"},
-                             dtypes={"c": np.dtype("int32")}, enums=enums)
-    assert df.filter(cond).count() == 2
-    cond = compile_condition("c in ['red', 'blue']", columns={"c"},
-                             dtypes={"c": np.dtype("int32")}, enums=enums)
-    assert df.filter(cond).count() == 3
+    frames = _frames(spark, pd.DataFrame({"c": [0, 1, 2, 0, 1]}))
+    kw = dict(col="c", columns={"c"}, dtypes={"c": np.dtype("int32")},
+              enums={"c": {"red": 0, "green": 1, "blue": 2}})
+    assert _vals(frames, "c == 'green'", **kw) == [1, 1]
+    assert _vals(frames, "c in ['red', 'blue']", **kw) == [0, 0, 2]
 
 
 def test_null_test(spark):
-    pdf = pd.DataFrame({"a": [1, None, 3]}, dtype="Int64")
-    df = spark.createDataFrame(pdf)
-    cond = compile_condition("a != None", columns={"a"},
-                             dtypes={"a": np.dtype("int64")})
-    assert df.filter(cond).count() == 2
-    cond = compile_condition("a == None", columns={"a"},
-                             dtypes={"a": np.dtype("int64")})
-    assert df.filter(cond).count() == 1
+    frames = _frames(spark, pd.DataFrame({"a": [1, None, 3]}, dtype="Int64"))
+    kw = dict(columns={"a"}, dtypes={"a": np.dtype("int64")})
+    assert _vals(frames, "a != None", **kw) == [1, 3]
+    assert _vals(frames, "a == None", **kw) == [None]

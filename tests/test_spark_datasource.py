@@ -104,6 +104,36 @@ def test_format_lww_after_delete_resurfaces_old(uri, spark):
     assert out["v"].tolist() == [0.0, 1.0, 2.0, 3.0, 4.0]
 
 
+@pytest.mark.parametrize("cond", [
+    "c == 'red'",  # enum attr: label -> code
+    "d < '2021-01-05'",  # datetime dim: string in the stored unit
+    "v >= val(25.0) or k in {1, 2}",  # val() wrapper, set literal
+], ids=["enum_label", "datetime_dim", "val_set_literal"])
+def test_format_delete_forms_match_engine(uri, spark, cond):
+    """Every delete form the engine accepts reads the same through
+    ``format("tiledb")`` as through ``Array.dataframe()``: both compile
+    it with the one QueryCondition compiler.  An overlapping upsert puts
+    the delete on the last-write-wins merge path."""
+    n = 30
+    pdf = pd.DataFrame({
+        "d": pd.date_range("2021-01-01", periods=n, freq="D"),
+        "k": np.arange(n, dtype=np.int64),
+        "c": pd.Categorical(np.array(["red", "green", "blue"])[np.arange(n) % 3]),
+        "v": np.arange(n) * 1.0,
+    })
+    tdb.from_pandas(uri, pdf, index_dims=["d"])
+    upsert = pdf.iloc[:6].assign(v=pdf["v"].iloc[:6] + 100.0)
+    tdb.from_pandas(uri, upsert, index_dims=["d"], mode="append")
+    with tdb.open(uri, "d", spark=spark) as A:
+        A.delete_cells(cond)
+    eng = (tdb.open(uri, spark=spark).df[:].reset_index()[["k", "v"]]
+           .sort_values("k").reset_index(drop=True))
+    fmt = (spark.read.format("tiledb").load(uri).toPandas()[["k", "v"]]
+           .sort_values("k").reset_index(drop=True))
+    assert 0 < len(eng) < n
+    assert fmt.values.tolist() == eng.values.tolist()
+
+
 def test_format_lww_many_overlaps_streams_each_file_once(uri, spark):
     """Hot-key upsert: 20 updates all overlapping the base fragment.
     Planning must route the overlap component through a merge split

@@ -39,7 +39,7 @@ from pyspark.sql import types as T
 
 from . import manifest as mf
 from .aggregation import _qcol, compute_aggregates, normalize_agg_spec, unwrap
-from .functions.query_condition import compile_condition
+from .functions.query_condition import compile_condition, schema_context
 from .indexing import (getitem_ranges_multi_index, index_as_tuple,
                        index_domain_subarray, replace_ellipsis,
                        replace_scalars_slice)
@@ -311,15 +311,6 @@ class Array:
         return tuple(out)
 
     # -- the scan ------------------------------------------------------------
-    def _attr_dtypes(self) -> dict:
-        d = {a.name: a.dtype for a in self.schema.attrs_list}
-        d.update({dm.name: dm.dtype for dm in self.schema.domain})
-        return d
-
-    def _enum_code_maps(self) -> dict:
-        return {a.name: {v: i for i, v in enumerate(self.schema.enums[a.enum_label].values)}
-                for a in self.schema.attrs_list if a.enum_label}
-
     def _fill_evolved(self, df: DataFrame, frs) -> DataFrame:
         """Schema-evolution fill: fragments written before an attr existed
         read NULL for it from parquet; TileDB semantics give such cells the
@@ -397,9 +388,7 @@ class Array:
         return out
 
     def _compile_cond(self, cond) -> Optional[Column]:
-        cols = set(self.schema.dim_names + self.schema.attr_names)
-        return compile_condition(cond, columns=cols, enums=self._enum_code_maps(),
-                                 dtypes=self._attr_dtypes())
+        return compile_condition(cond, **schema_context(self.schema))
 
     def _empty_df(self) -> DataFrame:
         return self.spark.createDataFrame([], self.schema.spark_schema())

@@ -1,5 +1,5 @@
 """QueryCondition: the reference's predicate mini-language, retargeted to
-``pyspark.sql.Column``.
+``pyspark.sql.Column`` and ``pyarrow.compute.Expression``.
 
 The reference parses a Python-syntax expression string with ``ast`` and
 lowers it to a C++ PyQueryCondition
@@ -8,9 +8,22 @@ operators, ``183-207`` comparisons incl. chained ``a < x < b``, ``208-259``
 ``in``/``not in``, ``279-281``/``413-416`` None -> null test, ``297-311``
 ``attr()``/``dim()``/``val()`` wrappers, ``313-336`` value/variable
 auto-ordering with op reversal, ``443-472`` boolean combinators, ``494-501``
-negation).  We reuse the exact same grammar but emit a Spark Column, so the
-predicate lands inside Catalyst and is pushed into the parquet scan —
-the analog of TileDB evaluating conditions during tile read.
+negation).  We reuse the exact same grammar.  One compiler (``_Compiler``)
+walks it and builds its output through a four-function backend (column,
+literal, not-null, is-null); comparisons, ``&``, ``|``, ``~`` and
+``.isin`` are spelled the same on both output types:
+
+- ``QueryCondition.to_column`` emits a Spark Column, so the predicate
+  lands inside Catalyst and is pushed into the parquet scan — the analog
+  of TileDB evaluating conditions during tile read.  ``Array`` reads,
+  delete validation, consolidation and ``cdc`` use it.
+- ``QueryCondition.to_arrow`` emits a picklable
+  ``pyarrow.compute.Expression``; the ``format("tiledb")`` reader
+  compiles each delete condition once at planning and filters Arrow
+  batches with it.
+
+``schema_context`` derives the compile context (column names, enum
+label -> code maps, dtypes) from an ArraySchema for both.
 
 Enum-label conditions (``query_condition.py:248-257``): values are matched
 against enumeration *labels*; we translate label -> integer code at compile
@@ -23,7 +36,7 @@ from __future__ import annotations
 
 import ast
 from dataclasses import dataclass
-from typing import Any, Optional
+from typing import Any, Callable, NamedTuple, Optional
 
 import numpy as np
 from pyspark.sql import Column
@@ -34,22 +47,23 @@ class TileDBError(Exception):
     pass
 
 
-def _null_is_false(c: Column, *cols: Column) -> Column:
-    """TileDB QC semantics: a comparison on a null cell is FALSE, and
-    boolean combinators (including NOT) operate on that boolean — unlike
-    SQL three-valued logic where NULL propagates and ``filter`` drops the
-    row.  Applying this at every comparison LEAF (not the top of the
-    tree) makes negation match the reference: null cells survive a delete
-    whose condition they don't match, and ``not in`` matches them
-    (reference leaf evaluation over validity buffers).
+class _Backend(NamedTuple):
+    """The four leaf builders a compiled condition needs."""
 
-    Expressed as ``cmp AND IsNotNull(col)`` rather than ``coalesce(cmp,
-    false)``: identical truth table (NULL AND false = false), but both
-    conjuncts are parquet-pushable — coalesce would block PushedFilters
-    and force full scans."""
-    for col in cols:
-        c = c & col.isNotNull()
-    return c
+    col: Callable  # column name -> column expression
+    lit: Callable  # python scalar -> literal expression
+    not_null: Callable  # expression -> "is not null" test
+    is_null: Callable  # expression -> "is null" test
+
+
+_SPARK = _Backend(F.col, F.lit, lambda c: c.isNotNull(), lambda c: c.isNull())
+
+
+def _arrow_backend() -> _Backend:
+    import pyarrow.compute as pc
+
+    return _Backend(pc.field, pc.scalar, lambda e: e.is_valid(),
+                    lambda e: e.is_null())
 
 
 @dataclass
@@ -72,9 +86,17 @@ class QueryCondition:
             raise TileDBError(f"Could not parse the given QueryCondition statement: {expression}") from e
 
     def to_column(self, columns=None, enums=None, dtypes=None) -> Column:
+        return self._compile(_SPARK, columns, enums, dtypes)
+
+    def to_arrow(self, columns=None, enums=None, dtypes=None):
+        """The same condition as a ``pyarrow.compute.Expression``
+        (``Table.filter`` / dataset ``filter=``; it pickles)."""
+        return self._compile(_arrow_backend(), columns, enums, dtypes)
+
+    def _compile(self, backend: _Backend, columns, enums, dtypes):
         ctx = _Ctx(columns=set(columns) if columns is not None else None,
                    enums=enums or {}, dtypes=dtypes or {})
-        return _Compiler(ctx).visit(self.tree.body)
+        return _Compiler(ctx, backend).visit(self.tree.body)
 
     def __repr__(self):
         return f"QueryCondition({self.expression!r})"
@@ -94,13 +116,28 @@ def compile_condition(expr: "str | QueryCondition | Column | None",
     raise TypeError(f"unsupported condition type {type(expr)!r}")
 
 
+def schema_context(schema) -> dict:
+    """An ArraySchema's compile context, as ``to_column`` / ``to_arrow`` /
+    ``compile_condition`` keyword arguments: its column names, the enum
+    label -> code map of each enumerated attr, and every column's dtype."""
+    dtypes = {a.name: a.dtype for a in schema.attrs_list}
+    dtypes.update({d.name: d.dtype for d in schema.domain})
+    return dict(
+        columns=set(schema.dim_names + schema.attr_names),
+        enums={a.name: {v: i for i, v in
+                        enumerate(schema.enums[a.enum_label].values)}
+               for a in schema.attrs_list if a.enum_label},
+        dtypes=dtypes)
+
+
 _COMPARE_REVERSE = {ast.Lt: ast.Gt, ast.LtE: ast.GtE, ast.Gt: ast.Lt,
                     ast.GtE: ast.LtE, ast.Eq: ast.Eq, ast.NotEq: ast.NotEq}
 
 
 class _Compiler(ast.NodeVisitor):
-    def __init__(self, ctx: _Ctx):
+    def __init__(self, ctx: _Ctx, backend: _Backend):
         self.ctx = ctx
+        self.b = backend
 
     # ---- entry -------------------------------------------------------------
     def visit(self, node):
@@ -109,6 +146,24 @@ class _Compiler(ast.NodeVisitor):
         if visitor is None:
             raise TileDBError(f"unsupported syntax in QueryCondition: {ast.dump(node)}")
         return visitor(node)
+
+    def _null_is_false(self, c, *cols):
+        """TileDB QC semantics: a comparison on a null cell is FALSE, and
+        boolean combinators (including NOT) operate on that boolean — unlike
+        SQL three-valued logic where NULL propagates and ``filter`` drops the
+        row.  Applying this at every comparison LEAF (not the top of the
+        tree) makes negation match the reference: null cells survive a delete
+        whose condition they don't match, and ``not in`` matches them
+        (reference leaf evaluation over validity buffers).
+
+        Expressed as ``cmp AND IsNotNull(col)`` rather than ``coalesce(cmp,
+        false)``: identical truth table (NULL AND false = false, Kleene
+        ``and`` on the Arrow side too), but both conjuncts are
+        parquet-pushable — coalesce would block PushedFilters and force
+        full scans."""
+        for col in cols:
+            c = c & self.b.not_null(col)
+        return c
 
     # ---- leaves ------------------------------------------------------------
     def _is_column_name(self, node) -> Optional[str]:
@@ -195,9 +250,9 @@ class _Compiler(ast.NodeVisitor):
         return value
 
     # ---- comparisons -------------------------------------------------------
-    def visit_Compare(self, node: ast.Compare) -> Column:
+    def visit_Compare(self, node: ast.Compare):
         # chained comparisons a < x < b -> AND of pairs (reference :183-207)
-        result: Optional[Column] = None
+        result = None
         left = node.left
         for op, right in zip(node.ops, node.comparators):
             term = self._compare_pair(left, op, right)
@@ -205,7 +260,7 @@ class _Compiler(ast.NodeVisitor):
             left = right
         return result
 
-    def _compare_pair(self, left, op, right) -> Column:
+    def _compare_pair(self, left, op, right):
         if isinstance(op, (ast.In, ast.NotIn)):
             col_name = self._is_column_name(left)
             if col_name is None:
@@ -214,7 +269,8 @@ class _Compiler(ast.NodeVisitor):
             if not isinstance(values, list):
                 raise TileDBError("in/not in requires a list of values")
             values = [self._cast_value(col_name, self._map_enum(col_name, v)) for v in values]
-            c = _null_is_false(F.col(col_name).isin(values), F.col(col_name))
+            c = self._null_is_false(self.b.col(col_name).isin(values),
+                                    self.b.col(col_name))
             return ~c if isinstance(op, ast.NotIn) else c
 
         lname = self._is_column_name(left)
@@ -222,8 +278,9 @@ class _Compiler(ast.NodeVisitor):
 
         if lname is not None and rname is not None:
             # column-vs-column comparison (beyond reference; allowed here)
-            return _null_is_false(self._apply_op(F.col(lname), op, F.col(rname)),
-                                  F.col(lname), F.col(rname))
+            return self._null_is_false(
+                self._apply_op(self.b.col(lname), op, self.b.col(rname)),
+                self.b.col(lname), self.b.col(rname))
         if lname is None and rname is None:
             raise TileDBError("comparison must reference at least one attribute or dimension")
         if lname is None:
@@ -235,16 +292,17 @@ class _Compiler(ast.NodeVisitor):
         # None comparison -> null test (reference :279-281, 413-416)
         if value is None:
             if isinstance(op, ast.Eq):
-                return F.col(lname).isNull()
+                return self.b.is_null(self.b.col(lname))
             if isinstance(op, ast.NotEq):
-                return F.col(lname).isNotNull()
+                return self.b.not_null(self.b.col(lname))
             raise TileDBError("None only supports == / != (null test)")
         value = self._cast_value(lname, self._map_enum(lname, value))
-        return _null_is_false(self._apply_op(F.col(lname), op, F.lit(value)),
-                              F.col(lname))
+        return self._null_is_false(
+            self._apply_op(self.b.col(lname), op, self.b.lit(value)),
+            self.b.col(lname))
 
     @staticmethod
-    def _apply_op(lhs: Column, op, rhs) -> Column:
+    def _apply_op(lhs, op, rhs):
         if isinstance(op, ast.Eq):
             return lhs == rhs
         if isinstance(op, ast.NotEq):
@@ -260,14 +318,14 @@ class _Compiler(ast.NodeVisitor):
         raise TileDBError(f"operator {type(op).__name__} not supported")
 
     # ---- boolean algebra ---------------------------------------------------
-    def visit_BoolOp(self, node: ast.BoolOp) -> Column:
+    def visit_BoolOp(self, node: ast.BoolOp):
         terms = [self.visit(v) for v in node.values]
         out = terms[0]
         for t in terms[1:]:
             out = (out & t) if isinstance(node.op, ast.And) else (out | t)
         return out
 
-    def visit_BinOp(self, node: ast.BinOp) -> Column:
+    def visit_BinOp(self, node: ast.BinOp):
         # & and | used as boolean combinators (reference :131-141)
         if isinstance(node.op, ast.BitAnd):
             return self.visit(node.left) & self.visit(node.right)
@@ -275,12 +333,12 @@ class _Compiler(ast.NodeVisitor):
             return self.visit(node.left) | self.visit(node.right)
         raise TileDBError(f"binary operator {type(node.op).__name__} not supported")
 
-    def visit_UnaryOp(self, node: ast.UnaryOp) -> Column:
+    def visit_UnaryOp(self, node: ast.UnaryOp):
         if isinstance(node.op, (ast.Not, ast.Invert)):
             return ~self.visit(node.operand)
         raise TileDBError(f"unary operator {type(node.op).__name__} not supported")
 
-    def visit_Name(self, node: ast.Name) -> Column:
+    def visit_Name(self, node: ast.Name):
         # bare boolean attribute, e.g. "flag and x > 2" — checked
         # against the known columns like comparison Names are (a typo
         # must raise here, not as a Spark AnalysisException later)
@@ -289,15 +347,15 @@ class _Compiler(ast.NodeVisitor):
             raise TileDBError(
                 f"unknown attribute or dimension {node.id!r} "
                 "in QueryCondition")
-        return _null_is_false(F.col(node.id), F.col(node.id))
+        return self._null_is_false(self.b.col(node.id), self.b.col(node.id))
 
-    def visit_Call(self, node: ast.Call) -> Column:
+    def visit_Call(self, node: ast.Call):
         name = self._is_column_name(node)
         if name is not None:
-            return _null_is_false(F.col(name), F.col(name))
+            return self._null_is_false(self.b.col(name), self.b.col(name))
         raise TileDBError(f"unsupported call in QueryCondition: {ast.dump(node)}")
 
-    def visit_Constant(self, node: ast.Constant) -> Column:
+    def visit_Constant(self, node: ast.Constant):
         if isinstance(node.value, bool):
-            return F.lit(node.value)
+            return self.b.lit(node.value)
         raise TileDBError("bare constants are not a condition")

@@ -18,8 +18,13 @@ Read path:
   trivially safe; the win is skipping whole fragments/row-groups).
 - ``read()``: Arrow record batches straight from pyarrow with a row-level
   filter expression — columnar end-to-end.
-- Delete-condition fragments are applied per batch (row-level, fragment
-  timestamp-aware).  Cross-fragment last-write-wins on no-duplicates
+- Delete conditions are compiled once, at planning, by the engine's
+  QueryCondition compiler (``QueryCondition.to_arrow``: the grammar,
+  enum-label codes, stored-unit datetime casts and null semantics of
+  ``Array`` reads) into picklable Arrow expressions; a task drops the
+  cells they match from each batch of the fragments written at or before
+  the delete.  A condition the compiler refuses fails the planning with
+  its ``TileDBError``.  Cross-fragment last-write-wins on no-duplicates
   arrays is resolved merge-on-read, with no shuffle: every connected
   component of MBR-overlapping fragments becomes merge splits of
   ~``_SPLIT_BYTES`` each — first-dim coordinate ranges when the row
@@ -84,7 +89,8 @@ class _Split(InputPartition):
     row_groups: tuple
     # simple conjunctive predicates for pyarrow: (col, op, value)
     predicates: tuple = ()
-    # delete conditions visible to this fragment: tuple of expr strings
+    # delete conditions visible to this fragment, compiled at planning:
+    # pyarrow Expressions (QueryCondition.to_arrow) true on deleted cells
     deletes: tuple = ()
     dim_names: tuple = ()
     # last-write-wins merge split (no-duplicates arrays): members of one
@@ -132,6 +138,28 @@ def _preds_to_expr(predicates, available=None):
                  "<=": pc.field(col) <= val}[op]
         expr = f if expr is None else expr & f
     return expr
+
+
+def _fills(schema, names) -> tuple:
+    """``(name, stored fill scalar)`` of every non-nullable attr in
+    ``names`` with a fill: fragments written before schema evolution
+    added such an attr read it as that value, not NULL (the native
+    path's ``Array._fill_evolved``), on the batch and stream reads
+    alike."""
+    from ..datatypes import stored_scalar
+
+    return tuple((a.name, stored_scalar(a.fill, a.dtype))
+                 for a in schema.attrs_list
+                 if a.fill is not None and not a.nullable and a.name in names)
+
+
+def _fragment_files(uri: str, frag) -> list:
+    """A fragment's parquet files, in a stable order."""
+    from ..manifest import fragment_path
+
+    return [os.path.join(root, fn)
+            for root, _dirs, files in os.walk(fragment_path(uri, frag))
+            for fn in sorted(files) if fn.endswith(".parquet")]
 
 
 def _conform_table(tbl, target, fills=(), masked=()):
@@ -344,33 +372,28 @@ class TileDBReader(DataSourceReader):
         if ranges:
             frs = [f for f in frs
                    if mbr_intersects(ranges, _decode_mbr(schema, f.nonempty_domain))]
-        deletes = m.delete_fragments_visible(self.timestamp)
+        deletes = [d for d in m.delete_fragments_visible(self.timestamp)
+                   if d.delete_condition]
         from pyspark.sql.pandas.types import to_arrow_schema
-
-        from ..datatypes import stored_scalar
 
         arrow_schema = to_arrow_schema(
             self.spark_schema if self.spark_schema is not None
             else schema.spark_schema())
-        fills = tuple(
-            (a.name, stored_scalar(a.fill, a.dtype))
-            for a in schema.attrs_list
-            if a.fill is not None and not a.nullable
-            and a.name in {f.name for f in arrow_schema})
+        fills = _fills(schema, arrow_schema.names)
+        compiled: dict = {}  # each distinct condition, compiled once
+        if deletes:
+            from ..functions.query_condition import (QueryCondition,
+                                                     schema_context)
 
-        def frag_files(f) -> list:
-            out = []
-            for root, _dirs, files in os.walk(mf.fragment_path(self.uri, f)):
-                for fn in sorted(files):
-                    if fn.endswith(".parquet"):
-                        out.append(os.path.join(root, fn))
-            return out
+            ctx = schema_context(schema)
+            compiled = {c: QueryCondition(c).to_arrow(**ctx)
+                        for c in {d.delete_condition for d in deletes}}
 
         def frag_deletes(f) -> tuple:
             # deletes apply to cells written at or before the delete's ts
             return tuple(
-                d.delete_condition for d in deletes
-                if d.timestamp_range[0] >= f.timestamp_range[0] and d.delete_condition)
+                compiled[d.delete_condition] for d in deletes
+                if d.timestamp_range[0] >= f.timestamp_range[0])
 
         # commit order for last-write-wins (same total order as
         # Array._scan_df: timestamp, manifest order for same-ms ties —
@@ -415,7 +438,7 @@ class TileDBReader(DataSourceReader):
         # storage) put O(#files) planning latency on the driver
         from concurrent.futures import ThreadPoolExecutor
 
-        files = {i: frag_files(f) for i, f in enumerate(frs)}
+        files = {i: _fragment_files(self.uri, f) for i, f in enumerate(frs)}
         all_paths = [p for paths in files.values() for p in paths]
         md_map: dict = {}
         if all_paths:
@@ -452,61 +475,7 @@ class TileDBReader(DataSourceReader):
                                  deletes=())]
 
     def read(self, split: _Split):
-        import pyarrow as pa
-
-        if split.group:
-            yield from self._read_group(split)
-            return
-        if not split.file_path:
-            return
-        # The split's row groups stream through a dataset fragment (no
-        # whole-split materialization — bounded memory regardless of
-        # split size).  Its footer, read once, also gives the file schema
-        # below.
-        frag = _parquet_fragment(split.file_path, split.row_groups)
-        # Conform the output batches to the declared schema when the
-        # file (a) lacks declared columns — schema evolution, fill/null
-        # them — or (b) stores the declared columns in a different
-        # ORDER or at different TYPES (legacy fragments written by the
-        # pre-r14 datasource sink persisted DataFrame column order).
-        # Spark maps yielded batches to the declared schema by
-        # POSITION, so passing such a file through raw would silently
-        # transpose same-typed columns or crash on the first type
-        # mismatch.  Predicates on missing columns are skipped (Spark
-        # re-applies every pushed filter anyway).
-        pf_schema = frag.physical_schema
-        file_cols = set(pf_schema.names)
-        if split.arrow_schema is not None:
-            want = [(f.name, f.type) for f in split.arrow_schema]
-            dset = {f.name for f in split.arrow_schema}
-            got = [(f.name, f.type) for f in pf_schema if f.name in dset]
-            conform = (got != want or len(pf_schema.names) != len(want)
-                       or bool(split.masked))
-        else:
-            conform = False
-        # a masked column must not see predicates either: its stored
-        # bytes are the dropped predecessor's — filtering on them drops
-        # rows Spark cannot restore (unlike skipped predicates, which
-        # Spark re-applies post-scan)
-        expr = _preds_to_expr(
-            split.predicates,
-            available=(file_cols - set(split.masked)) if conform else None)
-
-        for batch in frag.to_batches(filter=expr):
-            if batch.num_rows == 0:
-                continue
-            if conform or split.deletes:
-                tbl = pa.Table.from_batches([batch])
-                if conform:
-                    tbl = _conform_table(tbl, split.arrow_schema,
-                                         split.fills, split.masked)
-                if split.deletes:
-                    tbl = _apply_deletes(tbl, split.deletes)
-                for b in tbl.to_batches():
-                    if b.num_rows:
-                        yield b
-            else:
-                yield batch
+        return self._read_group(split) if split.group else _read_plain(split)
 
     def _read_group(self, split: _Split):
         """Last-write-wins merge over one connected component of
@@ -603,6 +572,64 @@ class TileDBReader(DataSourceReader):
             if coords:
                 seen = pa.concat_tables(
                     ([seen] if seen is not None else []) + coords)
+
+
+def _read_plain(split: _Split):
+    """Arrow batches of one plain split (``row_groups`` ``None`` = the whole
+    file): pushed predicates, conformed to the declared schema, delete
+    conditions applied.  Also the stream source's per-file read."""
+    import pyarrow as pa
+
+    if not split.file_path:
+        return
+    # The split's row groups stream through a dataset fragment (no
+    # whole-split materialization — bounded memory regardless of
+    # split size).  Its footer, read once, also gives the file schema
+    # below.
+    frag = _parquet_fragment(split.file_path, split.row_groups)
+    # Conform the output batches to the declared schema when the
+    # file (a) lacks declared columns — schema evolution, fill/null
+    # them — or (b) stores the declared columns in a different
+    # ORDER or at different TYPES (legacy fragments written by the
+    # pre-r14 datasource sink persisted DataFrame column order).
+    # Spark maps yielded batches to the declared schema by
+    # POSITION, so passing such a file through raw would silently
+    # transpose same-typed columns or crash on the first type
+    # mismatch.  Predicates on missing columns are skipped (Spark
+    # re-applies every pushed filter anyway).
+    pf_schema = frag.physical_schema
+    file_cols = set(pf_schema.names)
+    if split.arrow_schema is not None:
+        want = [(f.name, f.type) for f in split.arrow_schema]
+        dset = {f.name for f in split.arrow_schema}
+        got = [(f.name, f.type) for f in pf_schema if f.name in dset]
+        conform = (got != want or len(pf_schema.names) != len(want)
+                   or bool(split.masked))
+    else:
+        conform = False
+    # a masked column must not see predicates either: its stored
+    # bytes are the dropped predecessor's — filtering on them drops
+    # rows Spark cannot restore (unlike skipped predicates, which
+    # Spark re-applies post-scan)
+    expr = _preds_to_expr(
+        split.predicates,
+        available=(file_cols - set(split.masked)) if conform else None)
+
+    for batch in frag.to_batches(filter=expr):
+        if batch.num_rows == 0:
+            continue
+        if conform or split.deletes:
+            tbl = pa.Table.from_batches([batch])
+            if conform:
+                tbl = _conform_table(tbl, split.arrow_schema,
+                                     split.fills, split.masked)
+            if split.deletes:
+                tbl = _apply_deletes(tbl, split.deletes)
+            for b in tbl.to_batches():
+                if b.num_rows:
+                    yield b
+        else:
+            yield batch
 
 
 def _parquet_fragment(path: str, row_groups=None):
@@ -728,119 +755,13 @@ def _first_dim_ranges(rgs, total: int):
 
 
 def _apply_deletes(tbl, conds):
-    """Anti-apply delete conditions to an Arrow table — fully columnar
-    (pyarrow.compute mask + ``Table.filter``; the format-read path never
-    round-trips through pandas)."""
-    import pyarrow.compute as pc
-
+    """Drop the cells of an Arrow table that compiled delete conditions
+    (``_Split.deletes``) match — fully columnar; the leaf rule of the
+    compiler keeps the mask null-free, so a null cell survives a delete
+    whose comparison it cannot satisfy."""
     for cond in conds:
-        tbl = tbl.filter(pc.invert(_eval_delete(tbl, cond)))
+        tbl = tbl.filter(~cond)
     return tbl
-
-
-def _eval_delete(tbl, cond: str):
-    """Evaluate a QueryCondition string against an Arrow table, returning
-    an all-valid boolean mask (executor-side delete application; same
-    comparison grammar as the Spark compiler, pyarrow.compute backend).
-
-    TileDB QC leaf semantics (functions/query_condition._null_is_false):
-    a comparison on a null cell is FALSE, and NOT/!= negate that boolean —
-    Arrow comparisons propagate null instead, so every leaf is
-    ``fill_null(cmp, False) AND is_valid(col)``, keeping the mask
-    null-free before combinators.  Raises rather than silently skipping a
-    delete it cannot evaluate."""
-    import ast
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def col_name(node):
-        if isinstance(node, ast.Name):
-            return node.id
-        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
-                and node.func.id in ("attr", "dim", "val") and len(node.args) == 1
-                and isinstance(node.args[0], ast.Constant)
-                and isinstance(node.args[0].value, str)):
-            return node.args[0].value
-        return None
-
-    def const(node):
-        if isinstance(node, ast.Constant):
-            return node.value
-        if isinstance(node, (ast.List, ast.Tuple)):
-            return [const(e) for e in node.elts]
-        if isinstance(node, ast.UnaryOp) and isinstance(node.op, ast.USub):
-            return -const(node.operand)
-        raise NotImplementedError(f"unsupported literal {ast.dump(node)}")
-
-    _OPS = {ast.Eq: pc.equal, ast.NotEq: pc.not_equal, ast.Lt: pc.less,
-            ast.LtE: pc.less_equal, ast.Gt: pc.greater, ast.GtE: pc.greater_equal}
-    _REV = {pc.less: pc.greater, pc.less_equal: pc.greater_equal,
-            pc.greater: pc.less, pc.greater_equal: pc.less_equal,
-            pc.equal: pc.equal, pc.not_equal: pc.not_equal}
-
-    def leaf(raw, *cols):
-        m = pc.fill_null(raw, False)
-        for c in cols:
-            m = pc.and_(m, pc.is_valid(c))
-        return m
-
-    def pair(left, op, right):
-        lname, rname = col_name(left), col_name(right)
-        if isinstance(op, (ast.In, ast.NotIn)):
-            if lname is None:
-                raise NotImplementedError("in/not in needs a column lhs")
-            col = tbl[lname]
-            m = leaf(pc.is_in(col, value_set=pa.array(const(right))), col)
-            return pc.invert(m) if isinstance(op, ast.NotIn) else m
-        fn = _OPS.get(type(op))
-        if fn is None:
-            raise NotImplementedError(f"operator {type(op).__name__}")
-        if lname is None and rname is not None:
-            lname, right, fn = rname, left, _REV[fn]
-            rname = None
-        if lname is None:
-            raise NotImplementedError("comparison must reference a column")
-        lcol = tbl[lname]
-        if rname is not None:
-            rcol = tbl[rname]
-            return leaf(fn(lcol, rcol), lcol, rcol)
-        v = const(right)
-        if v is None:  # null test
-            return pc.is_null(lcol) if fn is pc.equal else pc.is_valid(lcol)
-        return leaf(fn(lcol, pa.scalar(v)), lcol)
-
-    def ev(node):
-        if isinstance(node, ast.Compare):
-            out, left = None, node.left
-            for op, right in zip(node.ops, node.comparators):
-                t = pair(left, op, right)
-                out = t if out is None else pc.and_(out, t)
-                left = right
-            return out
-        if isinstance(node, ast.BoolOp):
-            f = pc.and_ if isinstance(node.op, ast.And) else pc.or_
-            terms = [ev(v) for v in node.values]
-            out = terms[0]
-            for t in terms[1:]:
-                out = f(out, t)
-            return out
-        if isinstance(node, ast.BinOp) and isinstance(node.op, (ast.BitAnd, ast.BitOr)):
-            f = pc.and_ if isinstance(node.op, ast.BitAnd) else pc.or_
-            return f(ev(node.left), ev(node.right))
-        if isinstance(node, ast.UnaryOp) and isinstance(node.op, (ast.Not, ast.Invert)):
-            return pc.invert(ev(node.operand))
-        name = col_name(node)
-        if name is not None:  # bare boolean attribute
-            return pc.fill_null(tbl[name], False)
-        raise NotImplementedError(f"unsupported node {ast.dump(node)}")
-
-    try:
-        return ev(ast.parse(cond, mode="eval").body)
-    except Exception as e:
-        raise NotImplementedError(
-            f"delete condition {cond!r} not evaluable in the tiledb format "
-            f"reader ({e}); read via tiledb_py_spark.open()") from e
 
 
 def _rg_matches(rg_md, preds: tuple) -> bool:
@@ -1068,15 +989,9 @@ def register(spark) -> None:
 
 @dataclass
 class _FragStreamSplit(InputPartition):
-    file_paths: tuple
-    columns: tuple
-    # (name, stored fill scalar) for non-nullable evolved attrs — same
-    # tuple TileDBReader.partitions computes, so stream and batch reads
-    # of a pre-evolution fragment agree (fill value, not NULL)
-    fills: tuple = ()
-    # drop/re-add attr mask (Manifest.masked_attrs) — same semantics as
-    # _Split.masked
-    masked: tuple = ()
+    """One fragment of a stream micro-batch: a plain ``_Split`` per file
+    (whole file, no predicates or deletes), read in order."""
+    splits: tuple
 
 
 class TileDBStreamReader(DataSourceStreamReader):
@@ -1096,15 +1011,15 @@ class TileDBStreamReader(DataSourceStreamReader):
     runs (pause consolidate/vacuum — they rewrite the list).
 
     Scale shape: ``partitions(start, end)`` plans ONE InputPartition
-    per new fragment parquet file on the driver; executors read Arrow
-    record batches straight from the files — the batch reader's
-    columnar path without the pruning machinery (a fragment IS the
-    pruning unit here)."""
+    per new fragment on the driver; executors stream each of its files
+    batch by batch through the batch reader's plain-split read
+    (``_read_plain``: schema-evolution fills and drop/re-add masks
+    included) without the pruning machinery (a fragment IS the pruning
+    unit here)."""
 
     def __init__(self, uri: str, schema: StructType):
         self.uri = uri
         self.schema = schema
-        self.columns = tuple(f.name for f in schema.fields)
 
     def initialOffset(self) -> dict:
         return {"i": 0, "frag": None}
@@ -1129,10 +1044,9 @@ class TileDBStreamReader(DataSourceStreamReader):
         pass
 
     def partitions(self, start: dict, end: dict):
-        import glob
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         from .. import manifest as mf
-        from ..manifest import fragment_path
 
         man = mf.read_manifest(self.uri)
         # bound BOTH offsets: a vacuum that shrank the list below a
@@ -1168,41 +1082,18 @@ class TileDBStreamReader(DataSourceStreamReader):
                     "(consolidate/vacuum) while a stream was running. "
                     "Restart the stream with a fresh checkpoint (the "
                     "feed is append-only by contract).")
-        frags = man.fragments[start["i"]:end["i"]]
-        # same fill tuple as TileDBReader.partitions: non-nullable attrs
-        # added by schema evolution must stream back as their FILL value
-        # on pre-evolution fragments, matching the batch datasource and
-        # the native scan (_fill_evolved) — nulls-only conforming made
-        # stream and batch reads of the same array disagree (ADVICE r13)
-        from ..datatypes import stored_scalar
-        fills = tuple(
-            (a.name, stored_scalar(a.fill, a.dtype))
-            for a in man.schema.attrs_list
-            if a.fill is not None and not a.nullable
-            and a.name in self.columns)
+        target = to_arrow_schema(self.schema)
+        fills = _fills(man.schema, target.names)
         splits = []
-        for fr in frags:
-            files = tuple(sorted(glob.glob(
-                os.path.join(fragment_path(self.uri, fr), "*.parquet"))))
+        for fr in man.fragments[start["i"]:end["i"]]:
+            masked = man.masked_attrs(fr.schema_version)
+            files = _fragment_files(self.uri, fr)
             if files:
-                splits.append(_FragStreamSplit(
-                    files, self.columns, fills,
-                    man.masked_attrs(fr.schema_version)))
+                splits.append(_FragStreamSplit(tuple(
+                    _Split(file_path=p, row_groups=None, arrow_schema=target,
+                           fills=fills, masked=masked) for p in files)))
         return splits
 
     def read(self, partition: _FragStreamSplit):
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(self.schema)
-        for p in partition.file_paths:
-            # pre-evolution fragments lack added columns: request only
-            # what the file has, then conform (null-fill + cast) — a
-            # blind columns= read raises 'Field not found' and kills
-            # the stream on replay
-            have = set(pq.ParquetFile(p).schema_arrow.names) \
-                - set(partition.masked)
-            want = [c for c in partition.columns if c in have]
-            tbl = _conform_table(pq.read_table(p, columns=want), target,
-                                 partition.fills)
-            yield from tbl.to_batches()
+        for split in partition.splits:
+            yield from _read_plain(split)
