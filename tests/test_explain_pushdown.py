@@ -2,6 +2,8 @@
 the actual physical plan — pushed filters, pruned read schema, broadcast
 joins for enum-decode-sized tables."""
 
+import itertools
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -663,3 +665,207 @@ def test_new_fragment_does_not_recompile_the_read(uri, spark):
     n1, compiled = read()
     assert n1 >= n0
     assert compiled <= 4, compiled
+
+
+_job_groups = itertools.count()
+
+
+def _jobs(spark, fn):
+    """(result, Spark jobs ``fn`` ran), counted inside a fresh job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _shuffles(df) -> list:
+    """Partitioning of every shuffle exchange in ``df``'s plan (the
+    initial adaptive plan, also once ``df`` has run)."""
+    import re
+    s = df._jdf.queryExecution().executedPlan().toString()
+    s = s.split("== Initial Plan ==")[-1]
+    return re.findall(r"(?<!Broadcast)Exchange (\w+)", s)
+
+
+def _layout_partitions(fn):
+    """(result, ``py.layout_partitions`` recorded while ``fn`` ran)."""
+    import json
+
+    tdb.stats_enable()
+    tdb.stats_reset()
+    try:
+        out = fn()
+        dump = json.loads(tdb.stats_dump(print_out=False, json=True))
+    finally:
+        tdb.stats_disable()
+        tdb.stats_reset()
+    return out, dump.get("py.layout_partitions", 0)
+
+
+def _spy_execute(A):
+    """Record every DataFrame ``A._execute`` returns."""
+    seen = []
+    real = A._execute
+
+    def spy(plan):
+        df = real(plan)
+        seen.append(df)
+        return df
+    A._execute = spy
+    return seen
+
+
+def test_ordered_merge_read_is_one_single_partition_exchange(uri, spark):
+    """A 'C' read of a small overlapping array merges last-write-wins on
+    the exchange that lays out its cell order: one ``Exchange
+    SinglePartition``, no sampling job, no hash exchange — 2 Spark jobs
+    per read, for a slice and for a condition + point read alike."""
+    want = _overlapping(uri, n_frags=3)
+    A = tdb.open(uri, spark=spark)
+    seen = _spy_execute(A)
+    (got, jobs), n = _layout_partitions(lambda: _jobs(spark, lambda: A.df[100:800]))
+    assert _shuffles(seen[-1]) == ["SinglePartition"], _shuffles(seen[-1])
+    assert jobs == 2 and n == 1
+    got = got.reset_index()
+    assert list(got["k"]) == sorted(k for k in want if 100 <= k <= 800)
+    assert all(got["a"] == [want[k] for k in got["k"]])
+
+    pts = [3, 60, 400, 700, 999]
+    (got, jobs), n = _layout_partitions(lambda: _jobs(
+        spark, lambda: A.query(cond="a >= 100.0").df[pts]))
+    assert _shuffles(seen[-1]) == ["SinglePartition"], _shuffles(seen[-1])
+    assert jobs == 2 and n == 1
+    got = got.reset_index()
+    assert list(got["k"]) == [k for k in pts if want.get(k, 0) >= 100.0]
+
+
+def test_consolidate_merges_on_the_write_layout(uri, spark):
+    """Consolidating a small overlapping array with a live delete runs
+    the merge on the write's range exchange: 2 Spark jobs (the
+    exchange's map stage and the write), one part file."""
+    import glob
+
+    want = _overlapping(uri, n_frags=3)
+    (_, jobs), n = _layout_partitions(
+        lambda: _jobs(spark, lambda: tdb.consolidate(uri, spark=spark)))
+    assert jobs == 2 and n == 1
+    A = tdb.open(uri, spark=spark)
+    (frag,) = A._manifest.live_fragments(A.timestamp)
+    assert len(glob.glob(f"{uri}/__fragments/{frag.name}/*.parquet")) == 1
+    got = A.df[:].reset_index()
+    assert list(got["k"]) == sorted(want)
+    assert all(got["a"] == [want[k] for k in got["k"]])
+
+
+def test_consolidate_writes_merged_rows_in_cell_order(uri, spark):
+    """The merge's aggregate emits rows in hash-table order; the
+    consolidated fragment is still sorted on the dims, because the
+    layout sorts after the merge and the write keeps that layout."""
+    import glob
+    import time
+
+    import pyarrow.parquet as pq
+
+    for i, k in enumerate([np.arange(500, 1000), np.arange(0, 700, 2)]):
+        tdb.from_pandas(uri, pd.DataFrame({"k": k.astype(np.int64),
+                                           "a": k * 1.0 + i}),
+                        index_dims=["k"], mode="append" if i else "ingest",
+                        full_domain=True)
+        time.sleep(0.003)
+    tdb.consolidate(uri, spark=spark)
+    A = tdb.open(uri, spark=spark)
+    (frag,) = A._manifest.live_fragments(A.timestamp)
+    (f,) = glob.glob(f"{uri}/__fragments/{frag.name}/*.parquet")
+    t = pq.read_table(f).to_pandas()
+    want = sorted(set(range(500, 1000)) | set(range(0, 700, 2)))
+    assert list(t["k"]) == want
+    assert list(t["a"]) == [k + 1.0 if k < 700 and k % 2 == 0 else k * 1.0
+                            for k in want]
+
+
+def test_small_from_spark_append_writes_one_file(uri, spark):
+    """A 5,000-row ``from_spark`` append sizes its range layout by bytes:
+    one part file, no sampling job — 2 Spark jobs."""
+    import glob
+
+    tdb.from_pandas(uri, pd.DataFrame({"k": np.arange(10, dtype=np.int64),
+                                       "a": np.arange(10) * 1.0}),
+                    index_dims=["k"], full_domain=True)
+    sdf = spark.createDataFrame(pd.DataFrame(
+        {"k": np.arange(5000, 0, -1, dtype=np.int64),
+         "a": np.arange(5000) * 1.0}))
+    (_, jobs), n = _layout_partitions(
+        lambda: _jobs(spark, lambda: tdb.from_spark(uri, sdf, mode="append")))
+    assert jobs == 2 and n == 1
+    A = tdb.open(uri, spark=spark)
+    frag = max(A._manifest.live_fragments(A.timestamp),
+               key=lambda f: f.timestamp_range[0])
+    files = glob.glob(f"{uri}/__fragments/{frag.name}/*.parquet")
+    assert len(files) == 1
+    import pyarrow.parquet as pq
+    k = pq.read_table(files[0], columns=["k"]).column("k").to_pylist()
+    assert k == sorted(k) and len(k) == 5000
+
+
+def test_dense_multi_index_cells_have_no_exchange_below_fill_join(
+        uri, spark, monkeypatch):
+    """The written cells of a dense ``multi_index`` feed the fill join,
+    which is sorted after the join: they are read unordered, so no
+    layout exchange sits below the join (Catalyst drops a Sort there,
+    not a repartition)."""
+    import tiledb_py_spark.array as array_mod
+
+    dom = tdb.Domain(tdb.Dim(name="k", domain=(0, 99), tile=100,
+                             dtype=np.int64))
+    schema = tdb.ArraySchema(domain=dom, sparse=False,
+                             attrs=[tdb.Attr(name="v", dtype=np.float64,
+                                             fill=-1.0)])
+    tdb.Array.create(uri, schema)
+    with tdb.open(uri, "w", spark=spark) as A:
+        A[10:60] = {"v": np.arange(50) * 1.0}
+    joined = []
+    real = array_mod.dense_fill_join
+
+    def spy(*a, **kw):
+        joined.append(real(*a, **kw))
+        return joined[-1]
+    monkeypatch.setattr(array_mod, "dense_fill_join", spy)
+    with tdb.open(uri, spark=spark) as A:
+        got = A.multi_index[[slice(5, 20), slice(55, 70)]]
+    s = joined[-1]._jdf.queryExecution().executedPlan().toString()
+    # the cells are the broadcast (last printed) side of the join
+    cells_side = s.split("BroadcastExchange", 1)[1]
+    assert "Exchange" not in cells_side, s
+    want = [float(k - 10) if 10 <= k < 60 else -1.0
+            for k in [*range(5, 21), *range(55, 71)]]
+    assert list(got["v"]) == want
+
+
+def test_second_dim_ordered_merge_read_plans_one_exchange(uri, spark):
+    """A 2-D 'C' read projecting only the second dim orders by it: the
+    merge groups by both dims on the range exchange of that one dim, so
+    the read plans one exchange where the parent planned a hash and a
+    range exchange."""
+    import time
+
+    rng = np.random.default_rng(5)
+    want = {}
+    for i in range(3):
+        xy = rng.choice(400, 150, replace=False)
+        x, y = (xy // 20).astype(np.int64), (xy % 20).astype(np.int64)
+        want.update({(int(a), int(b)): 10.0 * i + a for a, b in zip(x, y)})
+        tdb.from_pandas(uri, pd.DataFrame({"x": x, "y": y, "a": 10.0 * i + x}),
+                        index_dims=["x", "y"], mode="append" if i else "ingest",
+                        full_domain=True)
+        time.sleep(0.003)
+    A = tdb.open(uri, spark=spark)
+    df = A.query(dims=["y"], attrs=["a"]).submit()
+    assert _shuffles(df) == ["SinglePartition"], _shuffles(df)
+    rows = [(r.y, r.a) for r in df.collect()]
+    assert [y for y, _ in rows] == sorted(y for _, y in want)
+    assert sorted(rows) == sorted((y, a) for (_, y), a in want.items())

@@ -50,7 +50,8 @@ from .plans import DimRanges, QueryPlan
 from .plans.range_ir import mbr_intersects
 from .schema import ArraySchema
 from .session import get_spark
-from .sources.fragment_writer import write_fragment_pandas, write_fragment_spark
+from .sources.fragment_writer import (range_layout, write_fragment_pandas,
+                                      write_fragment_spark)
 
 _ORDER_MAP = {"C": "row-major", "F": "col-major", "G": "global", "U": "unordered"}
 
@@ -403,7 +404,8 @@ class Array:
     def _scan_df(self, dim_ranges: Optional[Sequence[DimRanges]] = None,
                  keep_frag_ts: bool = False,
                  fragments: Optional[set] = None,
-                 max_delete_ts: Optional[int] = None) -> DataFrame:
+                 max_delete_ts: Optional[int] = None,
+                 layout: Sequence[str] = ()) -> DataFrame:
         """Fragment-pruned scan with deletes + duplicate resolution: ONE
         parquet scan whatever the fragment count.  Each row's LWW order
         comes from its file path via a map literal (by reference in
@@ -417,7 +419,16 @@ class Array:
         LATER delete is never materialized into a product stamped
         earlier (which would corrupt post-write/pre-delete timestamped
         opens; the un-materialized delete stays live and anti-applies
-        on read instead)."""
+        on read instead).
+
+        ``layout`` (dim names) lays the rows out by ranges of those
+        keys through :func:`range_layout`: range-partitioned, sorted
+        within each partition.  The last-write-wins merge then runs on
+        that one exchange — range partitioning on any subset of the
+        dims clusters the ``groupBy(dims)`` — instead of its own hash
+        exchange, and an ``orderBy(*layout)`` above plans no exchange.
+        Empty (the default) keeps the hash-partitioned merge, for
+        readers that discard order."""
         m = self._manifest
         frs = m.live_fragments(self.timestamp)
         if fragments is not None:
@@ -464,6 +475,7 @@ class Array:
             matches = F.coalesce(cond, F.lit(False))
             df = df.filter(~(matches & (F.col("__frag_ts") < F.lit(cutoff))))
 
+        merge = None
         if need_dedup:
             # last-write-wins on duplicate coordinates (array_schema.py:210-218
             # for sparse; overlapping dense fragments behave the same way):
@@ -472,14 +484,16 @@ class Array:
             attrs = [F.expr(f"max_by(`{a}`, __frag_ts)").alias(a)
                      for a in self.schema.attr_names]
             if attrs:
-                df = df.groupBy(*dims).agg(*attrs)
+                merge = lambda d: d.groupBy(*dims).agg(*attrs)
             else:
                 # dimension-only arrays (coordinate sets, e.g. a dedup
                 # fingerprint state): LWW degenerates to distinct coords
-                df = df.select(*dims).dropDuplicates(list(dims))
+                merge = lambda d: d.select(*dims).dropDuplicates(list(dims))
         elif not keep_frag_ts:
             df = df.drop("__frag_ts")
-        return df
+        if layout:
+            return range_layout(df, layout, merge)
+        return merge(df) if merge is not None else df
 
     def read_subarray(self, subarray) -> "OrderedDict":
         """Explicit-Subarray read (S14, reference ``dense_array.py:779-896``
@@ -568,7 +582,17 @@ class Array:
 
         record("py.queries_planned")
         plan.dim_ranges = self._stored_ranges(plan.dim_ranges)
-        df = self._scan_df(plan.dim_ranges, keep_frag_ts=(plan.order == "G"))
+        dims = list(plan.dims) if plan.dims is not None else self.schema.dim_names
+        order_keys = []
+        if plan.order in ("C", "F"):
+            order_keys = [c for c in self.schema.dim_names if c in dims]
+            if plan.order == "F":
+                order_keys.reverse()
+        # an ordered read is laid out by its sort keys at the scan, so
+        # the orderBy below plans no exchange of its own; with a limit,
+        # orderBy + limit is a top-k and needs no layout
+        df = self._scan_df(plan.dim_ranges, keep_frag_ts=(plan.order == "G"),
+                           layout=order_keys if plan.limit is None else ())
         big_points = [dr for dr in plan.dim_ranges
                       if not dr.intervals
                       and len(dr.points) > self._POINTS_JOIN_THRESHOLD]
@@ -586,7 +610,6 @@ class Array:
             df = df.filter(pred)
         if plan.cond is not None:
             df = df.filter(plan.cond)
-        dims = list(plan.dims) if plan.dims is not None else self.schema.dim_names
         attrs = list(plan.attrs) if plan.attrs is not None else (
             [self.view_attr] if self.view_attr else self.schema.attr_names)
         # backtick-quoted projection: a bare 'a.b' string would be
@@ -603,12 +626,8 @@ class Array:
                 df = df.limit(plan.limit)
             return df
         df = df.select(*proj_cols)
-        if plan.order == "C":
-            df = df.orderBy(*[c for c in self.schema.dim_names if c in dims]) \
-                if dims else df
-        elif plan.order == "F":
-            df = df.orderBy(*[c for c in reversed(self.schema.dim_names) if c in dims]) \
-                if dims else df
+        if order_keys:
+            df = df.orderBy(*order_keys)
         if plan.limit is not None:
             df = df.limit(plan.limit)
         return df
@@ -1452,7 +1471,13 @@ class Query:
     def submit(self, selection=slice(None)) -> DataFrame:
         """Spark-native: the query as a DataFrame (no materialization).
         On a mode-'d' array this submits the delete instead (reference
-        submit-routing at ``core.cc:1474-1479``)."""
+        submit-routing at ``core.cc:1474-1479``).
+
+        A 'C'/'F' query is laid out by range at the scan (see
+        ``Array._scan_df``).  Catalyst drops the final sort under a
+        downstream aggregate but keeps that range exchange, so a caller
+        that discards the order should ask for ``order="U"``: it gets the
+        hash-partitioned merge and no range sampling."""
         if self.array.mode == "d":
             return self.submit_delete()
         ranges, _d, _s = self.array.subarray_to_ranges(selection)
@@ -1597,6 +1622,9 @@ class MultiRangeIndexer:
         schema = arr.schema
         plan = self.query._plan(ranges)
         plan.dims = schema.dim_names  # the fill join needs every coord
+        # unordered: Catalyst drops a Sort below the join but would keep
+        # the layout exchange; the join result is ordered below
+        plan.order = "U"
         cells = arr._execute(plan)
         dims = list(schema.dim_names)
         attr_names = [a for a in (plan.attrs if plan.attrs is not None

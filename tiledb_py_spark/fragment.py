@@ -6,13 +6,16 @@ Reference: ``tiledb/fragment.py:13-270`` (FragmentInfo/FragmentInfoList),
 (consolidate/vacuum helpers), ``array.py:625-659`` (delete_fragments),
 ``consolidation_plan.py:9`` (ConsolidationPlan).
 
-Spark rebuild: consolidation = one Spark job that reads the live
-fragments (with last-write-wins dedup + delete application already folded
-in by the Array scan), rewrites them range-clustered as a single fragment,
-and commits a manifest version that swaps the old fragment list for the
-new one.  Vacuum then GCs unreferenced fragment directories.  At 100 TB
-this is the standard compaction pattern: the rewrite is a distributed
-shuffle-free pass when fragments are already range-partitioned.
+Spark rebuild: consolidation reads the live fragments through the Array
+scan (deletes applied, last-write-wins merged) laid out by ranges of the
+dims, writes that layout as a single fragment, and commits a manifest
+version that swaps the old fragment list for the new one.  The merge and
+the write's cell-order layout share ONE range exchange, sized by the
+estimated bytes (``range_layout``): a small array is one
+``Exchange SinglePartition`` and two Spark jobs (the exchange's map
+stage and the write), with no sampling job; above
+``spark.sql.files.maxPartitionBytes`` the range partitioner adds its
+sampling job.  Vacuum then GCs unreferenced fragment directories.
 """
 
 from __future__ import annotations
@@ -259,6 +262,11 @@ def consolidate(uri: str, timestamp=None, spark=None,
 
     arr = Array.load_typed(uri, timestamp=timestamp, spark=spark)
     m = arr._manifest
+    # the keys write_fragment_spark lays sparse row/col-major fragments
+    # out by: the scan's merge runs on that layout's exchange and the
+    # write keeps it; Hilbert and dense fragments are laid out as before
+    layout = (arr.schema.dim_names if arr.schema.sparse
+              and arr.schema.cell_order != "hilbert" else [])
     if fragment_uris is not None:
         names = {os.path.basename(os.path.normpath(u)) for u in fragment_uris}
         folded = [f for f in m.live_fragments(arr.timestamp)
@@ -268,13 +276,14 @@ def consolidate(uri: str, timestamp=None, spark=None,
         ts_end = max(f.timestamp_range[1] for f in folded)
         # dedup within subset; deletes up to ts_end applied (later
         # deletes stay live — see docstring)
-        df = arr._scan_df(fragments=names, max_delete_ts=ts_end)
+        df = arr._scan_df(fragments=names, max_delete_ts=ts_end,
+                          layout=layout)
     else:
         folded = (m.live_fragments(arr.timestamp)
                   + m.delete_fragments_visible(arr.timestamp))
         if not folded:
             return uri
-        df = arr._scan_df()  # deletes + dedup folded in
+        df = arr._scan_df(layout=layout)  # deletes + dedup folded in
         ts_end = max(f.timestamp_range[1] for f in folded)
     folded_names = {f.name for f in folded}
 
@@ -288,7 +297,7 @@ def consolidate(uri: str, timestamp=None, spark=None,
                 f.superseded_by = rec.name
 
     write_fragment_spark(uri, arr.schema, df, timestamp=ts_end,
-                         on_commit=_supersede)
+                         sort_within=not layout, on_commit=_supersede)
     return uri
 
 

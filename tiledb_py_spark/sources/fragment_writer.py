@@ -251,24 +251,60 @@ def write_fragment_pandas(uri: str, schema: ArraySchema, pdf,
     return publish_fragment(uri, schema, name, ts)
 
 
+def layout_partitions(df) -> int:
+    """Partition count of a range layout of ``df``: one partition per
+    ``spark.sql.files.maxPartitionBytes`` of Catalyst's size estimate,
+    between 1 and ``defaultParallelism``.  An unknown estimate
+    (``Long.MaxValue``) gives ``defaultParallelism``."""
+    from ..stats import record
+
+    spark = df.sparkSession
+    cap = max(spark.sparkContext.defaultParallelism, 1)
+    est = int(str(df._jdf.queryExecution().optimizedPlan().stats()
+                  .sizeInBytes()))
+    per = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    n = min(max(-(-est // max(per, 1)), 1), cap)
+    record("py.layout_partitions", n)
+    return n
+
+
+def range_layout(df, keys, merge=None):
+    """``df`` laid out by ranges of ``keys``: range-partitioned into
+    :func:`layout_partitions` partitions, then sorted within each.  One
+    exchange; at one partition it is ``Exchange SinglePartition`` and
+    Spark runs no sampling job.  ``merge`` (DataFrame -> DataFrame), if
+    given, runs between the exchange and the sort: an aggregate grouped
+    by any superset of ``keys`` is already clustered and plans no
+    exchange of its own.  An ``orderBy`` on ``keys`` above the result
+    plans none either."""
+    df = df.repartitionByRange(layout_partitions(df), *keys)
+    if merge is not None:
+        df = merge(df)
+    return df.sortWithinPartitions(*keys)
+
+
 def write_fragment_spark(uri: str, schema: ArraySchema, df,
                          timestamp: Optional[int] = None,
                          sort_within: bool = True,
                          on_commit=None) -> FragmentRecord:
     """Cluster-scale fragment write from a Spark DataFrame.
 
-    ``repartitionByRange`` on the dim columns + ``sortWithinPartitions``
-    gives globally range-clustered parquet files whose footer stats make
-    both Spark row-group pruning and our manifest MBR pruning exact —
-    the 'global order write' of the reference (``dense_array.py:655-663``)
-    expressed as a Spark shuffle.  ``on_commit``: see
-    :func:`publish_fragment`."""
+    :func:`range_layout` on the dim columns gives globally
+    range-clustered parquet files whose footer stats make both Spark
+    row-group pruning and our manifest MBR pruning exact — the 'global
+    order write' of the reference (``dense_array.py:655-663``) expressed
+    as one Spark exchange.  The part-file count follows the input's
+    estimated bytes (one file per ``spark.sql.files.maxPartitionBytes``),
+    capped at ``defaultParallelism``: a small append writes one file and
+    runs no sampling job.  Hilbert arrays range-partition on the curve
+    key into the same count.  ``sort_within=False`` writes ``df`` as laid
+    out (``consolidate`` passes rows its scan already laid out by the
+    dims).  ``on_commit``: see :func:`publish_fragment`."""
     check_write_columns(schema, df.columns)
     ts = timestamp if timestamp is not None else now_ms()
     name = new_fragment_name(ts)
     df = df.select(*(schema.dim_names + schema.attr_names))
     if sort_within and schema.sparse and schema.dim_names:
-        n = max(df.sparkSession.sparkContext.defaultParallelism, 1)
         if schema.cell_order == "hilbert":
             # Arrow-batched Hilbert key; range-partition on the key so the
             # whole fragment is globally curve-ordered
@@ -286,13 +322,13 @@ def write_fragment_spark(uri: str, schema: ArraySchema, df,
                 pdf = pd.DataFrame({d: s for d, s in zip(dim_names, dims)})
                 return pd.Series(hilbert_key_for_schema(pdf, schema_ref).astype("int64"))
 
+            n = layout_partitions(df)
             df = (df.withColumn("__hkey", _hkey(*[F.col(c) for c in dim_names]))
                     .repartitionByRange(n, "__hkey")
                     .sortWithinPartitions("__hkey")
                     .drop("__hkey"))
         else:
-            df = df.repartitionByRange(n, *schema.dim_names) \
-                   .sortWithinPartitions(*schema.dim_names)
+            df = range_layout(df, schema.dim_names)
     (df.write.mode("overwrite").option("compression", _schema_codec(schema))
        .parquet(fragment_path(uri, name)))
     return publish_fragment(uri, schema, name, ts, on_commit)
